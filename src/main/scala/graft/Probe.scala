@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerJobEnd}
 
 /** Optimization-round measurement harness (guide §1): for each named
@@ -21,15 +20,7 @@ object Probe {
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 3) args(3).toInt else 1
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .withExtensions(new graft.plans.GraftExtensions()(_))
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").map(_.trim)
       .filter(_.nonEmpty).foreach { kv =>

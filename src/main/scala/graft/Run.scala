@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Human-facing pipeline CLI — the `dbt run && dbt test && dbt source
   * freshness` equivalent in one shot:
   *
@@ -54,15 +52,11 @@ object Run {
         case a if a.startsWith("--docs-warehouse=") =>
           new pipeline.ParquetSink(a.stripPrefix("--docs-warehouse="))
       }
-      val b = SparkSession.builder()
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
       // respect an externally-configured master (spark-submit --master
       // sets the spark.master system property); default local[2] only
       // when none is — docs generation is planning-only either way
-      if (!sys.props.contains("spark.master")) b.master("local[2]")
+      val b = Session.builder(2)
+      sys.props.get("spark.master").foreach(b.master)
       val s = b.getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       try {
@@ -96,13 +90,7 @@ object Run {
     val warehouse = if (positional.length > 1) positional(1)
       else java.nio.file.Files.createTempDirectory("graft_warehouse").toString
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val sinkDesc = if (catalogMode) "catalog (bronze/silver/gold databases)" else warehouse

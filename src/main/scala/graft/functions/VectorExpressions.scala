@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -173,28 +172,6 @@ case class VecDotInt(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): VecDotInt =
     copy(left = newLeft, right = newRight)
-}
-
-object VectorFunctions {
-  /** Register `vec_dot` in the session's function registry so it is usable
-    * from `expr(...)`/SQL. Idempotent. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => VecDot(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "vec_dot_int", exprs => VecDotInt(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs(0)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "str_hamming", exprs => StrHamming(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sign_bits", exprs => SignBits(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_fps", exprs => WinnowFps(exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "bpe_split", exprs => BpeSplit(exprs(0), exprs(1)), "built-in")
-  }
 }
 
 /** BPE merge-table application (`bpe_split(word, merges)`): the learned

@@ -334,43 +334,25 @@ object Stage {
     b.result()
   }
 
-  /** Pins marked as intentional cross-query CACHES via [[retain]] —
-    * excluded from [[livePins]]. */
-  private val retained =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** Declare a pinned frame's blocks an INTENTIONAL session-lifetime
-    * cache (a memoized dictionary served to later queries) and return
-    * it. The pin ledger's contract is "after a query's terminal action,
-    * every pin is unpinned, lazily referenced by the returned frame, or
-    * retained" — a memo whose blocks outlive the query that built it is
-    * legitimate only when the owner says so HERE, where the ownership is
-    * visible in code review, instead of an allowlist inside the check. */
-  def retain(df: DataFrame): DataFrame = {
-    rddIdsOf(df).foreach(id => retained.add(id))
-    df
-  }
-
   /** Ledgered pins whose blocks are STILL persisted, minus every pin any
-    * `except` frame's plan lazily references and minus [[retain]]ed
-    * caches — after a driver query's terminal action, this must be
-    * empty: a surviving entry is exactly the round-12 leak class (a dead
-    * pin parked in executor storage, taxing every later query in the
-    * JVM). Returns rddId → creation site so the failing assertion names
-    * the operator that leaked. Requires [[LedgerKey]] to have been
-    * `true` when the pins were created; otherwise trivially empty. */
+    * `except` frame's plan lazily references — after a driver query's
+    * terminal action, this must be empty: a surviving entry is exactly
+    * the round-12 leak class (a dead pin parked in executor storage,
+    * taxing every later query in the JVM). Returns rddId → creation
+    * site so the failing assertion names the operator that leaked.
+    * Requires [[LedgerKey]] to have been `true` when the pins were
+    * created; otherwise trivially empty. */
   def livePins(spark: SparkSession,
       except: Seq[DataFrame] = Seq.empty): Map[Int, String] = {
     val keep = except.flatMap(rddIdsOf).toSet
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     import scala.jdk.CollectionConverters._
     ledger.asScala.toMap.filter { case (id, _) =>
-      persisted.contains(id) && !keep.contains(id) && !retained.contains(id)
+      persisted.contains(id) && !keep.contains(id)
     }
   }
 
-  /** Drop every ledger entry — test isolation between ledgered runs.
-    * [[retain]] markers survive: the caches they mark do too. */
+  /** Drop every ledger entry — test isolation between ledgered runs. */
   def ledgerReset(): Unit = ledger.clear()
 
   /** The DataFrame's parquet stage location when (and only when) the
@@ -426,16 +408,15 @@ object Stage {
     * needs ('checkpoint block not found'). A derived frame here is a
     * caller bug; root-only matching makes it a no-op instead of a
     * delayed crash. */
-  /** Release EVERY (non-[[retain]]ed) pinned block the frame's plan
-    * lazily references — for callers that have fully MATERIALIZED a
-    * derived frame (a further pin, a collect) and no longer need the
-    * inputs: e.g. connectedComponents pins the pair list, after which
-    * the LSH band pin feeding it is dead. Only call when nothing else
-    * still reads the referenced pins. */
+  /** Release EVERY pinned block the frame's plan lazily references —
+    * for callers that have fully MATERIALIZED a derived frame (a further
+    * pin, a collect) and no longer need the inputs: e.g. dedupClusters'
+    * connectedComponents pins the pair list, after which the LSH band
+    * pin feeding it is dead. Only call when nothing else still reads the
+    * referenced pins — never on a frame a caller handed in. */
   def unpinAll(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD
-          if !retained.contains(l.rdd.id) =>
+      case l: org.apache.spark.sql.execution.LogicalRDD =>
         ledger.remove(l.rdd.id)
         l.rdd.unpersist(blocking = false); ()
       case _ => ()
@@ -451,7 +432,6 @@ object Stage {
     strip(df.queryExecution.analyzed) match {
       case l: org.apache.spark.sql.execution.LogicalRDD =>
         ledger.remove(l.rdd.id)
-        retained.remove(l.rdd.id)
         l.rdd.unpersist(blocking = false); ()
       case _ => ()
     }

@@ -93,7 +93,6 @@ object AnnIdentity {
     * and it IS covered, via normedBatch's plan and the value
     * fingerprints). */
   private def shapes(spark: SparkSession) = {
-    graft.functions.VectorFunctions.register(spark)
     val raw = emptyOf(spark, "vec_id BIGINT, embedding ARRAY<FLOAT>")
       .withColumn("vec", col("embedding"))
     val base = Similarity.normedBatch(raw)

@@ -87,15 +87,9 @@ object Bpe {
     trainCache.getOrElseUpdate(
       (spark, IvfIndex.fingerprint(spark, dir, "documents.parquet"),
         numMerges),
-      {
-        // the memoized dictionary lazily reads the training loop's pin,
-        // and [[merges]] returns a frame built from the LIST alone — so
-        // the pin legitimately outlives queries that never read the
-        // frame half of the memo. Declare the ownership to the pin
-        // ledger instead of leaving it indistinguishable from a leak.
-        val (ms, dict) = trainLoopUncached(spark, dir, numMerges)
-        (ms, graft.model.Stage.retain(dict))
-      })
+      // the memoized dictionary is a driver-local LocalRelation built
+      // from the loop's collected vocabulary — no pinned blocks to own
+      trainLoopUncached(spark, dir, numMerges))
 
   /** DRIVER-SIDE LOOP, BOUNDED BY [[VocabCap]]: greedy BPE is inherently
     * sequential — merge i+1's pair statistics depend on merge i having
@@ -246,7 +240,6 @@ object Bpe {
     // equivalence is property-pinned in OpsSpec); the SQL form ran the
     // regex engine per character and reallocated the padded string 64
     // times per token — the whole cost of this row at the 100x probe
-    graft.functions.VectorFunctions.register(spark)
     val enc = ms.map { case (_, a, b, m, _) => s"$a $b $m" }.mkString(";")
     require(enc.matches("[a-z</>; ]*"),
       s"merge symbols must stay SQL-literal-safe: $enc")

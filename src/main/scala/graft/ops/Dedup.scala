@@ -229,7 +229,6 @@ object Dedup {
   /** SimHash near-dup candidates: 4 bands of 16 bits; pairs sharing a band
     * compared by full Hamming distance <= maxHamming. */
   def simhash(spark: SparkSession, dir: String, maxHamming: Int = 16): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val sigs = distinctDocs(spark, dir)
       .withColumn("sig", expr("simhash64(split(text, ' '))"))
       .select("doc_id", "sig")
@@ -470,9 +469,6 @@ object Dedup {
     // checkpoint makes both directions (and the initial labels) two cheap
     // scans of one materialized table instead of two LSH executions
     val ab = ckpt(pairs.toDF("doc_a", "doc_b"))
-    // the pair list is materialized; any pins its subplan read (the LSH
-    // band table) are dead from here
-    graft.model.Stage.unpinAll(pairs)
     // Measured adaptive gate (the RangeRank.WindowBytesKey discipline):
     // a near-dup pair graph is DUPLICATE-volume-sized, and below the
     // threshold the O(log d) distributed loop is pure constant factor —
@@ -569,8 +565,14 @@ object Dedup {
     * turning pairwise dedup output into actionable per-document drop
     * lists. The DuckDB oracle computes the same components by recursive
     * CTE (min reachable id), so engine and oracle agree exactly. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
-    connectedComponents(spark, minhashLsh(spark, dir).select("doc_a", "doc_b"))
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+    val pairs = minhashLsh(spark, dir).select("doc_a", "doc_b")
+    val cc = connectedComponents(spark, pairs)
+    // the pair list was materialized inside; the pins its subplan read
+    // (the LSH band table) are ours and dead from here
+    graft.model.Stage.unpinAll(pairs)
+    cc
+  }
 
   def dedupClustersOracle: String =
     s"""WITH RECURSIVE pairs AS (
@@ -612,17 +614,19 @@ object Dedup {
     * per run. */
   def dedupPagerank(spark: SparkSession, dir: String,
       iters: Int = PagerankIters,
-      damping: Double = PagerankDamping): DataFrame =
-    pagerankFrom(minhashLsh(spark, dir).select("doc_a", "doc_b"),
-      iters, damping)
+      damping: Double = PagerankDamping): DataFrame = {
+    val pairs = minhashLsh(spark, dir).select("doc_a", "doc_b")
+    val pr = pagerankFrom(pairs, iters, damping)
+    // pair list materialized inside — the LSH band pins are dead
+    graft.model.Stage.unpinAll(pairs)
+    pr
+  }
 
   /** [[dedupPagerank]] over an explicit undirected pair list. */
   private[graft] def pagerankFrom(pairs: DataFrame,
       iters: Int = PagerankIters,
       damping: Double = PagerankDamping): DataFrame = {
     val ab = graft.model.Stage.pin(pairs.toDF("doc_a", "doc_b"))
-    // pair list materialized — upstream pins (the LSH band table) are dead
-    graft.model.Stage.unpinAll(pairs)
     val edges = ab.union(ab.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
     val deg = graft.model.Stage.pin(

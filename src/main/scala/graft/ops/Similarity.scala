@@ -25,7 +25,6 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   def embeddings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     // `vec` is the raw float array: VecDot/SignBits accept it natively and
     // widen per element inside their primitive loops (float→double is
     // exact, so every downstream double is bit-unchanged). The previous
@@ -559,7 +558,6 @@ object Similarity {
   /** `(vec_id, vec, nrm)` from a raw `(vec_id, embedding)` batch — the
     * norm pass a streaming ingest runs per micro-batch. */
   private[graft] def normedBatch(batch: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(batch.sparkSession)
     batch.withColumn("vec", col("embedding"))
       .withColumn("nrm", expr(normExpr))
       .select("vec_id", "vec", "nrm")
@@ -901,7 +899,6 @@ object Similarity {
   def annMmrTopK(spark: SparkSession, dir: String, k: Int = MmrK,
       nCand: Int = MmrCandidates, lam: Double = MmrLambda): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val cand = graft.model.Stage.pin(annIvfTopK(spark, dir, nCand))
     val v = withNorm(spark, dir)
     val a = cand.select(col("query_id"), col("neighbor_id").as("id_a"))
@@ -1269,7 +1266,6 @@ object Similarity {
     * documented there. */
   def semDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.35): DataFrame = {
-    graft.functions.VectorFunctions.register(spark)
     val lists = IvfIndex.lists(spark, dir)
     val a = lists.select(col("centroid_id"), col("vec_id").as("keeper_id"),
       col("vec").as("a_vec"), col("nrm").as("na"))
@@ -1403,7 +1399,6 @@ object Similarity {
   def annInt8TopK(spark: SparkSession, dir: String, k: Int = 5,
       codes: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     // served from the materialized code table (built once per data
     // fingerprint) — the whole query, both sides, touches only codes
     val codeTab = codes.getOrElse(IvfIndex.int8Codes(spark, dir))
@@ -2268,7 +2263,6 @@ object Similarity {
     * nothing by construction. */
   def prototypePrune(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorFunctions.register(spark)
     val lists = IvfIndex.lists(spark, dir)
     val cents = IvfIndex.centroids(spark, dir)
     val w = Window.partitionBy("centroid_id")

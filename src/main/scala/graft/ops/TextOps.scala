@@ -559,7 +559,6 @@ object TextOps {
     * interpreted — one sf0.1 bench task measured >8 min of CPU in that
     * predicate. */
   private[ops] def withFingerprints(docs: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(docs.sparkSession)
     // serial gram hashing measured 12 s for dedup_winnow at sf0.1 before
     // the fan-out (one row group = one task)
     spread(docs)

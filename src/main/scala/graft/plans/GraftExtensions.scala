@@ -3,14 +3,15 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{SignBits, SimHash64, StrHamming, VecDot}
+import graft.functions.{BpeSplit, SignBits, SimHash64, StrHamming, VecDot,
+  VecDotInt, WinnowFps}
 
-/** SparkSessionExtensions entry point: makes the engine's native functions
-  * available to ANY session created with
-  * `--conf spark.sql.extensions=graft.plans.GraftExtensions` — the
-  * deployment path for a cluster where users reach the engine through
-  * plain `spark.sql(...)` and should not need to call
-  * `VectorFunctions.register` programmatically.
+/** SparkSessionExtensions entry point and the ONE registration path of the
+  * engine's seven native functions: [[graft.Session.builder]] (and the
+  * Bench/Verify sessions) apply it in code, and a cluster session gets the
+  * same surface from
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. Operators
+  * never register functions on the caller's session themselves.
   *
   * Also injects [[RangeJoinRewrite]], the engine's one optimizer rule:
   * Catalyst plans a pure range-containment join as
@@ -39,5 +40,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("sign_bits"),
       new ExpressionInfo(classOf[SignBits].getName, "sign_bits"),
       exprs => SignBits(exprs(0), exprs(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("vec_dot_int"),
+      new ExpressionInfo(classOf[VecDotInt].getName, "vec_dot_int"),
+      exprs => VecDotInt(exprs(0), exprs(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("winnow_fps"),
+      new ExpressionInfo(classOf[WinnowFps].getName, "winnow_fps"),
+      exprs => WinnowFps(exprs(0), exprs(1), exprs(2))))
+    ext.injectFunction((
+      new FunctionIdentifier("bpe_split"),
+      new ExpressionInfo(classOf[BpeSplit].getName, "bpe_split"),
+      exprs => BpeSplit(exprs(0), exprs(1))))
   }
 }

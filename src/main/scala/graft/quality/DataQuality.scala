@@ -169,20 +169,14 @@ object DataQuality {
       // all at 100× (dq_summary 71→155 s); the parquet stage keeps the
       // one-evaluation semantics AND per-branch column pruning
       val pin = graft.model.Stage.pinColumnar _
-      val goldPin: DataFrame => DataFrame =
-        if (spark.conf.getOption("spark.graft.dq.pingold").contains("true"))
-          pin
-        else identity
       // the silver trio is the dominant dq cost, and three dq rows per
       // suite each used to re-derive + re-pin it: serve it from the
       // build-once fingerprint-keyed stage instead ([[SilverStage]] —
       // same bottom-up one-evaluation structure, built once per corpus);
       // spark.graft.dq.silverstage=false restores the per-call pins
-      val staged: Map[String, DataFrame] =
-        if (SilverStage.enabled(spark)) SilverStage.tables(spark, dir)
-        else Map.empty
       val (sc, so, sp) =
-        if (staged.nonEmpty) {
+        if (SilverStage.enabled(spark)) {
+          val staged = SilverStage.tables(spark, dir)
           (staged("silver_customers"), staged("silver_orders"),
             staged("silver_payments"))
         } else {
@@ -206,19 +200,13 @@ object DataQuality {
         "silver_customers" -> sc,
         "silver_orders" -> so,
         "silver_payments" -> sp,
-        // gold: served from the build-once stage when goldstage is on
-        // (SilverStage — gold is dim-sized at rest but fact-sized to
-        // derive, so the lazy form re-paid the derivation inside every
-        // dq row); otherwise LAZY over the pinned/staged silvers (each
-        // gold table is read by only 1–2 branches — the pre-round-14
-        // adjudication against PER-CALL pins, kept as the fallback and
-        // A/B lever). spark.graft.dq.pingold=true pins the lazy form.
-        "gold_customer_summary" -> staged.getOrElse("gold_customer_summary",
-          goldPin(graft.gold.Gold.customerSummaryFrom(sc, so, sp))),
-        "gold_order_metrics" -> staged.getOrElse("gold_order_metrics",
-          goldPin(graft.gold.Gold.orderMetricsFrom(so))),
-        "gold_revenue_analysis" -> staged.getOrElse("gold_revenue_analysis",
-          goldPin(graft.gold.Gold.revenueAnalysisFrom(so, sp))))
+        // gold: LAZY over the pinned/staged silvers — each gold table is
+        // read by only 1–2 branches, and staging gold too measured a
+        // serve-path tie at 100x against a ~135 s cold build (round 14)
+        "gold_customer_summary" ->
+          graft.gold.Gold.customerSummaryFrom(sc, so, sp),
+        "gold_order_metrics" -> graft.gold.Gold.orderMetricsFrom(so),
+        "gold_revenue_analysis" -> graft.gold.Gold.revenueAnalysisFrom(so, sp))
     }
 
     // ---- footer fast-path: answer eligible checks from the parquet
@@ -285,12 +273,6 @@ object DataQuality {
         case (name, t, RowFloorKind(n)) =>
           rowCountOf(t).map(rc => name -> (if (rc < n) 1L else 0L))
       }).toMap
-    // one visible line per summary: which checks resolved footer-only
-    if (footerAnswers.nonEmpty && spark.conf
-        .getOption("spark.graft.dq.footer.log").forall(_ != "false"))
-      System.err.println(s"[graft.dq] footer-only resolution for " +
-        s"${footerAnswers.size} checks: " +
-        footerAnswers.keys.toSeq.sorted.mkString(", "))
 
     // Singular-test reconstructions folded into the same single-pass agg as
     // the table's generic checks, so their (large) model subtree appears in

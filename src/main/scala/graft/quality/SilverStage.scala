@@ -106,8 +106,7 @@ object SilverStage {
   val TableNames: Seq[String] =
     Seq("silver_customers", "silver_orders", "silver_payments")
 
-  /** Conf key: buckets per staged trio table; `0` disables bucketing
-    * (plain parquet, the pre-round-14 layout — the A/B lever); UNSET
+  /** Conf key: buckets per staged trio table (a positive count); UNSET
     * derives the count from input scale ([[derivedBuckets]]). The trio
     * is immutable and probed by a FIXED check family, so its layout can
     * serve the checks: CLUSTERED BY the checked key, uniqueness folds
@@ -134,7 +133,10 @@ object SilverStage {
       // fail-loud parse: a malformed count silently replaced by a
       // default would change the physical layout (and the cache key)
       // under the operator — see graft.model.Conf's policy split
-      case Some(_) => graft.model.Conf.int(spark, BucketsKey, 0)
+      case Some(raw) =>
+        val n = graft.model.Conf.int(spark, BucketsKey, 0)
+        require(n > 0, s"$BucketsKey must be a positive bucket count, got '$raw'")
+        n
       case None => derivedBuckets(spark, dir)
     }
 
@@ -173,48 +175,6 @@ object SilverStage {
   def enabled(spark: SparkSession): Boolean =
     spark.conf.getOption(ConfKey).forall(_ != "false")
 
-  /** Conf key: ALSO stage the three GOLD tables in the trio (`true`;
-    * default off = lazy gold over the staged silvers). Built and
-    * MEASURED both ways in round 14 (local[8], min-of-2, dq rows): at
-    * 100× the serve paths TIE (45.3 s staged vs 44.9 s lazy) while the
-    * staged build adds ~135 s cold — the gold aggregations group to
-    * dim-sized outputs (one row per customer/day/month), so their
-    * shuffles move only partial-agg rows and the lazy form's real cost
-    * is three extra pruned scans of already-staged silver, not the
-    * fact-sized work the table sizes suggest. Round-12's lazy-gold
-    * adjudication therefore survives even against build-once staging;
-    * lazy stays the default. The lever exists for deployments whose
-    * gold FAN-OUT grows (many dq evaluations or external gold
-    * consumers amortizing one 135 s build), and the A/B spec holds both
-    * paths value-identical. */
-  val GoldKey = "spark.graft.dq.goldstage"
-
-  def goldEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption(GoldKey).contains("true")
-
-  val GoldNames: Seq[String] = Seq(
-    "gold_customer_summary", "gold_order_metrics", "gold_revenue_analysis")
-
-  /** Code-identity hash of the gold recipes (composed lazily over the
-    * silver composition — any Gold/Silver expression change reaches it),
-    * folded into the cache key only when gold staging is on. */
-  private def goldRecipeHash(spark: SparkSession, dir: String): String =
-    goldHashes.computeIfAbsent(dir, _ => {
-      val sc = graft.silver.Silver.customersFrom(
-        graft.bronze.Bronze.customers(spark, dir))
-      val so = graft.silver.Silver.ordersFrom(
-        graft.bronze.Bronze.orders(spark, dir), sc)
-      val sp = graft.silver.Silver.paymentsFrom(
-        graft.bronze.Bronze.payments(spark, dir), so)
-      planHash(Seq(
-        graft.gold.Gold.customerSummaryFrom(sc, so, sp),
-        graft.gold.Gold.orderMetricsFrom(so),
-        graft.gold.Gold.revenueAnalysisFrom(so, sp)))
-    })
-
-  private val goldHashes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Layout token folded into the cache key: bucket COUNT and the
     * bucket KEY COLUMNS. The key columns matter as much as the count —
     * a future [[BucketKeys]] edit without a hand [[Version]] bump would
@@ -222,43 +182,28 @@ object SilverStage {
     * as clustered by the new one, and the exchange-free unique fold
     * would silently trust a per-bucket grouping the files don't have. */
   private def layoutToken(spark: SparkSession, dir: String): String = {
-    val n = buckets(spark, dir)
-    if (n <= 0) "b0"
-    else {
-      val keys = TableNames.map(BucketKeys).mkString(",")
-      val kh = java.security.MessageDigest.getInstance("MD5")
-        .digest(keys.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
-      s"b${n}k$kh"
-    }
+    val keys = TableNames.map(BucketKeys).mkString(",")
+    val kh = java.security.MessageDigest.getInstance("MD5")
+      .digest(keys.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
+    s"b${buckets(spark, dir)}k$kh"
   }
 
   private[quality] def trioRoot(spark: SparkSession, dir: String): String = {
     val fp = IvfIndex.fingerprint(spark, dir, "customer.parquet").take(16) +
       IvfIndex.fingerprint(spark, dir, "orders.parquet").take(16)
-    val gold =
-      if (goldEnabled(spark)) s"g${goldRecipeHash(spark, dir)}" else ""
     s"${cacheRoot(spark)}/trio_${Version}r${recipeHash(spark, dir)}" +
-      s"$gold${layoutToken(spark, dir)}_$fp"
+      s"${layoutToken(spark, dir)}_$fp"
   }
 
   /** The staged trio for `dir`'s raw tables, building it first if no
-    * committed build exists: name → frame over the staged files — a
-    * catalog-registered bucketed table when bucketing is on (the
-    * bucket-aligned plans need the catalog's layout metadata; a bare
-    * path read would discard it), a bare parquet scan when off. */
+    * committed build exists: name → catalog-registered bucketed table
+    * over the staged files (the bucket-aligned plans need the catalog's
+    * layout metadata; a bare path read would discard it). */
   def tables(spark: SparkSession, dir: String): Map[String, DataFrame] = {
     val root = ensure(spark, dir)
     val n = buckets(spark, dir)
-    val silver = TableNames.map { name =>
-      name -> (if (n <= 0) spark.read.parquet(s"$root/$name")
-               else bucketedTable(spark, s"$root/$name", name, n))
-    }.toMap
-    // gold tables are dim-sized at rest: plain pruned scans, no buckets
-    val gold =
-      if (!goldEnabled(spark)) Map.empty[String, DataFrame]
-      else GoldNames.map(name =>
-        name -> spark.read.parquet(s"$root/$name")).toMap
-    silver ++ gold
+    TableNames.map(name =>
+      name -> bucketedTable(spark, s"$root/$name", name, n)).toMap
   }
 
   /** The staged table at `loc` served THROUGH the session catalog so the
@@ -295,22 +240,19 @@ object SilverStage {
     spark.table(tbl)
   }
 
-  /** Write one staged table: bucketed by its checked key when bucketing
-    * is on (`bucketBy` requires the catalog writer, so the table routes
-    * through a transient EXTERNAL name at the staging path and is
-    * dropped immediately — the files stay, the commit rename moves them
-    * into place like any other build). */
+  /** Write one staged table bucketed by its checked key (`bucketBy`
+    * requires the catalog writer, so the table routes through a
+    * transient EXTERNAL name at the staging path and is dropped
+    * immediately — the files stay, the commit rename moves them into
+    * place like any other build). */
   private def writeStaged(spark: SparkSession, df: DataFrame,
       path: String, name: String, n: Int): Unit = {
-    if (n <= 0) df.write.parquet(path)
-    else {
-      val key = BucketKeys(name)
-      val tmp = "graft_dq_stage_" +
-        java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-      df.write.format("parquet").bucketBy(n, key).sortBy(key)
-        .option("path", path).saveAsTable(tmp)
-      spark.sql(s"DROP TABLE `$tmp`")
-    }
+    val key = BucketKeys(name)
+    val tmp = "graft_dq_stage_" +
+      java.util.UUID.randomUUID.toString.replace("-", "").take(12)
+    df.write.format("parquet").bucketBy(n, key).sortBy(key)
+      .option("path", path).saveAsTable(tmp)
+    spark.sql(s"DROP TABLE `$tmp`")
   }
 
   /** [[graft.silver.Silver.payments]] through the staged trio when
@@ -348,18 +290,6 @@ object SilverStage {
     val sp = graft.silver.Silver.paymentsFrom(
       graft.bronze.Bronze.payments(spark, dir), soStaged)
     writeStaged(spark, sp, s"$staging/silver_payments", "silver_payments", n)
-    if (goldEnabled(spark)) {
-      // gold derives from the STAGED silvers (read back) — each
-      // fact-sized aggregation runs exactly once per corpus, and every
-      // later dq row's gold branch is a scan of the dim-sized result
-      val spStaged = spark.read.parquet(s"$staging/silver_payments")
-      graft.gold.Gold.customerSummaryFrom(scStaged, soStaged, spStaged)
-        .write.parquet(s"$staging/gold_customer_summary")
-      graft.gold.Gold.orderMetricsFrom(soStaged)
-        .write.parquet(s"$staging/gold_order_metrics")
-      graft.gold.Gold.revenueAnalysisFrom(soStaged, spStaged)
-        .write.parquet(s"$staging/gold_revenue_analysis")
-    }
     fs.mkdirs(rootPath.getParent)
     if (IvfIndex.renameIfAbsent(fs,
         new org.apache.hadoop.fs.Path(staging), rootPath))

@@ -32,9 +32,12 @@ object ParquetStats {
     * the file's length + mtime (a rewritten file re-infers) and the
     * session's nanosAsLong setting (it changes how TIMESTAMP(NANOS)
     * columns surface). Intended for the immutable SOURCE tables; stores
-    * and caches that rewrite in place keep their bare reads. Falls back
-    * to a plain read when the path cannot be stat'ed (missing file —
-    * same error surface as before, raised by the read itself). */
+    * and caches that rewrite in place keep their bare reads. Only a
+    * single FILE is memoized: a directory's length and mtime do not move
+    * when a part file inside it is rewritten in place, so a directory
+    * takes the plain read, as does a path that cannot be stat'ed
+    * (missing file — same error surface as before, raised by the read
+    * itself). */
   def read(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame = {
     // kill switch for A/B probes: spark.graft.schema.memo=false
     if (spark.conf.getOption("spark.graft.schema.memo").contains("false"))
@@ -46,7 +49,8 @@ object ParquetStats {
         val p = new org.apache.hadoop.fs.Path(path)
         val st = p.getFileSystem(spark.sessionState.newHadoopConf())
           .getFileStatus(p)
-        Some((path, st.getLen, st.getModificationTime, nanos))
+        if (st.isFile) Some((path, st.getLen, st.getModificationTime, nanos))
+        else None
       } catch { case scala.util.control.NonFatal(_) => None }
     key match {
       case Some(k) =>

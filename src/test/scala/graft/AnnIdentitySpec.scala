@@ -32,7 +32,6 @@ class AnnIdentitySpec extends SparkSpec {
 
   test("a one-expression edit to a build derivation moves its plan hash " +
       "(the 'deliberate recipe change with no version bump')") {
-    graft.functions.VectorFunctions.register(spark)
     val base = emptyOf("vec_id BIGINT, vec ARRAY<DOUBLE>, nrm DOUBLE")
     val cents = emptyOf("centroid_id BIGINT, c_vec ARRAY<DOUBLE>, c_nrm DOUBLE")
     def h(df: DataFrame) = graft.model.PlanIdentity.planHash(Seq(df))

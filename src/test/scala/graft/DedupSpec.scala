@@ -56,6 +56,18 @@ class DedupSpec extends SparkSpec {
       20L -> (20L, 2L), 21L -> (20L, 2L)))
   }
 
+  test("a caller's pinned pairs frame stays readable after " +
+      "connectedComponents returns (gate and loop paths)") {
+    val pairs = graft.model.Stage.pin(chain(20))
+    try {
+      val before = pairs.collect().map(_.toSeq).toSet
+      Dedup.connectedComponents(spark, pairs).collect()
+      withLoop(Dedup.connectedComponents(spark, pairs).collect())
+      assert(pairs.collect().map(_.toSeq).toSet == before,
+        "connectedComponents must not release pins the caller owns")
+    } finally graft.model.Stage.unpin(pairs)
+  }
+
   test("maxRounds guard fails fast with a clear error instead of looping") {
     val e = intercept[IllegalStateException] {
       withLoop(Dedup.connectedComponents(spark, chain(100), maxRounds = 2)

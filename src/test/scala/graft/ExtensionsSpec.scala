@@ -1,35 +1,24 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** GraftExtensions registers the native functions at session build time. */
+/** GraftExtensions registers the native functions at session build time;
+  * the shared test session is built with it ([[Session.builder]]). */
 class ExtensionsSpec extends SparkSpec {
 
   test("a session built with GraftExtensions resolves the functions") {
-    // spark.sql.extensions is a *static* conf, so in a suite that shares a
-    // SparkContext we go through builder.withExtensions — the same code
-    // path the static conf triggers at cold start (verified separately
-    // with spark-shell --conf spark.sql.extensions=graft.plans.GraftExtensions).
-    spark.sparkContext
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val extended = SparkSession.builder()
-        .master("local[4]")
-        .withExtensions(new graft.plans.GraftExtensions()(_))
-        .getOrCreate()
-      val r = extended.sql(
-        """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
-                  str_hamming('1010', '1001') AS h,
-                  length(simhash64(array('alpha', 'beta'))) AS s,
-                  length(sign_bits(array(1.0D, -2.0D), 6)) AS b""").head()
-      assert(r.getDouble(0) == 11.0)
-      assert(r.getInt(1) == 2)
-      assert(r.getInt(2) == 64)
-      assert(r.getInt(3) == 6)
-    } finally {
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    val r = spark.sql(
+      """SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
+                vec_dot_int(array(1, 2), array(3, 4)) AS di,
+                str_hamming('1010', '1001') AS h,
+                length(simhash64(array('alpha', 'beta'))) AS s,
+                length(sign_bits(array(1.0D, -2.0D), 6)) AS b,
+                size(winnow_fps('the quick brown fox', 3, 2)) > 0 AS w,
+                element_at(bpe_split('ab', 'a b ab'), 1) AS t""").head()
+    assert(r.getDouble(0) == 11.0)
+    assert(r.getLong(1) == 11L)
+    assert(r.getInt(2) == 2)
+    assert(r.getInt(3) == 64)
+    assert(r.getInt(4) == 6)
+    assert(r.getBoolean(5))
+    assert(r.getString(6) == "ab")
   }
 }

@@ -41,7 +41,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("vec_dot matches the interpreted HOF fold bit-for-bit") {
-    graft.functions.VectorFunctions.register(spark)
     // the contract (and the DuckDB oracle's DOUBLE[] cast) widens each
     // element BEFORE multiplying — a float×float product would round to
     // float first and diverge; the HOF reference must widen the same way
@@ -56,7 +55,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("vec_dot / vec_dot_int: mismatched lengths yield null, never a truncated score") {
-    graft.functions.VectorFunctions.register(spark)
     // non-foldable inputs so the codegen path runs: row id drives the
     // left array's length, the right side is fixed at 2 — only id=1
     // produces equal lengths, everything else must surface as NULL (the
@@ -158,7 +156,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("sign_bits matches the SQL-expressible md5 formulation bit-for-bit") {
-    graft.functions.VectorFunctions.register(spark)
     // the interpreted reference formulation the DuckDB oracle mirrors:
     // per plane j, fold coef(j,c)·vec[c] left-to-right, emit sign bit
     val planes = 9
@@ -292,7 +289,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("winnow_fps handles multi-byte unicode like SQL substring (property)") {
-    graft.functions.VectorFunctions.register(spark)
     val k = TextOps.WinnowK
     val w = TextOps.WinnowW
     // WinnowFps walks code-point offsets into the raw UTF8 bytes by hand;
@@ -320,7 +316,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("winnow_fps matches the HOF/SQL-expressible formulation exactly") {
-    graft.functions.VectorFunctions.register(spark)
     val k = TextOps.WinnowK
     val w = TextOps.WinnowW
     // the interpreted reference formulation the DuckDB oracle mirrors —
@@ -641,7 +636,6 @@ class OpsSpec extends SparkSpec {
   test("bpe_split === the doubled nested-replace SQL chain, on the real " +
       "dictionary AND adversarial repeated-pair words") {
     import graft.ops.Bpe
-    graft.functions.VectorFunctions.register(spark)
     val ms = Bpe.merges(spark, Sf0001).collect()
       .map(r => (r.getString(1), r.getString(2), r.getString(3)))
     val enc = ms.map { case (a, b, m) => s"$a $b $m" }.mkString(";")
@@ -1556,7 +1550,6 @@ class OpsSpec extends SparkSpec {
   test("kmeans at the k clamp: ivfK saturates, driver footprint bounded, " +
       "training deterministic") {
     import graft.ops.Similarity
-    graft.functions.VectorFunctions.register(spark)
     // the clamp engages and the Int-shift guard holds at extreme N
     assert(Similarity.ivfK(1L) == Similarity.IvfKMin)
     assert(Similarity.ivfK(1L << 40) == Similarity.IvfKMax)

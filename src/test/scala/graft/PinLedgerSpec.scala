@@ -8,10 +8,9 @@ import graft.model.Stage
   * A/B + bisect). This spec makes that class fail HERE instead: with the
   * opt-in ledger on (`spark.graft.stage.ledger=true`), every driver
   * query must end its terminal action with ZERO leaked pins — each pin
-  * either [[Stage.unpin]]ned at its provably-dead point, lazily
+  * either [[Stage.unpin]]ned at its provably-dead point or lazily
   * referenced by the returned frame (BPE segmentation, greedy decode,
-  * pagerank — passed via the `except` set, never an allowlist), or
-  * explicitly [[Stage.retain]]ed as a session-lifetime cache. */
+  * pagerank — passed via the `except` set, never an allowlist). */
 class PinLedgerSpec extends SparkSpec {
 
   test("every driver query releases its dead pins " +

@@ -497,11 +497,8 @@ class PlanSpec extends SparkSpec {
     // relationships anti-join runs bucket-aligned (two exchanges gone)
     // and the order_key/customer_key unique/distinct folds group on the
     // scans' own partitioning (two more) — the dedicated "dq bucketed
-    // trio" test pins the zero-exchange shapes directly. (The optional
-    // gold staging lever, SilverStage.GoldKey, removes the
-    // gold-derivation aggs; measured a serve-path TIE at 100× against a
-    // ~135 s build, so lazy gold stays the default and the pinned count
-    // reflects it.) 29 → 26 in round 15: the bucket count now DERIVES
+    // trio" test pins the zero-exchange shapes directly. 29 → 26 in
+    // round 15: the bucket count now DERIVES
     // from input bytes (SilverStage.derivedBuckets), and at this test's
     // scale that is a single bucket — every remaining hash exchange over
     // a trio scan (the gold-derivation groupings re-keying off the

@@ -48,29 +48,6 @@ class SilverStageSpec extends SparkSpec {
     } finally spark.conf.unset(SilverStage.RootKey)
   }
 
-  test("gold staging A/B: staged gold emits rows identical to the lazy " +
-      "derivation, and the key separates the two cache shapes") {
-    spark.conf.set(SilverStage.RootKey, java.nio.file.Files
-      .createTempDirectory("graft_dq_silver_g").toString)
-    spark.conf.set(SilverStage.GoldKey, "true")
-    try {
-      val rootOn = SilverStage.trioRoot(spark, Sf0001)
-      val withGold = summaryRows()
-      SilverStage.GoldNames.foreach(n =>
-        assert(SilverStage.tables(spark, Sf0001).contains(n),
-          s"goldstage on must serve $n from the stage"))
-      spark.conf.unset(SilverStage.GoldKey) // back to the lazy default
-      assert(SilverStage.trioRoot(spark, Sf0001) != rootOn,
-        "gold-staged and silver-only trios must not share a cache key")
-      assert(summaryRows() == withGold,
-        "lazy gold over the staged silvers must be value-identical " +
-          "to the staged gold")
-    } finally {
-      spark.conf.unset(SilverStage.GoldKey)
-      spark.conf.unset(SilverStage.RootKey)
-    }
-  }
-
   test("trio cache key folds the silver recipe's plan identity — a " +
       "recipe change misses the cache instead of serving stale rows") {
     import org.apache.spark.sql.functions.col
@@ -118,11 +95,21 @@ class SilverStageSpec extends SparkSpec {
       }
       assert(e.getMessage.contains(SilverStage.BucketsKey))
       assert(e.getMessage.contains("thirty two"))
+      // a count below one is no layout: it fails the same way (there is
+      // no plain-parquet fallback to disable bucketing into)
+      Seq("0", "-4").foreach { v =>
+        spark.conf.set(SilverStage.BucketsKey, v)
+        val z = intercept[IllegalArgumentException] {
+          SilverStage.buckets(spark, Sf0001)
+        }
+        assert(z.getMessage.contains(SilverStage.BucketsKey))
+        assert(z.getMessage.contains(s"'$v'"))
+      }
     } finally spark.conf.unset(SilverStage.BucketsKey)
   }
 
   test("bucket count derives from input scale: pow2 of bytes/target, " +
-      "clamped; explicit conf pins it; 0 disables") {
+      "clamped; explicit conf pins it") {
     // at the test SFs the raw inputs are far under one target-bucket of
     // bytes — the derived layout is a single near-free bucket (the
     // fixed 32 taxed small corpora with file/task overhead)
@@ -132,9 +119,6 @@ class SilverStageSpec extends SparkSpec {
     // conf override is the fleet lever and must win verbatim
     spark.conf.set(SilverStage.BucketsKey, "64")
     try assert(SilverStage.buckets(spark, Sf0001) == 64)
-    finally spark.conf.unset(SilverStage.BucketsKey)
-    spark.conf.set(SilverStage.BucketsKey, "0")
-    try assert(SilverStage.buckets(spark, Sf0001) == 0)
     finally spark.conf.unset(SilverStage.BucketsKey)
   }
 

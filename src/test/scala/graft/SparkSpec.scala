@@ -5,14 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM under Test/fork). */
 object TestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+  lazy val spark: SparkSession = graft.Session.builder(4)
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_test_wh").toString)
-    .config("spark.ui.enabled", "false")
     .appName("graft-tests")
     .getOrCreate()
 }
