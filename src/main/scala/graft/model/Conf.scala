@@ -4,20 +4,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Defensive parsing for `spark.graft.*` numeric conf keys.
   *
-  * Every graft numeric conf is read through one of two DELIBERATE
-  * policies instead of a bare `.toInt`/`.toLong` (whose
-  * NumberFormatException surfaces deep inside query construction with
-  * no mention of which key was malformed):
-  *
-  *  - [[int]]/[[long]] FAIL LOUD, naming the key and the raw value — for
-  *    settings where silently substituting the default would change
-  *    physical layout or cache keys under the operator (e.g. the dq trio
-  *    bucket count: a fleet operator who fat-fingers the count must see
-  *    the typo, not get 32 buckets and a mysterious rebuild).
-  *  - [[intLenient]]/[[longLenient]] FALL BACK to the default — for
-  *    sweep-safety settings on hot paths that must never throw (e.g. the
-  *    stage-lease horizon: a malformed horizon must not break every
-  *    `pin`; the lease is a safety margin, not a semantics input).
+  * Every graft numeric conf is read through [[int]]/[[long]] instead of a
+  * bare `.toInt`/`.toLong` (whose NumberFormatException surfaces deep
+  * inside query construction with no mention of which key was
+  * malformed). Both FAIL LOUD, naming the key and the raw value:
+  * silently substituting the default would change physical layout or
+  * cache keys under the operator (e.g. the dq trio bucket count: a fleet
+  * operator who fat-fingers the count must see the typo, not get 32
+  * buckets and a mysterious rebuild).
   */
 object Conf {
 
@@ -40,11 +34,4 @@ object Conf {
   def long(spark: SparkSession, key: String, default: Long): Long =
     spark.conf.getOption(key)
       .map(parse(key, _, "a long", _.toLong)).getOrElse(default)
-
-  /** The key's value as an Int, or `default` when unset OR malformed —
-    * for hot-path safety settings that must never throw. */
-  def intLenient(spark: SparkSession, key: String, default: Int): Int =
-    spark.conf.getOption(key)
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(default)
 }

@@ -274,15 +274,8 @@ object Dedup {
 
   /** MinHash+LSH candidate pairs: docs sharing ≥1 of 3 signature bands,
     * with the number of shared bands. */
-  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sh = withShingles(spark, dir)
-    val out = minhashLshFrom(sh)
-    // the band table is pinned (materialized) by minhashLshFrom; the
-    // shingle pin is fully consumed — release it so it does not park in
-    // executor storage past this query (the round-12 leak class)
-    graft.model.Stage.unpin(sh)
-    out
-  }
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+    graft.model.Stage.scoped(minhashLshFrom(withShingles(spark, dir)))
 
   /** [[minhashLsh]] over an explicit (pinned) shingle table — extracted so
     * consumers that also need the shingle table ([[lshEval]]) share ONE
@@ -382,6 +375,29 @@ object Dedup {
   val DriverEdgesKey = "spark.graft.cc.driver.edges"
   val DriverEdgesDefault = 1000000L
 
+  /** One propagate step: every node takes the min label among itself and
+    * its neighbors. Exactly one shuffle pair — the edge⋈label equi-join
+    * on `node` and the min aggregate (PlanSpec pins the Exchange count so
+    * an edit cannot silently add a shuffle to the O(log d) loop body). */
+  private[graft] def ccPropagate(edges: DataFrame, labels: DataFrame): DataFrame = {
+    val viaNbr = edges.join(labels, col("dst") === col("node"))
+      .select(col("src").as("node"), col("cluster_id"))
+    labels.select("node", "cluster_id").union(viaNbr)
+      .groupBy("node").agg(min("cluster_id").as("cluster_id"))
+  }
+
+  /** One shortcut step: every node jumps to its label's label
+    * (Shiloach–Vishkin pointer doubling — labels form a forest pointing
+    * at smaller ids, so this is a single equi-join on the label). */
+  private[graft] def ccShortcut(prop: DataFrame): DataFrame =
+    prop.as("a")
+      .join(prop.select(col("node").as("l_node"),
+        col("cluster_id").as("l_cluster")).as("b"),
+        col("a.cluster_id") === col("l_node"), "left")
+      .select(col("a.node"),
+        least(col("a.cluster_id"),
+          coalesce(col("l_cluster"), col("a.cluster_id"))).as("cluster_id"))
+
   /** Connected components over an undirected pair list `(doc_a, doc_b)`:
     * one row per node with `cluster_id` = the smallest node id in its
     * component. Min-label propagation with pointer-doubling:
@@ -409,66 +425,17 @@ object Dedup {
     * executor-local blocks by default, durable scratch-dir parquet when
     * `spark.graft.stage.dir` is set (the cluster-grade form: stage files
     * survive executor loss, so a lost executor mid-iteration recomputes
-    * instead of killing the run). Passing `checkpointDir` explicitly
-    * instead switches to reliable RDD `checkpoint()` under that
-    * directory — same fault-tolerance, Spark's own mechanism. */
-  /** One propagate step: every node takes the min label among itself and
-    * its neighbors. Exactly one shuffle pair — the edge⋈label equi-join
-    * on `node` and the min aggregate (PlanSpec pins the Exchange count so
-    * an edit cannot silently add a shuffle to the O(log d) loop body). */
-  private[graft] def ccPropagate(edges: DataFrame, labels: DataFrame): DataFrame = {
-    val viaNbr = edges.join(labels, col("dst") === col("node"))
-      .select(col("src").as("node"), col("cluster_id"))
-    labels.select("node", "cluster_id").union(viaNbr)
-      .groupBy("node").agg(min("cluster_id").as("cluster_id"))
-  }
-
-  /** One shortcut step: every node jumps to its label's label
-    * (Shiloach–Vishkin pointer doubling — labels form a forest pointing
-    * at smaller ids, so this is a single equi-join on the label). */
-  private[graft] def ccShortcut(prop: DataFrame): DataFrame =
-    prop.as("a")
-      .join(prop.select(col("node").as("l_node"),
-        col("cluster_id").as("l_cluster")).as("b"),
-        col("a.cluster_id") === col("l_node"), "left")
-      .select(col("a.node"),
-        least(col("a.cluster_id"),
-          coalesce(col("l_cluster"), col("a.cluster_id"))).as("cluster_id"))
-
-  /** `checkpointDir = Some(d)` switches the loop to reliable
-    * (executor-loss-tolerant) `checkpoint()` files under `d`.
-    *
-    * CAVEAT — the checkpoint directory is session-global state with no
-    * unset API on SparkContext. If the caller's session already had one,
-    * it is restored on exit; if it had NONE, the session permanently
-    * keeps `d` and unrelated later `df.checkpoint()` calls will land
-    * there — so do not clean `d` while the session lives (deleting it
-    * would invalidate those lineages alongside ours). Callers who need
-    * full control should `setCheckpointDir` themselves up front and pass
-    * that same directory here. */
+    * instead of killing the run). Each round is a
+    * [[graft.model.Stage.step]], so the replaced labels are released as
+    * soon as the next generation is pinned. */
   def connectedComponents(spark: SparkSession, pairs: DataFrame,
-      maxRounds: Int = MaxCcRounds,
-      checkpointDir: Option[String] = None): DataFrame = {
-    // Remember the caller's dir and restore it on exit so unrelated later
-    // checkpoints don't silently land in (or clobber) ours — best-effort:
-    // see the scaladoc caveat for the None-prior case. The checkpoint
-    // FILES are owned by the caller's directory and must outlive this
-    // call — the returned DataFrame's lineage reads them — so no cleanup
-    // here.
-    val prevCkptDir = spark.sparkContext.getCheckpointDir
-    val ckpt: DataFrame => DataFrame = checkpointDir match {
-      case Some(d) =>
-        spark.sparkContext.setCheckpointDir(d)
-        df => df.checkpoint()
-      case None => graft.model.Stage.pin
-    }
-    try {
+      maxRounds: Int = MaxCcRounds): DataFrame = graft.model.Stage.scoped {
     // materialize the pair list FIRST: `pairs` is typically an expensive
     // subplan (the LSH band join), and building the symmetric edge list
     // straight off it evaluates that subplan once per union branch — the
-    // checkpoint makes both directions (and the initial labels) two cheap
-    // scans of one materialized table instead of two LSH executions
-    val ab = ckpt(pairs.toDF("doc_a", "doc_b"))
+    // pin makes both directions (and the initial labels) two cheap scans
+    // of one materialized table instead of two LSH executions
+    val ab = graft.model.Stage.pin(pairs.toDF("doc_a", "doc_b"))
     // Measured adaptive gate (the RangeRank.WindowBytesKey discipline):
     // a near-dup pair graph is DUPLICATE-volume-sized, and below the
     // threshold the O(log d) distributed loop is pure constant factor —
@@ -485,41 +452,48 @@ object Dedup {
     if (nEdges <= gate &&
         ab.schema.fields.forall(f => f.dataType ==
             org.apache.spark.sql.types.LongType || f.dataType ==
-            org.apache.spark.sql.types.IntegerType)) {
-      import spark.implicits._
-      val nodeType = ab.schema.fields.head.dataType
-      val es = ab.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-        .as[(Long, Long)].collect()
-      graft.model.Stage.unpin(ab)
-      lastCcRounds.set(0)
-      val parent = new java.util.HashMap[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x // path compression
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      es.foreach { case (a, b) =>
-        parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
-      }
-      // second pass: the component label is the MIN member id — roots are
-      // unioned toward the smaller id above, so find(x) already IS the min
-      val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
-      parent.keySet.forEach(n => out += ((n, find(n))))
-      val sizes = out.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }
-      return spark.createDataset(out.toSeq.map { case (n, c) =>
-          (n, c, sizes(c)) })
-        .toDF("doc_id", "cluster_id", "cluster_size")
-        .select(col("doc_id").cast(nodeType), col("cluster_id").cast(nodeType),
-          col("cluster_size"))
+            org.apache.spark.sql.types.IntegerType))
+      ccUnionFind(spark, ab)
+    else ccLoop(ab, maxRounds)
+  }
+
+  /** The gate's driver-side union-find over the collected edge list. */
+  private def ccUnionFind(spark: SparkSession, ab: DataFrame): DataFrame = {
+    import spark.implicits._
+    val nodeType = ab.schema.fields.head.dataType
+    val es = ab.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+      .as[(Long, Long)].collect()
+    lastCcRounds.set(0)
+    val parent = new java.util.HashMap[Long, Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x // path compression
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
     }
+    es.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a); parent.putIfAbsent(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) { if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb) }
+    }
+    // second pass: the component label is the MIN member id — roots are
+    // unioned toward the smaller id above, so find(x) already IS the min
+    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](parent.size)
+    parent.keySet.forEach(n => out += ((n, find(n))))
+    val sizes = out.groupBy(_._2).map { case (c, m) => c -> m.size.toLong }
+    spark.createDataset(out.toSeq.map { case (n, c) => (n, c, sizes(c)) })
+      .toDF("doc_id", "cluster_id", "cluster_size")
+      .select(col("doc_id").cast(nodeType), col("cluster_id").cast(nodeType),
+        col("cluster_size"))
+  }
+
+  /** The distributed pointer-doubling loop over the pinned pair list. */
+  private def ccLoop(ab: DataFrame, maxRounds: Int): DataFrame = {
     val edges = ab.union(ab.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
-    var labels = ckpt(edges.select(col("src").as("node")).distinct()
-      .withColumn("cluster_id", col("node")))
+    var labels = graft.model.Stage.pin(edges.select(col("src").as("node"))
+      .distinct().withColumn("cluster_id", col("node")))
     var changed = 1L
     var round = 0
     while (changed > 0) {
@@ -528,35 +502,24 @@ object Dedup {
         s"connectedComponents did not converge within $maxRounds rounds; " +
           "with pointer-doubling this means the iteration is broken, not " +
           "that the component is large — investigate before raising maxRounds")
-      // checkpointed so the pointer-doubling self-join below reads one
-      // materialized table instead of recomputing the propagate step twice
-      // (it also sidesteps ambiguous-attribute rewrites on self-union plans)
-      val prop = ckpt(ccPropagate(edges, labels))
-      val next = ckpt(ccShortcut(prop))
-      changed = next
-        .join(labels.select(col("node"), col("cluster_id").as("prev")), Seq("node"))
-        .filter(col("cluster_id") < col("prev")).count()
-      // `next` is materialized and the convergence count has read the
-      // old labels: both the propagate stage and the replaced labels are
-      // dead — release their blocks (pointer-doubling runs ~log n rounds;
-      // parking every round's frames holds 2×rounds label-table copies).
-      // No-op for the reliable-checkpoint backend, whose data is files.
-      graft.model.Stage.unpin(prop)
-      graft.model.Stage.unpin(labels)
-      labels = next
+      labels = graft.model.Stage.step(labels) {
+        // pinned so the pointer-doubling self-join below reads one
+        // materialized table instead of recomputing the propagate step
+        // twice (it also sidesteps ambiguous-attribute rewrites on
+        // self-union plans)
+        val prop = graft.model.Stage.pin(ccPropagate(edges, labels))
+        val next = graft.model.Stage.pin(ccShortcut(prop))
+        changed = next
+          .join(labels.select(col("node"), col("cluster_id").as("prev")), Seq("node"))
+          .filter(col("cluster_id") < col("prev")).count()
+        next
+      }
     }
     lastCcRounds.set(round)
-    // the loop is done with the pair list; the returned frame reads only
-    // the final labels
-    graft.model.Stage.unpin(ab)
     val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     labels.select(col("node").as("doc_id"), col("cluster_id"))
       .join(sizes, Seq("cluster_id"))
       .select("doc_id", "cluster_id", "cluster_size")
-    } finally {
-      if (checkpointDir.isDefined)
-        prevCkptDir.foreach(spark.sparkContext.setCheckpointDir)
-    }
   }
 
   /** Duplicate-cluster assignment: [[connectedComponents]] over the
@@ -565,14 +528,9 @@ object Dedup {
     * turning pairwise dedup output into actionable per-document drop
     * lists. The DuckDB oracle computes the same components by recursive
     * CTE (min reachable id), so engine and oracle agree exactly. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = minhashLsh(spark, dir).select("doc_a", "doc_b")
-    val cc = connectedComponents(spark, pairs)
-    // the pair list was materialized inside; the pins its subplan read
-    // (the LSH band table) are ours and dead from here
-    graft.model.Stage.unpinAll(pairs)
-    cc
-  }
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    graft.model.Stage.scoped(connectedComponents(spark,
+      minhashLsh(spark, dir).select("doc_a", "doc_b")))
 
   def dedupClustersOracle: String =
     s"""WITH RECURSIVE pairs AS (
@@ -614,13 +572,9 @@ object Dedup {
     * per run. */
   def dedupPagerank(spark: SparkSession, dir: String,
       iters: Int = PagerankIters,
-      damping: Double = PagerankDamping): DataFrame = {
-    val pairs = minhashLsh(spark, dir).select("doc_a", "doc_b")
-    val pr = pagerankFrom(pairs, iters, damping)
-    // pair list materialized inside — the LSH band pins are dead
-    graft.model.Stage.unpinAll(pairs)
-    pr
-  }
+      damping: Double = PagerankDamping): DataFrame =
+    graft.model.Stage.scoped(pagerankFrom(
+      minhashLsh(spark, dir).select("doc_a", "doc_b"), iters, damping))
 
   /** [[dedupPagerank]] over an explicit undirected pair list. */
   private[graft] def pagerankFrom(pairs: DataFrame,

@@ -271,30 +271,31 @@ object IncrementalDedup {
     require(batchId > watermark(spark, root),
       s"batch $batchId is at or below the compaction watermark")
     val newTexts = ingestNewTexts(batch)
-    // seen-before check touches only the index's key column (pruned
-    // scan); the gate's view choice (raw members vs tombstone-filtered)
-    // lives in [[gateMembers]] so the recipe hash covers it
-    val unseen = graft.model.Stage.pin(
-      ingestUnseen(newTexts,
-        gateMembers(members(spark, root), tombstones(spark, root))))
-    val committed = commitStaged(spark, root,
-      s"${batchesRoot(root)}/batch=$batchId") { staging =>
-      // the one text-processing pass of the ingest: winnow ONLY unseen.
-      // (An AQE REBALANCE on these writes was measured in r16 and
-      // REVERTED: the extra shuffle cost each replay row +1.2–1.3 s at
-      // sf0.1, and at shard scale the task-count files are already
-      // shard_bytes/parallelism-sized — the small-files win never
-      // materializes where the hint's shuffle is paid.)
-      ingestFps(unseen).write.parquet(s"$staging/fps")
-      ingestReps(batch).write.parquet(s"$staging/reps")
+    // scoped so the pin is released once fps are written and n is
+    // counted: a replay/store build ingests many shards per JVM, and
+    // parked blocks would squeeze execution memory until the context
+    // cleaner runs
+    val n = graft.model.Stage.scoped {
+      // seen-before check touches only the index's key column (pruned
+      // scan); the gate's view choice (raw members vs tombstone-filtered)
+      // lives in [[gateMembers]] so the recipe hash covers it
+      val unseen = graft.model.Stage.pin(
+        ingestUnseen(newTexts,
+          gateMembers(members(spark, root), tombstones(spark, root))))
+      val committed = commitStaged(spark, root,
+        s"${batchesRoot(root)}/batch=$batchId") { staging =>
+        // the one text-processing pass of the ingest: winnow ONLY unseen.
+        // (An AQE REBALANCE on these writes was measured in r16 and
+        // REVERTED: the extra shuffle cost each replay row +1.2–1.3 s at
+        // sf0.1, and at shard scale the task-count files are already
+        // shard_bytes/parallelism-sized — the small-files win never
+        // materializes where the hint's shuffle is paid.)
+        ingestFps(unseen).write.parquet(s"$staging/fps")
+        ingestReps(batch).write.parquet(s"$staging/reps")
+      }
+      require(committed, s"batch $batchId already committed")
+      unseen.count()
     }
-    require(committed, s"batch $batchId already committed")
-    val n = unseen.count()
-    // the pin is dead from here (fps written, n counted): release its
-    // executor-storage blocks eagerly — a replay/store build ingests
-    // many shards per JVM and the parked blocks otherwise squeeze
-    // execution memory until the context cleaner runs
-    graft.model.Stage.unpin(unseen)
     lastIngestFingerprinted.set(n)
     if (batchIds(spark, root).count(_ > watermark(spark, root)) >= CompactEvery)
       compact(spark, root)

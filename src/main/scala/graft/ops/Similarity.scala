@@ -890,14 +890,15 @@ object Similarity {
     * ≤ nCand² rows per query (the candidate POOL is the unit of work,
     * never the corpus), and each greedy round is one anti-join + one
     * grouped max + one per-query window over ≤ nCand rows. Selected
-    * sets are pinned per round so the 5-round loop plans
-    * flat instead of exponentially nesting.
+    * sets are pinned per round ([[graft.model.Stage.step]]) so the
+    * 5-round loop plans flat instead of exponentially nesting.
     *
     * Round 1 has an empty selected set, so its score is `λ·cos` (the
     * uniform formula with the diversity term at 0) and the pick equals
     * the relevance argmax. */
   def annMmrTopK(spark: SparkSession, dir: String, k: Int = MmrK,
-      nCand: Int = MmrCandidates, lam: Double = MmrLambda): DataFrame = {
+      nCand: Int = MmrCandidates,
+      lam: Double = MmrLambda): DataFrame = graft.model.Stage.scoped {
     import org.apache.spark.sql.expressions.Window
     val cand = graft.model.Stage.pin(annIvfTopK(spark, dir, nCand))
     val v = withNorm(spark, dir)
@@ -926,23 +927,15 @@ object Similarity {
         Seq("query_id", "neighbor_id"), "left_anti")
       val w = Window.partitionBy("query_id")
         .orderBy(col("mmr").desc, col("neighbor_id"))
-      val prev = selected
-      selected = graft.model.Stage.pin(selected.union(
-        rem.join(divers, Seq("query_id", "neighbor_id"))
+      selected = graft.model.Stage.step(selected)(graft.model.Stage.pin(
+        selected.union(rem.join(divers, Seq("query_id", "neighbor_id"))
           .withColumn("mmr",
             lit(lam) * col("cosine") - lit(1 - lam) * col("max_sel"))
           .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
           .select(col("query_id"), col("neighbor_id"),
             lit(r).as("mmr_rank"), col("cosine").as("relevance"),
-            col("mmr").as("mmr_score"))))
-      // the pin is eager, so the replaced round's frame is dead — release
-      // its blocks instead of parking k generations of the selected set
-      graft.model.Stage.unpin(prev)
+            col("mmr").as("mmr_score")))))
     }
-    // the final pinned `selected` is self-contained: the candidate and
-    // pairwise-cosine stages fed the rounds, not the returned frame
-    graft.model.Stage.unpin(cand)
-    graft.model.Stage.unpin(pairs)
     selected
   }
 

@@ -1055,7 +1055,7 @@ object TextOps {
     * [[LmDecodeSteps]] tiny jobs (the BPE loop's documented pattern);
     * production decoders serve the same table from a key-value store. */
   def lmGreedyDecode(spark: SparkSession, dir: String,
-      steps: Int = LmDecodeSteps): DataFrame = {
+      steps: Int = LmDecodeSteps): DataFrame = graft.model.Stage.scoped {
     import spark.implicits._
     val nxt = graft.model.Stage.pin(
       bigramLm(spark, dir).filter(col("next_rank") === 1)
@@ -1087,8 +1087,6 @@ object TextOps {
       else { cur = nx.head; path += ((i, cur)) }
       i += 1
     }
-    // the decode path is on the driver; the successor-table pin is dead
-    graft.model.Stage.unpin(nxt)
     spark.createDataset(path.toSeq).toDF("step", "word")
   }
 

@@ -511,7 +511,8 @@ object Registry {
 
   private def materialize(spark: SparkSession, m: Model, sourceDir: String,
       sink: TableSink, upstream: Map[String, DataFrame], fullRefresh: Boolean,
-      asOf: org.apache.spark.sql.Column, registerViews: Boolean): DataFrame = {
+      asOf: org.apache.spark.sql.Column,
+      registerViews: Boolean): DataFrame = graft.model.Stage.scoped {
     // incremental runs see their current target under ThisKey (dbt
     // renders is_incremental()=true and resolves {{ this }} exactly when
     // the relation exists and --full-refresh is off; snapshots are

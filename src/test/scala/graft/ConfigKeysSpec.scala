@@ -6,8 +6,9 @@ import scala.jdk.CollectionConverters._
 
 /** Guards the one configuration surface: every `spark.graft.*` key the
   * engine reads is documented in the README's Configuration table (and
-  * every documented key is still read), and sessions are built only by
-  * [[Session]] or the frozen driver mains. */
+  * every documented key is still read), sessions are built only by
+  * [[Session]] or the frozen driver mains, and pins are made and released
+  * only by [[graft.model.Stage]]. */
 class ConfigKeysSpec extends SparkSpec {
 
   private lazy val mainSources: Seq[(Path, String)] = {
@@ -42,5 +43,16 @@ class ConfigKeysSpec extends SparkSpec {
         Paths.get("src/main/scala/graft").relativize(p).toString
     }.toSet
     assert(builders == Set("Session.scala", "Bench.scala", "Verify.scala"))
+  }
+
+  test("pins are made and released only in model/Stage.scala") {
+    val banned = Seq("unpersist(", "localCheckpoint(", ".checkpoint()",
+      "Stage.unpin")
+    val hits = mainSources.flatMap { case (p, src) =>
+      if (p.endsWith("model/Stage.scala")) Nil
+      else banned.filter(src.contains).map(b => s"$p: $b")
+    }
+    assert(hits.isEmpty, "hand-placed pin handling outside Stage (own the " +
+      s"pin with Stage.scoped instead): ${hits.mkString("; ")}")
   }
 }

@@ -6,7 +6,7 @@ import graft.ops.Dedup
 /** Convergence guarantees of the connected-components iteration behind
   * duplicate-cluster assignment: O(log d) rounds on chain-shaped
   * components (pointer doubling), a hard round bound with a clear error,
-  * and an optional reliable-checkpoint mode for executor-loss tolerance. */
+  * and the durable stage-dir mode for executor-loss tolerance. */
 class DedupSpec extends SparkSpec {
 
   private def chain(n: Int) = {
@@ -15,7 +15,7 @@ class DedupSpec extends SparkSpec {
   }
 
   /** Force the distributed label-propagation loop: these tests pin ITS
-    * behavior (round counts, maxRounds guard, checkpoint backends); the
+    * behavior (round counts, maxRounds guard, pin backends); the
     * driver-side union-find gate would otherwise answer first. */
   private def withLoop[A](body: => A): A = {
     spark.conf.set(Dedup.DriverEdgesKey, "0")
@@ -58,14 +58,14 @@ class DedupSpec extends SparkSpec {
 
   test("a caller's pinned pairs frame stays readable after " +
       "connectedComponents returns (gate and loop paths)") {
-    val pairs = graft.model.Stage.pin(chain(20))
-    try {
+    graft.model.Stage.scoped {
+      val pairs = graft.model.Stage.pin(chain(20))
       val before = pairs.collect().map(_.toSeq).toSet
       Dedup.connectedComponents(spark, pairs).collect()
       withLoop(Dedup.connectedComponents(spark, pairs).collect())
       assert(pairs.collect().map(_.toSeq).toSet == before,
         "connectedComponents must not release pins the caller owns")
-    } finally graft.model.Stage.unpin(pairs)
+    }
   }
 
   test("maxRounds guard fails fast with a clear error instead of looping") {
@@ -77,17 +77,19 @@ class DedupSpec extends SparkSpec {
   }
 
   test("reliable-checkpoint mode produces identical clusters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val local = withLoop(Dedup.connectedComponents(spark, chain(50))
+      .collect().map(_.toSeq).toSet)
+    val dir = java.nio.file.Files.createTempDirectory("graft_cc_stage").toString
+    spark.conf.set(graft.model.Stage.DirKey, dir)
     try {
-      val reliable = withLoop(Dedup.connectedComponents(spark, chain(50),
-        checkpointDir = Some(dir)).collect().map(_.toSeq).toSet)
-      val local = withLoop(Dedup.connectedComponents(spark, chain(50))
+      val reliable = withLoop(Dedup.connectedComponents(spark, chain(50))
         .collect().map(_.toSeq).toSet)
       assert(reliable == local)
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      assert(fs.listStatus(p).nonEmpty, "reliable mode persisted checkpoint blocks")
+      val app = new java.io.File(dir, s"app-${spark.sparkContext.applicationId}")
+      assert(Option(app.listFiles()).exists(_.exists(_.getName.startsWith("stage-"))),
+        "the loop's pins must be parquet stages under the stage dir")
     } finally {
+      spark.conf.unset(graft.model.Stage.DirKey)
       org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     }
   }

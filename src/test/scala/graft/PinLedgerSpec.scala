@@ -1,159 +1,131 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
+  SparkListenerJobStart}
+import org.apache.spark.sql.functions.max
+
 import graft.model.Stage
+import graft.ops.Dedup
 
 /** The round-12 leak class — a [[Stage.pin]] whose localCheckpoint
   * blocks outlive their last read, squeezing unified memory for every
   * later query in the JVM — was found by bench archaeology (same-binary
-  * A/B + bisect). This spec makes that class fail HERE instead: with the
-  * opt-in ledger on (`spark.graft.stage.ledger=true`), every driver
-  * query must end its terminal action with ZERO leaked pins — each pin
-  * either [[Stage.unpin]]ned at its provably-dead point or lazily
-  * referenced by the returned frame (BPE segmentation, greedy decode,
-  * pagerank — passed via the `except` set, never an allowlist). */
+  * A/B + bisect). This spec makes that class fail HERE instead: every
+  * driver query must end its terminal action with no RDD left persisted
+  * beyond the ones its returned frame still lazily reads, and the
+  * [[Stage.scoped]] ownership rule behind that is pinned case by case. */
 class PinLedgerSpec extends SparkSpec {
 
+  /** RDD ids `body` left persisted that its result does not read. */
+  private def leakedBy(body: => Any): Set[Int] = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val result = body
+    sc.getPersistentRDDs.keySet.toSet -- before -- Stage.rddIdsOf(result)
+  }
+
+  private def persisted(id: Int): Boolean =
+    spark.sparkContext.getPersistentRDDs.contains(id)
+
+  private def chain(n: Int) = {
+    import spark.implicits._
+    (0 until n).map(i => (i.toLong, i.toLong + 1)).toDF("doc_a", "doc_b")
+  }
+
+  /** Force connectedComponents' distributed loop (no union-find gate). */
+  private def withLoop[A](body: => A): A = {
+    spark.conf.set(Dedup.DriverEdgesKey, "0")
+    try body finally spark.conf.unset(Dedup.DriverEdgesKey)
+  }
+
   test("every driver query releases its dead pins " +
-      "(ledger on, all SparkEntry.queries, loop-heavy rows included)") {
-    spark.conf.set(Stage.LedgerKey, "true")
-    try {
-      val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-        case (name, fn) =>
-          Stage.ledgerReset()
+      "(all SparkEntry.queries, no conf)") {
+    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+      case (name, fn) =>
+        val leaked = leakedBy {
           val df = fn(spark, Sf0001)
           df.count() // the terminal action the driver/bench runs
-          val leaked = Stage.livePins(spark, except = Seq(df))
-          if (leaked.isEmpty) None
-          else Some(s"$name leaked ${leaked.size} pin(s): " +
-            leaked.values.toSeq.sorted.mkString("; "))
-      }
-      assert(failures.isEmpty, failures.mkString("\n"))
-    } finally {
-      spark.conf.unset(Stage.LedgerKey)
-      Stage.ledgerReset()
+          df
+        }
+        if (leaked.isEmpty) None
+        else Some(s"$name left ${leaked.size} RDD(s) persisted: " +
+          leaked.toSeq.sorted.flatMap(spark.sparkContext.getPersistentRDDs.get)
+            .mkString("; "))
     }
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
-  test("a re-introduced ingest-style leak fails the check; " +
-      "unpin and the except set clear it") {
-    spark.conf.set(Stage.LedgerKey, "true")
-    try {
-      Stage.ledgerReset()
-      import spark.implicits._
-      // the r12 defect shape: a build step pins, acts, and forgets
-      val pinned = Stage.pin((1 to 100).toDF("v"))
-      pinned.count()
-      val leaked = Stage.livePins(spark)
-      assert(leaked.size == 1, s"the dead pin must surface: $leaked")
-      assert(leaked.values.head.contains("PinLedgerSpec"),
-        s"the creation site must name the leaking caller: $leaked")
-      // a returned frame lazily reading the pin is NOT a leak
-      assert(Stage.livePins(spark, except = Seq(pinned.filter($"v" > 1)))
-        .isEmpty)
-      // ...and the seam's own release clears it for real
-      Stage.unpin(pinned)
-      assert(Stage.livePins(spark).isEmpty)
-    } finally {
-      spark.conf.unset(Stage.LedgerKey)
-      Stage.ledgerReset()
+  test("a pin made outside any scope is flagged; " +
+      "inside Stage.scoped it is released") {
+    import spark.implicits._
+    // the r12 defect shape: a build step pins, acts, and forgets
+    val leaked = leakedBy(Stage.pin((1 to 100).toDF("v")).count())
+    try assert(leaked.size == 1, s"the dead pin must surface: $leaked")
+    finally leaked.foreach(spark.sparkContext.getPersistentRDDs(_).unpersist())
+    // the same build step inside a scope
+    assert(leakedBy(Stage.scoped(Stage.pin((1 to 100).toDF("v")).count()))
+      .isEmpty)
+  }
+
+  test("a scope returning a frame derived from a pin keeps that pin's " +
+      "blocks") {
+    import spark.implicits._
+    var id = -1
+    val derived = Stage.scoped {
+      val pinned = Stage.pin((1 to 50).toDF("v"))
+      id = Stage.rddIdsOf(pinned).head
+      pinned.filter($"v" > 10).select(($"v" * 2).as("w"))
     }
-  }
-
-  test("ledger off: pins are not recorded (zero overhead by default)") {
-    Stage.ledgerReset()
-    import spark.implicits._
-    val pinned = Stage.pin((1 to 10).toDF("v"))
-    pinned.count()
-    assert(Stage.livePins(spark).isEmpty)
-    Stage.unpin(pinned)
-  }
-
-  test("unpin matches only the plan root: a derived frame embedding a " +
-      "still-live shared pin is a no-op, never a block drop") {
-    import spark.implicits._
-    val pinned = Stage.pin((1 to 50).toDF("v"))
-    val derived = pinned.filter($"v" > 10).select(($"v" * 2).as("w"))
-    Stage.unpin(derived) // caller bug: must NOT reach the shared pin
-    assert(pinned.count() == 50, "the shared pin's blocks must survive")
+    assert(persisted(id), "the returned frame still reads the pin")
     assert(derived.count() == 40)
-    Stage.unpin(pinned) // the bare-frame contract releases it
   }
 
-  test("clearAll skips a live application's leased subtree; " +
-      "force sweeps everything") {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_stage_lease").toString
-    spark.conf.set(Stage.DirKey, scratch)
-    try {
-      import spark.implicits._
-      // our app's first durable pin writes the lease marker
-      Stage.pin((1 to 10).toDF("v")).count()
-      val appDir = new java.io.File(scratch,
-        s"app-${spark.sparkContext.applicationId}")
-      assert(new java.io.File(appDir, "_live").exists(),
-        "first durable pin must write the lease marker")
-      // a crashed app's leftovers: a subtree with a STALE lease (older
-      // than the horizon) and one with no lease at all
-      val crashed = new java.io.File(scratch, "app-crashed/stage-1")
-      assert(crashed.mkdirs())
-      val staleLease = new java.io.File(scratch, "app-crashed/_live")
-      assert(staleLease.createNewFile())
-      assert(staleLease.setLastModified(
-        System.currentTimeMillis() - 48L * 3600 * 1000))
-      val unleased = new java.io.File(scratch, "app-unleased/stage-1")
-      assert(unleased.mkdirs())
-      Stage.clearAll(spark)
-      assert(appDir.exists(),
-        "another session's sweep must not delete a live app's stages")
-      assert(!crashed.exists(), "stale-leased subtree is reclaimed")
-      assert(!unleased.exists(), "unleased subtree is reclaimed")
-      Stage.clearAll(spark, force = true)
-      assert(!appDir.exists(), "force restores the unconditional sweep")
-    } finally {
-      spark.conf.unset(Stage.DirKey)
+  test("a pin referenced only inside a scalar subquery survives scope exit") {
+    import spark.implicits._
+    var id = -1
+    val out = Stage.scoped {
+      val pinned = Stage.pin((1 to 10).toDF("v"))
+      id = Stage.rddIdsOf(pinned).head
+      spark.range(3).toDF("id").withColumn("m", pinned.agg(max($"v")).scalar())
     }
+    assert(persisted(id), "the subquery still reads the pin")
+    assert(out.as[(Long, Int)].collect().toSeq ==
+      Seq((0L, 10), (1L, 10), (2L, 10)))
   }
 
-  test("lease heartbeat: an app idle past the horizon (reading, not " +
-      "pinning) survives a non-force clearAll") {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_stage_hb").toString
-    spark.conf.set(Stage.DirKey, scratch)
-    try {
-      import spark.implicits._
-      Stage.pin((1 to 10).toDF("v")).count()
-      val appDir = new java.io.File(scratch,
-        s"app-${spark.sparkContext.applicationId}")
-      val marker = new java.io.File(appDir, "_live")
-      assert(marker.exists())
-      // a full horizon passes with NO pins (the app only lazily reads):
-      // backdate the marker past the 24h default — the r13 exposure.
-      // Control first: with no heartbeat tick the sweep reclaims.
-      val stale = System.currentTimeMillis() - 48L * 3600 * 1000
-      assert(marker.setLastModified(stale))
-      Stage.clearAll(spark)
-      assert(!appDir.exists(),
-        "control: an aged marker with no heartbeat is reclaimed")
-      Stage.clear(spark) // reset this app's in-memory lease state
-      // same aging, but the heartbeat ticks before the sweep — the
-      // idle-reading app keeps looking alive
-      Stage.pin((1 to 10).toDF("v")).count()
-      assert(marker.exists())
-      assert(marker.setLastModified(stale))
-      Stage.heartbeatTick()
-      assert(marker.lastModified() > stale,
-        "the heartbeat must rewrite the aged marker")
-      Stage.clearAll(spark)
-      assert(appDir.exists(),
-        "a heartbeat-fresh subtree survives the non-force sweep")
-    } finally {
-      Stage.clear(spark)
-      spark.conf.unset(Stage.DirKey)
+  test("the maxRounds guard leaves no persisted RDD behind after it throws") {
+    val leaked = leakedBy(withLoop(intercept[IllegalStateException](
+      Dedup.connectedComponents(spark, chain(100), maxRounds = 2))))
+    assert(leaked.isEmpty, s"pins left behind by the failed loop: $leaked")
+  }
+
+  test("the CC loop step releases the replaced labels each round") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // live pins sampled at every job boundary: the pair list, the labels,
+    // and one round's propagate + next generation — never more
+    val peak = new AtomicInteger(0)
+    def sample(): Unit = {
+      val live = (sc.getPersistentRDDs.keySet -- before).size
+      peak.accumulateAndGet(live, math.max)
+      ()
     }
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = sample()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = sample()
+    }
+    sc.addSparkListener(listener)
+    try withLoop(Dedup.connectedComponents(spark, chain(100)).count())
+    finally sc.removeSparkListener(listener)
+    assert(Dedup.lastCcRounds.get >= 4, "the loop must run several rounds")
+    assert(peak.get >= 2, "the sampler must have seen the loop's pins")
+    assert(peak.get <= 4,
+      s"${peak.get} pins live at once: replaced generations were parked")
   }
 
-  test("clear relinquishes the lease FIRST: a heartbeat tick after " +
-      "clear cannot resurrect the subtree or its marker") {
+  test("clear deletes the app subtree") {
     val scratch = java.nio.file.Files
       .createTempDirectory("graft_stage_clr").toString
     spark.conf.set(Stage.DirKey, scratch)
@@ -162,17 +134,9 @@ class PinLedgerSpec extends SparkSpec {
       Stage.pin((1 to 10).toDF("v")).count()
       val appDir = new java.io.File(scratch,
         s"app-${spark.sparkContext.applicationId}")
-      assert(new java.io.File(appDir, "_live").exists())
+      assert(appDir.exists())
       Stage.clear(spark)
-      assert(!appDir.exists(), "clear deletes the app subtree")
-      // the tick a concurrent heartbeat would have run mid-clear: with
-      // the lease entry removed before the delete, it must be a no-op
-      Stage.heartbeatTick()
-      assert(!appDir.exists(),
-        "a post-clear tick must not recreate the relinquished subtree")
-    } finally {
-      Stage.clear(spark)
-      spark.conf.unset(Stage.DirKey)
-    }
+      assert(!appDir.exists())
+    } finally spark.conf.unset(Stage.DirKey)
   }
 }

@@ -680,6 +680,28 @@ class RegistrySpec extends SparkSpec {
       .exists(), "the stale partition directory is gone from disk")
   }
 
+  test("registry microbatch re-run leaves no batch pin persisted") {
+    import spark.implicits._
+    val src = Seq(("2001-01-01 10:00:00", 1L), ("2001-01-02 10:00:00", 2L))
+      .toDF("ts_s", "id").select(col("ts_s").cast("timestamp").as("ts"), col("id"))
+    val mdl = Seq(Registry.Model("mb_pin_probe", "gold",
+      Registry.Incremental(None, "ts",
+        strategy = Registry.IncStrategy.Microbatch("ts", "day", lookback = 1)),
+      Seq.empty, (_, _, _) => src))
+    val sink = new graft.pipeline.ParquetSink(
+      Files.createTempDirectory("graft_wh_mbpin").toString)
+    Registry.run(spark, Sf0001, sink, all = mdl)
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // the re-run pins the aligned batch; overwritePartitions returns a
+    // fresh read of the table, so nothing returned reads that pin
+    val out = Registry.run(spark, Sf0001, sink, all = mdl)
+    val left = sc.getPersistentRDDs.keySet -- before --
+      graft.model.Stage.rddIdsOf(out)
+    assert(left.isEmpty, s"RDDs the microbatch re-run left persisted: $left")
+    assert(out("mb_pin_probe").count() == 2)
+  }
+
   test("run-set uniqueness: a loaded model colliding with a code model's " +
       "relation fails at assembly, never silently overwrites") {
     val dup = Registry.Model("silver_orders_alias", "silver", Registry.Table,
