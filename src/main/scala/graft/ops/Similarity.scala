@@ -1,12 +1,21 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Similarity search over the `embeddings` table (`Array[Float]`, dim 64).
   *
   * Baseline: brute-force cosine top-k for a deterministic query sample —
   * the exact-answer reference any ANN variant is validated against.
+  *
+  * Every ANN serving path is one generate → score → top-k pipeline and
+  * differs only in its candidate generator: a cross join ([[annTopK]]),
+  * an LSH bucket or its Hamming-1 probes, an IVF list or its nearest
+  * lists, a label-keyed probe, int8 codes, or PQ codes. Scoring and
+  * ranking are shared — [[rankByCosine]] / [[topK]] on the Spark side,
+  * the `*Duck` CTE builders on the oracle side — so every path breaks
+  * ties the same way (score descending, then neighbor id).
   *
   * Float-parity design: products and sums are computed as an explicit
   * left-to-right fold over float→double-cast components
@@ -17,10 +26,11 @@ import org.apache.spark.sql.functions._
   * is deliberately NOT used in the oracle.
   *
   * Scale: brute force is O(Q·N·d) with perfect data parallelism — right
-  * whenever Q is small (the broadcast side). The scale path for all-pairs
-  * is bucketed LSH (see [[Dedup.minhashLsh]] for the band-join pattern);
-  * an IVF variant (k-means coarse quantizer + per-centroid inverted lists)
-  * drops in by replacing the crossJoin with a centroid-key equi-join.
+  * whenever Q is small (the broadcast side). The scale paths replace its
+  * cross join with an equi-join on a bucket or list key (bucketed LSH,
+  * the band-join pattern of [[Dedup.minhashLsh]]; IVF's k-means coarse
+  * quantizer with per-centroid inverted lists), leaving the scorer and
+  * the top-k untouched.
   */
 object Similarity {
 
@@ -47,9 +57,70 @@ object Similarity {
     """list_reduce(list_transform(range(1, len(vec) + 1),
          i -> vec[i] * vec[i]), (x, y) -> x + y)"""
 
+  /** Oracle twin of [[rankByCosine]]: the `scored`/`ranked` CTEs over a
+    * `pairs` CTE of `(query_id, neighbor_id, a_vec, b_vec, na, nb)` and
+    * the final top-k select. */
+  private def cosineRankTailDuck(k: Int): String =
+    s"""scored AS (
+      SELECT query_id, neighbor_id,
+        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
+      FROM pairs),
+    ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+        ORDER BY cosine DESC, neighbor_id) AS rank
+      FROM scored)
+    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
+    FROM ranked WHERE rank <= $k"""
+
   private def withNorm(spark: SparkSession, dir: String): DataFrame =
     embeddings(spark, dir).withColumn("nrm", expr(normExpr))
       .select("vec_id", "vec", "nrm")
+
+  /** Row count of the `embeddings` table for the adaptive sizing rules
+    * ([[lshPlanes]], [[ivfK]], [[nearDupBandPlanes]]): parquet footer
+    * statistics (a driver-side metadata read, zero Spark jobs — at
+    * 100 TB a count() is a full job over every split), else count() as
+    * the documented last resort. */
+  private def vectorCount(spark: SparkSession, dir: String): Long =
+    graft.sources.ParquetStats.rowCount(spark, s"$dir/embeddings.parquet")
+      .getOrElse(embeddings(spark, dir).count())
+
+  /** The query side of a candidate join: `(vec_id, vec, nrm)` renamed to
+    * `(query_id, a_vec, na)`, plus the join keys in `keep`. */
+  private def querySide(df: DataFrame, keep: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as("query_id"), col("vec").as("a_vec"),
+      col("nrm").as("na")) ++ keep: _*)
+
+  /** The candidate side: `(vec_id, vec, nrm)` renamed to
+    * `(neighbor_id, b_vec, nb)`, plus the join keys in `keep`. */
+  private def candidateSide(df: DataFrame, keep: Column*): DataFrame =
+    df.select(Seq(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
+      col("nrm").as("nb")) ++ keep: _*)
+
+  /** Cosine of a joined `(a_vec, na, b_vec, nb)` pair — the sequential
+    * fold that [[cosineRankTailDuck]]'s `scored` CTE mirrors. */
+  private def cosineCol: Column =
+    expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb")))
+
+  /** Per-query top-k: `row_number()` by `score` descending, ties on
+    * ascending `neighbor_id`, kept while `rankCol <= k`. The `rank <= k`
+    * filter over a row_number is what Catalyst turns into a
+    * WindowGroupLimit (PlanSpec pins it), so ranking is a per-group heap
+    * of k rows, not a full sort. */
+  private def topK(df: DataFrame, score: String, k: Int,
+      rankCol: String = "rank"): DataFrame =
+    df.withColumn(rankCol, row_number().over(Window.partitionBy("query_id")
+        .orderBy(col(score).desc, col("neighbor_id"))))
+      .filter(col(rankCol) <= k)
+
+  /** Score and rank a generated candidate set: `pairs` are joined
+    * [[querySide]] × [[candidateSide]] rows (self pairs already removed);
+    * output is `(query_id, carry…, neighbor_id, rank, cosine)`. */
+  private def rankByCosine(pairs: DataFrame, k: Int,
+      carry: Seq[String] = Nil): DataFrame =
+    topK(pairs.withColumn("cosine", cosineCol), "cosine", k)
+      .select((("query_id" +: carry) ++
+        Seq("neighbor_id", "rank", "cosine")).map(col): _*)
 
   /** Fixed-size pinned query set for the ANN family. A modulus predicate
     * (`vec_id % 250 == 0`) makes Q grow with N and turns the exact baseline
@@ -64,19 +135,9 @@ object Similarity {
   /** Exact cosine top-k for each pinned query vector ([[AnnQueryIds]]):
     * (query_id, neighbor_id, rank, cosine). */
   def annTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val base = withNorm(spark, dir)
-    val q = base.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"), col("nrm").as("na"))
-    val c = base
-      .select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"), col("nrm").as("nb"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankByCosine(querySide(base.filter(annQueryFilter))
+      .join(candidateSide(base), col("query_id") =!= col("neighbor_id")), k)
   }
 
   def annTopKOracle(k: Int = 5): String =
@@ -89,28 +150,19 @@ object Similarity {
         q.vec AS a_vec, c.vec AS b_vec, q.nrm AS na, c.nrm AS nb
       FROM normed q JOIN normed c ON q.vec_id != c.vec_id
       WHERE q.vec_id IN ($annQueryIdsSql)),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   /** Johnson–Lindenstrauss output dimensionality for [[annRpTopK]]. */
   val RpDim = 16
 
-  /** Deterministic ±1 random-projection matrix (outDim × d): row j's sign
+  /** Deterministic ±1 random-projection matrix ([[RpDim]] × d): row j's sign
     * for component i is the first-nibble parity of md5("rp:j:i") — a
     * digest both engines compute identically, so the DuckDB oracle
     * rebuilds the exact matrix in SQL (and a re-run on any cluster
     * rebuilds it without storing anything). */
-  private[graft] def rpSigns(outDim: Int, d: Int): Seq[Seq[Double]] = {
+  private[graft] def rpSigns(d: Int): Seq[Seq[Double]] = {
     val md = java.security.MessageDigest.getInstance("MD5")
-    (0 until outDim).map(j => (0 until d).map { i =>
+    (0 until RpDim).map(j => (0 until d).map { i =>
       val hex = md.digest(
         s"rp:$j:$i".getBytes(java.nio.charset.StandardCharsets.UTF_8))
       val nib = (hex(0) >> 4) & 0xF
@@ -130,31 +182,18 @@ object Similarity {
     * projected vectors to the LSH/IVF stack instead. Quality is measured,
     * not assumed: [[annRecallReport]] carries an 'rp' variant next to
     * int8/LSH. */
-  def annRpTopK(spark: SparkSession, dir: String, k: Int = 5,
-      outDim: Int = RpDim): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+  def annRpTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
     val base = embeddings(spark, dir)
     val d = base.select(size(col("vec"))).head().getInt(0)
-    val signs = rpSigns(outDim, d)
-    val comps = signs.map(row =>
+    val comps = rpSigns(d).map(row =>
       expr(s"vec_dot(vec, array(${row.map(v => s"${v}D").mkString(", ")}))"))
     val proj = base.select(col("vec_id"), array(comps: _*).as("vec"))
       .withColumn("nrm", expr(normExpr))
-    val q = proj.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"))
-    val c = proj.select(col("vec_id").as("neighbor_id"),
-      col("vec").as("b_vec"), col("nrm").as("nb"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankByCosine(querySide(proj.filter(annQueryFilter))
+      .join(candidateSide(proj), col("query_id") =!= col("neighbor_id")), k)
   }
 
-  def annRpTopKOracle(k: Int = 5, outDim: Int = RpDim): String =
+  def annRpTopKOracle(k: Int = 5): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     dim AS (SELECT max(len(vec)) AS d FROM base),
@@ -163,7 +202,7 @@ object Similarity {
         CASE WHEN (strpos('0123456789abcdef',
             substr(md5('rp:' || j || ':' || (i - 1)), 1, 1)) - 1) % 2 = 0
           THEN 1.0e0 ELSE -1.0e0 END) AS s
-      FROM (SELECT unnest(range($outDim)) AS j), dim),
+      FROM (SELECT unnest(range($RpDim)) AS j), dim),
     proj AS (
       SELECT b.vec_id,
         list(list_reduce(list_transform(range(1, len(b.vec) + 1),
@@ -176,16 +215,7 @@ object Similarity {
         q.vec AS a_vec, c.vec AS b_vec, q.nrm AS na, c.nrm AS nb
       FROM normed q JOIN normed c ON q.vec_id != c.vec_id
       WHERE q.vec_id IN ($annQueryIdsSql)),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   /** Adaptive ANN bucket width: with fixed planes the expected bucket
     * size is N/2^p, so per-query candidate cost grows linearly with N;
@@ -219,11 +249,6 @@ object Similarity {
              * $vecCol[c]), (x, y) -> x + y) > 0
          THEN '1' ELSE '0' END), '')"""
 
-  /** Bucketed-LSH approximate top-k: random-hyperplane sign buckets, exact
-    * cosine ranking *within* the query's bucket only. The scale path for
-    * ann: candidate generation is an equi-join on the bucket key (linear
-    * shuffle) instead of a cross join; recall tunes with plane count and
-    * multi-probe. May return fewer than k neighbors per query. */
   /** The materialized sign-bit signature table both LSH serving paths
     * ([[annLshTopK]], [[annLshMultiProbeTopK]]) read — built once per
     * data fingerprint like the IVF/PQ/int8 tables, and EXPOSED so a
@@ -232,20 +257,15 @@ object Similarity {
     * ~6 s 100× signature build masquerades as a per-query regression
     * (exactly the misattribution round 14's direct-vs-stacked replica
     * check tripped over before this split). */
-  def lshSignatureBase(spark: SparkSession, dir: String,
-      numVectors: Option[Long] = None): DataFrame =
-    lshSignatureBaseFor(spark, dir, resolvedLshPlanes(spark, dir, numVectors))
+  def lshSignatureBase(spark: SparkSession, dir: String): DataFrame =
+    lshSignatureBaseFor(spark, dir, resolvedLshPlanes(spark, dir))
 
-  /** [[lshPlanes]] with N resolved from the caller / parquet footers /
-    * (documented last resort) a count — exposed to the serving paths so
-    * a row that also needs the plane count for its own expressions
-    * resolves it ONCE, not once per use (the footer read is metadata,
-    * but the stats-less fallback is a real job). */
-  private def resolvedLshPlanes(spark: SparkSession, dir: String,
-      numVectors: Option[Long]): Int =
-    lshPlanes(numVectors
-      .orElse(graft.sources.ParquetStats.rowCount(spark, s"$dir/embeddings.parquet"))
-      .getOrElse(embeddings(spark, dir).count()))
+  /** [[lshPlanes]] at N = [[vectorCount]] — a row that also needs the
+    * plane count for its own expressions resolves it ONCE, not once per
+    * use (the footer read is metadata, but the stats-less fallback is a
+    * real job). */
+  private def resolvedLshPlanes(spark: SparkSession, dir: String): Int =
+    lshPlanes(vectorCount(spark, dir))
 
   /** The signature derivation over an arbitrary `(vec_id, vec, nrm)`
     * frame — extracted so [[AnnIdentity]] hashes the same composition
@@ -262,24 +282,17 @@ object Similarity {
     LshIndex.signatures(spark, dir, planes,
       d => lshSignatureFrom(withNorm(spark, d), planes))
 
-  def annLshTopK(spark: SparkSession, dir: String, k: Int = 5,
-      numVectors: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = lshSignatureBase(spark, dir, numVectors)
-    val q = base.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"), col("bucket"), col("bucket_prefix"))
-    val c = base
-      .select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
-        col("nrm").as("nb"), col("bucket"), col("bucket_prefix"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("bucket_prefix", "bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+  /** Bucketed-LSH approximate top-k: random-hyperplane sign buckets, exact
+    * cosine ranking *within* the query's bucket only. The scale path for
+    * ann: candidate generation is an equi-join on the bucket key (linear
+    * shuffle) instead of a cross join; recall tunes with plane count and
+    * multi-probe. May return fewer than k neighbors per query. */
+  def annLshTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+    val base = lshSignatureBase(spark, dir)
+    val keys = Seq(col("bucket"), col("bucket_prefix"))
+    rankByCosine(querySide(base.filter(annQueryFilter), keys: _*)
+      .join(candidateSide(base, keys: _*), Seq("bucket_prefix", "bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   def annLshTopKOracle(k: Int = 5): String =
@@ -297,16 +310,7 @@ object Similarity {
       FROM normed q JOIN normed c
         ON q.bucket = c.bucket AND q.vec_id != c.vec_id
       WHERE q.vec_id IN ($annQueryIdsSql)),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   /** Multi-probe LSH ANN: each query searches its own hyperplane bucket
     * plus every bucket at Hamming distance 1 ([[lshPlanes]] single-bit
@@ -314,34 +318,24 @@ object Similarity {
     * tables: probe count multiplies only the tiny query side (Q×(planes+1)
     * rows), while the candidate index and its linear shuffle stay
     * unchanged. Probe buckets are disjoint, so no pair dedup is needed. */
-  def annLshMultiProbeTopK(spark: SparkSession, dir: String, k: Int = 5,
-      numVectors: Option[Long] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val planes = resolvedLshPlanes(spark, dir, numVectors)
+  def annLshMultiProbeTopK(spark: SparkSession, dir: String,
+      k: Int = 5): DataFrame = {
+    val planes = resolvedLshPlanes(spark, dir)
     val base = lshSignatureBaseFor(spark, dir, planes)
     val flip =
       s"""CASE WHEN p = 0 THEN bucket
           ELSE concat(substring(bucket, 1, p - 1),
             CASE WHEN substring(bucket, p, 1) = '1' THEN '0' ELSE '1' END,
             substring(bucket, p + 1, $planes - p)) END"""
-    val q = base.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"), col("bucket"))
+    val q = querySide(base.filter(annQueryFilter), col("bucket"))
       .withColumn("p", explode(expr(s"sequence(0, $planes)")))
       .withColumn("probe_bucket", expr(flip))
       .withColumn("probe_prefix", LshIndex.prefixCol(col("probe_bucket"), planes))
       .drop("bucket", "bucket_prefix", "p")
-    val c = base.select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
-      col("nrm").as("nb"), col("bucket").as("probe_bucket"),
+    val c = candidateSide(base, col("bucket").as("probe_bucket"),
       col("bucket_prefix").as("probe_prefix"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("probe_prefix", "probe_bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankByCosine(q.join(c, Seq("probe_prefix", "probe_bucket"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   def annLshMultiProbeTopKOracle(k: Int = 5): String =
@@ -368,16 +362,7 @@ object Similarity {
         q.a_vec, c.vec AS b_vec, q.na, c.nrm AS nb
       FROM probes q JOIN normed c
         ON c.bucket = q.probe_bucket AND q.query_id != c.vec_id),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   val IvfKMin = 16
   /** Cap keeps the centroid table broadcast-able and driver-holdable:
@@ -422,18 +407,6 @@ object Similarity {
       .agg(min(struct(col("dist"), col("centroid_id"))).getField("centroid_id")
         .as("centroid_id"))
 
-  /** Deterministic Lloyd k-means coarse quantizer for IVF: init = the
-    * first [[ivfK]](N) vectors by id, [[IvfIters]] fixed iterations, so the
-    * DuckDB oracle replicates training exactly in SQL.
-    *
-    * Cross-engine float discipline: a cluster mean is a float sum whose
-    * order Spark does not guarantee, so components are quantized to a
-    * 1e-6 integer grid first — `sum(cast(round(comp*1e6) as bigint))` is
-    * order-independent, and `(sum/1e6)/n` then yields the identical IEEE
-    * double in both engines (sums stay < 2^53). Per-iteration cost is one
-    * broadcast assignment pass plus one (centroid, component) aggregation
-    * — both linear in N; the trained centroids (k×dim doubles) are
-    * collected to the driver exactly like MLlib's KMeansModel holds them. */
   /** Training-sample multiple: the quantizer trains on at most
     * `IvfTrainPerCentroid × k` vectors (FAISS's default heuristic is this
     * same shape), chosen by the deterministic u16-hash threshold
@@ -452,27 +425,6 @@ object Similarity {
   private def u16Expr(idCol: String): String = TextOps.md5U16Expr(idCol)
   private def u16SqlDuck(idCol: String): String = TextOps.md5U16SqlDuck(idCol)
 
-  /** Deterministic Lloyd loop over a `(vec_id, vec, nrm)` training frame:
-    * init = the k smallest train vec_ids, [[IvfIters]] fixed iterations,
-    * grid-quantized component means, L2 assignment tie-broken by centroid
-    * id — the training core shared by the IVF coarse quantizer and the
-    * PQ sub-codebooks, replicated CTE-for-CTE by their DuckDB oracles.
-    *
-    * k×dim doubles live driver-side between iterations (like MLlib's
-    * KMeansModel): each Lloyd step is one distributed job whose plan
-    * reads the input once, instead of a lineage that re-derives every
-    * earlier iteration recursively.
-    *
-    * DRIVER-MEMORY CEILING, at the clamp: the localization holds
-    * k × (dim + 2) doubles per iteration — at k = [[IvfKMax]] (16384)
-    * and a 512-dim embedding that is 16384 × 514 × 8 B ≈ 67 MB, held
-    * [[IvfIters]]+1 times transiently ≈ 135 MB peak, far under any
-    * driver sized for Spark work (MLlib's KMeansModel carries the same
-    * footprint). The bound is k-clamped by construction — [[ivfK]] can
-    * never exceed [[IvfKMax]] no matter how large N grows — so raising
-    * the clamp is the ONLY way this grows, and [[IvfKMax]]'s doc ties
-    * that decision to the memory budget. Pinned by OpsSpec's
-    * "kmeans at the k clamp" boundary spec. */
   /** The k-means init rule — the k smallest train vec_ids as the seed
     * centroids. Extracted so [[AnnIdentity]] hashes the SAME composition
     * [[deterministicKmeans]] executes (a change to the init rule must
@@ -504,6 +456,36 @@ object Similarity {
       .withColumn("c_nrm", expr("vec_dot(c_vec, c_vec)"))
   }
 
+  /** Deterministic Lloyd k-means over a `(vec_id, vec, nrm)` training
+    * frame: init = the k smallest train vec_ids ([[kmeansInit]]),
+    * [[IvfIters]] fixed iterations of [[lloydMeanUpdate]], L2 assignment
+    * tie-broken by centroid id — the training core shared by the IVF
+    * coarse quantizer ([[ivfK]] centroids) and the PQ sub-codebooks,
+    * replicated CTE-for-CTE by their DuckDB oracles.
+    *
+    * Cross-engine float discipline: a cluster mean is a float sum whose
+    * order Spark does not guarantee, so components are quantized to a
+    * 1e-6 integer grid first — `sum(cast(round(comp*1e6) as bigint))` is
+    * order-independent, and `(sum/1e6)/n` then yields the identical IEEE
+    * double in both engines (sums stay < 2^53). Per-iteration cost is one
+    * broadcast assignment pass plus one (centroid, component) aggregation
+    * — both linear in N.
+    *
+    * k×dim doubles live driver-side between iterations (like MLlib's
+    * KMeansModel): each Lloyd step is one distributed job whose plan
+    * reads the input once, instead of a lineage that re-derives every
+    * earlier iteration recursively.
+    *
+    * DRIVER-MEMORY CEILING, at the clamp: the localization holds
+    * k × (dim + 2) doubles per iteration — at k = [[IvfKMax]] (16384)
+    * and a 512-dim embedding that is 16384 × 514 × 8 B ≈ 67 MB, held
+    * [[IvfIters]]+1 times transiently ≈ 135 MB peak, far under any
+    * driver sized for Spark work (MLlib's KMeansModel carries the same
+    * footprint). The bound is k-clamped by construction — [[ivfK]] can
+    * never exceed [[IvfKMax]] no matter how large N grows — so raising
+    * the clamp is the ONLY way this grows, and [[IvfKMax]]'s doc ties
+    * that decision to the memory budget. Pinned by OpsSpec's
+    * "kmeans at the k clamp" boundary spec. */
   private[graft] def deterministicKmeans(spark: SparkSession, train: DataFrame,
       k: Int): DataFrame = {
     import spark.implicits._
@@ -518,23 +500,11 @@ object Similarity {
     cents
   }
 
-  def ivfCentroids(spark: SparkSession, dir: String,
-      numVectors: Option[Long] = None): DataFrame = {
-    val base = withNorm(spark, dir)
-    // k sized from metadata, not a count() job — same discipline as
-    // cosineNearDup's banding
-    val n = numVectors
-      .orElse(graft.sources.ParquetStats.rowCount(spark, s"$dir/embeddings.parquet"))
-      .getOrElse(base.count())
-    retrainFrom(spark, base, n)
-  }
+  /** The IVF coarse quantizer trained from the source table — k sized
+    * from [[vectorCount]] (metadata, not a count() job). */
+  def ivfCentroids(spark: SparkSession, dir: String): DataFrame =
+    retrainFrom(spark, withNorm(spark, dir), vectorCount(spark, dir))
 
-  /** IVF ANN: k-means coarse quantizer (trained once and served from the
-    * materialized index table — [[IvfIndex.centroids]]; pass `centroids`
-    * to serve from an explicitly-managed index), one assignment pass, then
-    * exact cosine ranking only within the query's inverted list
-    * (nprobe = 1). At scale the per-centroid lists are exactly the
-    * partitions of one linear shuffle on the centroid key. */
   /** The inverted lists: every vector with its centroid assignment,
     * carrying (vec, nrm) so a probe never has to revisit the embeddings
     * table. [[IvfIndex.lists]] materializes this partitioned BY
@@ -563,11 +533,6 @@ object Similarity {
       .select("vec_id", "vec", "nrm")
   }
 
-  /** Retrain the coarse quantizer from an arbitrary `(vec_id, vec, nrm)`
-    * frame (the warehouse lists table, in the staleness-rebuild path) —
-    * same k sizing, hash-capped training sample, and deterministic Lloyd
-    * loop as [[ivfCentroids]], so a rebuild from warehouse rows is
-    * bit-identical to a fresh build from the source table. */
   /** The u16-hash-capped training sample: every vector whose id hashes
     * under the `cap / n` quantile (integer inequality, oracle-identical).
     * Extracted for [[AnnIdentity]] — the sampling predicate decides which
@@ -577,6 +542,11 @@ object Similarity {
     base.filter(
       expr(u16Expr("vec_id")).cast("long") * lit(n) < lit(65536L) * cap)
 
+  /** Retrain the coarse quantizer from an arbitrary `(vec_id, vec, nrm)`
+    * frame (the warehouse lists table, in the staleness-rebuild path) —
+    * same k sizing, hash-capped training sample, and deterministic Lloyd
+    * loop as [[ivfCentroids]], so a rebuild from warehouse rows is
+    * bit-identical to a fresh build from the source table. */
   private[graft] def retrainFrom(spark: SparkSession, base: DataFrame,
       n: Long): DataFrame = {
     IvfIndex.trainings.incrementAndGet()
@@ -585,29 +555,36 @@ object Similarity {
       trainSample(base, n, IvfTrainPerCentroid.toLong * k), k)
   }
 
+  /** IVF ANN: k-means coarse quantizer (trained once and served from the
+    * materialized index table — [[IvfIndex.centroids]]; pass `centroids`
+    * to serve from an explicitly-managed index), one assignment pass, then
+    * exact cosine ranking only within the query's inverted list
+    * (nprobe = 1). At scale the per-centroid lists are exactly the
+    * partitions of one linear shuffle on the centroid key. */
   def annIvfTopK(spark: SparkSession, dir: String, k: Int = 5,
       centroids: Option[DataFrame] = None,
       ledger: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lists = centroids match {
       case Some(c) => buildIvfLists(spark, dir, c)
       case None => IvfIndex.lists(spark, dir, ledger)
     }
-    val q = lists.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"), col("centroid_id"))
-    val c = lists
-      .select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
-        col("nrm").as("nb"), col("centroid_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankByCosine(querySide(lists.filter(annQueryFilter), col("centroid_id"))
+      .join(candidateSide(lists, col("centroid_id")), Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
+
+  /** Probe selection for the multi-probe IVF paths: each query row of
+    * `queries` (`vec_id, vec, nrm`, plus any payload) crossed with the
+    * broadcast centroids, keeping its `nprobe` nearest lists by
+    * (L2 distance, centroid_id) — Q×k rows, never the corpus. */
+  private def nearestLists(queries: DataFrame, cents: DataFrame,
+      nprobe: Int): DataFrame =
+    queries.crossJoin(broadcast(cents))
+      .withColumn("dist",
+        col("nrm") - lit(2) * expr("vec_dot(vec, c_vec)") + col("c_nrm"))
+      .withColumn("probe", row_number().over(Window.partitionBy("vec_id")
+        .orderBy(col("dist"), col("centroid_id"))))
+      .filter(col("probe") <= nprobe)
 
   /** Default probe count, chosen from the measured recall ladder
     * (AnnRecallSpec, sf0.001: nprobe 1/2/4/8 → recall@5
@@ -632,50 +609,19 @@ object Similarity {
     * lists; at production scale nprobe (and k ~ √N) are the recall/cost
     * dial exactly as in FAISS-style IVF indexes. */
   def annIvfMultiProbeTopK(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = IvfNProbe, centroids: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = withNorm(spark, dir)
-    val cents = centroids.getOrElse(IvfIndex.centroids(spark, dir))
-    val lists = centroids match {
-      case Some(c) => buildIvfLists(spark, dir, c)
-      case None => IvfIndex.lists(spark, dir)
-    }
-    val pw = Window.partitionBy("vec_id")
-      .orderBy(col("dist"), col("centroid_id"))
-    val q = base.filter(annQueryFilter)
-      .crossJoin(broadcast(cents))
-      .withColumn("dist",
-        col("nrm") - lit(2) * expr("vec_dot(vec, c_vec)") + col("c_nrm"))
-      .withColumn("probe", row_number().over(pw))
-      .filter(col("probe") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"), col("centroid_id"))
-    val c = lists
-      .select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
-        col("nrm").as("nb"), col("centroid_id"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+      nprobe: Int = IvfNProbe): DataFrame = {
+    val q = querySide(nearestLists(withNorm(spark, dir).filter(annQueryFilter),
+      IvfIndex.centroids(spark, dir), nprobe), col("centroid_id"))
+    val c = candidateSide(IvfIndex.lists(spark, dir), col("centroid_id"))
+    rankByCosine(q.join(c, Seq("centroid_id"))
+      .filter(col("query_id") =!= col("neighbor_id")), k)
   }
 
   def annIvfMultiProbeTopKOracle(k: Int = 5, nprobe: Int = IvfNProbe): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
-    lists AS (
-      SELECT a.vec_id, a.centroid_id, n.vec, n.nrm
-      FROM assigned a JOIN normed n ON a.vec_id = n.vec_id),
+    $ivfAssignedCtesDuck,
+    $ivfListsCteDuck,
     probes AS (
       SELECT vec_id AS query_id, vec AS a_vec, nrm AS na, centroid_id FROM (
         SELECT n.vec_id, n.vec, n.nrm, c.centroid_id,
@@ -690,16 +636,7 @@ object Similarity {
         q.a_vec, c.vec AS b_vec, q.na, c.nrm AS nb
       FROM probes q JOIN lists c
         ON q.centroid_id = c.centroid_id AND q.query_id != c.vec_id),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   /** FILTERED ANN — metadata-constrained retrieval, the "hybrid search"
     * shape every production vector store serves (top-k among candidates
@@ -719,45 +656,22 @@ object Similarity {
     * join then disappears entirely. */
   def annIvfTopKFiltered(spark: SparkSession, dir: String, k: Int = 5,
       nprobe: Int = IvfNProbe): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val labels = embeddings(spark, dir).select(col("vec_id"), col("label"))
-    val base = withNorm(spark, dir)
-    val cents = IvfIndex.centroids(spark, dir)
-    val lists = IvfIndex.lists(spark, dir)
-    val pw = Window.partitionBy("vec_id")
-      .orderBy(col("dist"), col("centroid_id"))
-    val q = base.filter(annQueryFilter).join(labels, Seq("vec_id"))
-      .crossJoin(broadcast(cents))
-      .withColumn("dist",
-        col("nrm") - lit(2) * expr("vec_dot(vec, c_vec)") + col("c_nrm"))
-      .withColumn("probe", row_number().over(pw))
-      .filter(col("probe") <= nprobe)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"), col("centroid_id"), col("label"))
-    val c = lists.join(labels, Seq("vec_id"))
-      .select(col("vec_id").as("neighbor_id"), col("vec").as("b_vec"),
-        col("nrm").as("nb"), col("centroid_id"), col("label"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    q.join(c, Seq("centroid_id", "label"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "label", "neighbor_id", "rank", "cosine")
+    val keys = Seq(col("centroid_id"), col("label"))
+    val q = querySide(nearestLists(withNorm(spark, dir).filter(annQueryFilter)
+      .join(labels, Seq("vec_id")), IvfIndex.centroids(spark, dir), nprobe),
+      keys: _*)
+    val c = candidateSide(IvfIndex.lists(spark, dir).join(labels, Seq("vec_id")),
+      keys: _*)
+    rankByCosine(q.join(c, Seq("centroid_id", "label"))
+      .filter(col("query_id") =!= col("neighbor_id")), k, carry = Seq("label"))
   }
 
   def annIvfTopKFilteredOracle(k: Int = 5, nprobe: Int = IvfNProbe): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
     lab AS (SELECT vec_id, label FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
+    $ivfAssignedCtesDuck,
     lists AS (
       SELECT a.vec_id, a.centroid_id, n.vec, n.nrm, l.label
       FROM assigned a JOIN normed n ON a.vec_id = n.vec_id
@@ -805,6 +719,26 @@ object Similarity {
             c.centroid_id) AS rn
         FROM $over n CROSS JOIN $centsCte c) WHERE rn = 1)"""
 
+  /** The IVF quantizer replay every IVF-backed oracle opens with, after
+    * its `base` CTE: norms, the k sizing, the hash-capped training set,
+    * the [[IvfIters]] Lloyd iterations, and the `assigned`
+    * `(vec_id, centroid_id)` table against the trained centroids. */
+  private def ivfAssignedCtesDuck: String =
+    s"""normed AS (
+      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
+    params AS (
+      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
+    $trainCtesDuck,
+    ${(1 to IvfIters).map(kmeansIterCteDuck("", s"$EmbeddingDim + 1"))
+      .mkString(",\n    ")},
+    ${assignCteDuck("assigned", s"cents$IvfIters")}"""
+
+  /** The inverted lists: `assigned` joined back to its vectors. */
+  private def ivfListsCteDuck: String =
+    s"""lists AS (
+      SELECT a.vec_id, a.centroid_id, n.vec, n.nrm
+      FROM assigned a JOIN normed n ON a.vec_id = n.vec_id)"""
+
   /** The deterministic hash-capped training set (mirrors `train` in
     * [[ivfCentroids]]; keeps every row when 256·k ≥ N — all verified
     * SFs) and the init centroids (k smallest train vec_ids). */
@@ -821,55 +755,40 @@ object Similarity {
 
   /** One Lloyd iteration in DuckDB SQL: assign vs cents(i-1) over the
     * training set, then the grid-quantized component means — mirrors
-    * [[ivfCentroids]] exactly. */
-  private def kmeansIterCteDuck(i: Int): String =
-    s"""${assignCteDuck(s"a$i", s"cents${i - 1}", "train")},
-    sums$i AS (
+    * [[lloydMeanUpdate]] exactly. `sfx` suffixes every CTE name (a PQ
+    * subspace's `_p<s>`; empty for the IVF quantizer) and `rangeEnd` is
+    * the exclusive end of the 1-based component range. */
+  private def kmeansIterCteDuck(sfx: String, rangeEnd: String)(i: Int): String =
+    s"""${assignCteDuck(s"a$i$sfx", s"cents${i - 1}$sfx", s"train$sfx")},
+    sums$i$sfx AS (
       SELECT a.centroid_id, t.i AS pos,
         sum(CAST(round(n.vec[t.i] * 1000000.0) AS BIGINT)) AS s,
         count(*) AS n
-      FROM a$i a JOIN train n USING (vec_id)
-      CROSS JOIN range(1, $EmbeddingDim + 1) t(i)
+      FROM a$i$sfx a JOIN train$sfx n USING (vec_id)
+      CROSS JOIN range(1, $rangeEnd) t(i)
       GROUP BY 1, 2),
-    cvec$i AS (
+    cvec$i$sfx AS (
       SELECT centroid_id,
         list((CAST(s AS DOUBLE) / 1000000.0) / n ORDER BY pos) AS c_vec
-      FROM sums$i GROUP BY 1),
-    cents$i AS (
+      FROM sums$i$sfx GROUP BY 1),
+    cents$i$sfx AS (
       SELECT centroid_id, c_vec,
         list_reduce(list_transform(range(1, len(c_vec) + 1),
           i -> c_vec[i] * c_vec[i]), (x, y) -> x + y) AS c_nrm
-      FROM cvec$i)"""
+      FROM cvec$i$sfx)"""
 
   def annIvfTopKOracle(k: Int = 5): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
-    lists AS (
-      SELECT a.vec_id, a.centroid_id, n.vec, n.nrm
-      FROM assigned a JOIN normed n ON a.vec_id = n.vec_id),
+    $ivfAssignedCtesDuck,
+    $ivfListsCteDuck,
     pairs AS (
       SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         q.vec AS a_vec, c.vec AS b_vec, q.nrm AS na, c.nrm AS nb
       FROM lists q JOIN lists c
         ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id IN ($annQueryIdsSql)),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   /** MMR geometry: select [[MmrK]] of [[MmrCandidates]] IVF-served
     * candidates at relevance weight [[MmrLambda]]. */
@@ -899,7 +818,6 @@ object Similarity {
   def annMmrTopK(spark: SparkSession, dir: String, k: Int = MmrK,
       nCand: Int = MmrCandidates,
       lam: Double = MmrLambda): DataFrame = graft.model.Stage.scoped {
-    import org.apache.spark.sql.expressions.Window
     val cand = graft.model.Stage.pin(annIvfTopK(spark, dir, nCand))
     val v = withNorm(spark, dir)
     val a = cand.select(col("query_id"), col("neighbor_id").as("id_a"))
@@ -910,7 +828,7 @@ object Similarity {
         col("nrm").as("nb")), Seq("id_b"))
     val pairs = graft.model.Stage.pin(a.join(b, Seq("query_id"))
       .filter(col("id_a") =!= col("id_b"))
-      .withColumn("pcos", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
+      .withColumn("pcos", cosineCol)
       .select("query_id", "id_a", "id_b", "pcos"))
     var selected = graft.model.Stage.pin(cand.filter(col("rank") === 1)
       .select(col("query_id"), col("neighbor_id"),
@@ -1041,13 +959,7 @@ object Similarity {
       deletedPredSql: String = annDeletePredSql): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
+    $ivfAssignedCtesDuck,
     lists AS (
       SELECT a.vec_id, a.centroid_id, n.vec, n.nrm
       FROM assigned a JOIN normed n ON a.vec_id = n.vec_id
@@ -1058,16 +970,7 @@ object Similarity {
       FROM lists q JOIN lists c
         ON q.centroid_id = c.centroid_id AND q.vec_id != c.vec_id
       WHERE q.vec_id IN ($annQueryIdsSql)),
-    scored AS (
-      SELECT query_id, neighbor_id,
-        $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
-      FROM pairs),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, cosine
-    FROM ranked WHERE rank <= $k"""
+    ${cosineRankTailDuck(k)}"""
 
   val NearDupBands = 6
   /** Planes per band at the test SFs: [[nearDupBandPlanes]] yields exactly
@@ -1139,22 +1042,14 @@ object Similarity {
     * 1.0 — are NOT emitted here; full duplicate coverage is this row
     * COMPOSED with [[exactVecDedup]] (`emb_dedup_exact`), whose keeper
     * mapping expands each rep pair to its twin group. */
-  def cosineNearDup(spark: SparkSession, dir: String, threshold: Double = 0.35,
-      numVectors: Option[Long] = None): DataFrame = {
+  def cosineNearDup(spark: SparkSession, dir: String,
+      threshold: Double = 0.35): DataFrame = {
     val base = withNorm(spark, dir)
       .groupBy(col("vec"))
       .agg(min(col("vec_id")).as("vec_id"), min(col("nrm")).as("nrm"))
       .select("vec_id", "vec", "nrm")
-    // N to size the banding: an explicit parameter (callers that just
-    // materialized the table know it), else parquet footer statistics
-    // (driver-side metadata read — zero Spark jobs, see
-    // [[graft.sources.ParquetStats]]), else count() as documented last
-    // resort. At 100 TB a count() action is a full job over every split;
-    // footer stats are the catalog answer.
-    val planes = nearDupBandPlanes(
-      numVectors
-        .orElse(graft.sources.ParquetStats.rowCount(spark, s"$dir/embeddings.parquet"))
-        .getOrElse(base.count()))
+    // banding sized to the RAW corpus count, like the oracle's params CTE
+    val planes = nearDupBandPlanes(vectorCount(spark, dir))
     val bands = base
       .withColumn("sig", expr(signBitsExpr("vec", NearDupBands * planes)))
       .withColumn("band", explode(expr(s"sequence(0, ${NearDupBands - 1})")))
@@ -1169,7 +1064,7 @@ object Similarity {
         col("nrm").as("na")), Seq("doc_a"))
       .join(base.select(col("vec_id").as("doc_b"), col("vec").as("b_vec"),
         col("nrm").as("nb")), Seq("doc_b"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
+      .withColumn("cosine", cosineCol)
       .filter(col("cosine") >= threshold)
       .select("doc_a", "doc_b", "cosine")
   }
@@ -1266,7 +1161,7 @@ object Similarity {
       col("vec").as("b_vec"), col("nrm").as("nb"))
     a.join(b, Seq("centroid_id"))
       .filter(col("keeper_id") < col("vec_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
+      .withColumn("cosine", cosineCol)
       .filter(col("cosine") >= threshold)
       .groupBy(col("vec_id"), col("centroid_id"))
       .agg(min(struct(col("keeper_id"), col("cosine"))).as("m"))
@@ -1280,16 +1175,8 @@ object Similarity {
   def semDedupOracle(threshold: Double = 0.35): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
-    lists AS (
-      SELECT a.vec_id, a.centroid_id, n.vec, n.nrm
-      FROM assigned a JOIN normed n ON a.vec_id = n.vec_id),
+    $ivfAssignedCtesDuck,
+    $ivfListsCteDuck,
     scored AS (
       SELECT keeper_id, vec_id, centroid_id,
         $dotSqlDuck / (sqrt(na) * sqrt(nb)) AS cosine
@@ -1318,13 +1205,7 @@ object Similarity {
     * Scale: map-only — one narrow pass, no shuffle; at 100 TB this is
     * the compress-on-write step of an embedding store. */
   def quantizeInt8(spark: SparkSession, dir: String): DataFrame =
-    embeddings(spark, dir)
-      .withColumn("max_abs", expr(
-        "aggregate(vec, cast(0.0 as double), (a, x) -> greatest(a, abs(cast(x as double))))"))
-      .withColumn("scale", expr(
-        "CASE WHEN max_abs = 0.0 THEN 1.0 ELSE max_abs / 127.0 END"))
-      .withColumn("q", expr(
-        "transform(vec, x -> cast(round(cast(x as double) / scale) as int))"))
+    withInt8Scale(embeddings(spark, dir))
       .withColumn("l2_err", sqrt(expr(
         """aggregate(zip_with(vec, q, (x, qi) ->
              pow(qi * scale - cast(x as double), 2)),
@@ -1348,20 +1229,6 @@ object Similarity {
         (x, y) -> x + y)) AS l2_err
     FROM scaled"""
 
-  /** Top-k serving over the int8-quantized vectors ([[quantizeInt8]]'s
-    * codes) — the compressed read path of an embedding store: the scan
-    * touches int8 codes + one float scale per vector (4× less IO/memory
-    * than float32, the difference between an index fitting in cluster RAM
-    * or not at 100 TB), and similarity is an INTEGER dot product scaled by
-    * `scale_a·scale_b` afterwards.
-    *
-    * Cross-engine exactness is structural here, stronger than the float
-    * family's fold-order discipline: the code dot product and code norms
-    * are sums of int×int (order-free), and the only float ops are two
-    * multiplies, two sqrts, and a divide on exactly-agreed operands.
-    * Ranking ties break on neighbor id. Same pinned query set and
-    * O(Q·N·d) brute-force shape as [[annTopK]] — the bucketed variants
-    * compose orthogonally (quantize the lists of the IVF index). */
   /** The int8 code table `(vec_id, scale, q, qq)` — quantize-on-write: one
     * map-only pass over the float embeddings producing, per vector, the
     * scale, the int8 code array, and the exact integer squared code norm.
@@ -1378,6 +1245,14 @@ object Similarity {
     * extracted so [[AnnIdentity]] hashes the SAME derivation the code
     * build executes (scale rule, rounding, norm arithmetic). */
   private[graft] def int8CodesFrom(emb: DataFrame): DataFrame =
+    withInt8Scale(emb)
+      // integer self dot product = squared code norm (exact, order-free)
+      .withColumn("qq", expr("vec_dot_int(q, q)"))
+      .select("vec_id", "scale", "q", "qq")
+
+  /** The per-vector int8 quantizer columns: `max_abs`, `scale =
+    * max_abs / 127` (1.0 for a zero vector) and the codes `q`. */
+  private def withInt8Scale(emb: DataFrame): DataFrame =
     emb
       .withColumn("max_abs", expr(
         "aggregate(vec, cast(0.0 as double), (a, x) -> greatest(a, abs(cast(x as double))))"))
@@ -1385,22 +1260,30 @@ object Similarity {
         "CASE WHEN max_abs = 0.0 THEN 1.0 ELSE max_abs / 127.0 END"))
       .withColumn("q", expr(
         "transform(vec, x -> cast(round(cast(x as double) / scale) as int))"))
-      // integer self dot product = squared code norm (exact, order-free)
-      .withColumn("qq", expr("vec_dot_int(q, q)"))
-      .select("vec_id", "scale", "q", "qq")
 
+  /** Top-k serving over the int8-quantized vectors ([[quantizeInt8]]'s
+    * codes) — the compressed read path of an embedding store: the scan
+    * touches int8 codes + one float scale per vector (4× less IO/memory
+    * than float32, the difference between an index fitting in cluster RAM
+    * or not at 100 TB), and similarity is an INTEGER dot product scaled by
+    * `scale_a·scale_b` afterwards.
+    *
+    * Cross-engine exactness is structural here, stronger than the float
+    * family's fold-order discipline: the code dot product and code norms
+    * are sums of int×int (order-free), and the only float ops are two
+    * multiplies, two sqrts, and a divide on exactly-agreed operands.
+    * Ranking ties break on neighbor id. Same pinned query set and
+    * O(Q·N·d) brute-force shape as [[annTopK]] — the bucketed variants
+    * compose orthogonally (quantize the lists of the IVF index). */
   def annInt8TopK(spark: SparkSession, dir: String, k: Int = 5,
       codes: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // served from the materialized code table (built once per data
     // fingerprint) — the whole query, both sides, touches only codes
     val codeTab = codes.getOrElse(IvfIndex.int8Codes(spark, dir))
     val qside = codeTab.filter(annQueryFilter)
       .select(col("vec_id").as("query_id"), col("q").as("qa"),
         col("scale").as("sa"), col("qq").as("qqa"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    qside.join(
+    val scored = qside.join(
         codeTab.select(col("vec_id").as("neighbor_id"), col("q").as("qb"),
           col("scale").as("sb"), col("qq").as("qqb")),
         col("query_id") =!= col("neighbor_id"))
@@ -1412,8 +1295,7 @@ object Similarity {
       // — scales cancel, so it is the pure code-space cosine
       .withColumn("cosine",
         col("dot_int") / (sqrt(col("qqa")) * sqrt(col("qqb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(scored, "cosine", k)
       .select("query_id", "neighbor_id", "rank", "cosine")
   }
 
@@ -1449,12 +1331,9 @@ object Similarity {
     * the TRAINING pass; [[IvfIndex.pqCodebooks]] materializes its output
     * once per corpus fingerprint and [[annPqAdc]] serves from that table
     * (train once / serve many). */
-  def pqCodebooks(spark: SparkSession, dir: String,
-      numVectors: Option[Long] = None): DataFrame = {
+  def pqCodebooks(spark: SparkSession, dir: String): DataFrame = {
     IvfIndex.trainings.incrementAndGet()
-    val n = numVectors
-      .orElse(graft.sources.ParquetStats.rowCount(spark, s"$dir/embeddings.parquet"))
-      .getOrElse(embeddings(spark, dir).count())
+    val n = vectorCount(spark, dir)
     (0 until PqSubspaces).map { s =>
       val train = trainSample(pqBase(spark, dir, s), n,
         IvfTrainPerCentroid.toLong * PqK)
@@ -1462,18 +1341,6 @@ object Similarity {
     }.reduce(_ unionByName _)
   }
 
-  /** Asymmetric-distance (ADC) top-k over the PQ codes: the query stays
-    * full-precision, every database vector is its 4 codebook ids, and the
-    * score is the sum of 4 lookup-table entries —
-    * `Σ_s dot(q_s, centroid[code_s(x)])`, the PQ approximation of the
-    * full dot product.
-    *
-    * Shape: the lookup tables are Q×m×k rows (20×4×16 here) built by a
-    * tiny crossJoin and BROADCAST; the database side touches only its
-    * 2-byte codes — the scan the 128× compression buys. Per-subspace
-    * contributions are floor(·1e6)-quantized BIGINTs so the 4-way sum is
-    * order-free exact (the BM25 discipline); ranking ties break on
-    * neighbor id. */
   /** The PQ code table `(vec_id, subspace, centroid_id)` — encode-on-write:
     * one assignment pass per subspace against the (broadcast) trained
     * codebooks. This is the BUILD pass; [[IvfIndex.pqCodes]] materializes
@@ -1490,9 +1357,49 @@ object Similarity {
         .select("vec_id", "subspace", "centroid_id")
     }.reduce(_ unionByName _)
 
+  /** Subspace `s`'s query lookup table `(query_id, subspace, centroid_id,
+    * dot_q)`: every pinned query's slice dotted with each of the
+    * (broadcast) codebook's centroids, floor(·1e6)-quantized — Q×k rows. */
+  private def pqQueryTable(spark: SparkSession, dir: String, book: DataFrame,
+      s: Int): DataFrame =
+    pqBase(spark, dir, s).filter(annQueryFilter)
+      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"))
+      .crossJoin(broadcast(
+        book.select(col("centroid_id"), col("c_vec").as("b_vec"))))
+      .select(col("query_id"), lit(s).as("subspace"), col("centroid_id"),
+        floor(expr(dotExpr) * 1e6).cast("bigint").as("dot_q"))
+
+  /** ADC cosine of `(query_id, neighbor_id, dot_q, cn_q)` contributions:
+    * the BIGINT sums are order-free, and the denominator pairs the
+    * full-precision query norm with the reconstructed (code-word)
+    * database norm — ADC approximates COSINE, the family's ranking
+    * objective (raw dot would rank by vector length). */
+  private def adcCosine(spark: SparkSession, dir: String,
+      contrib: DataFrame): DataFrame = {
+    val qn = withNorm(spark, dir).filter(annQueryFilter)
+      .select(col("vec_id").as("query_id"), col("nrm").as("q_nrm"))
+    contrib.groupBy("query_id", "neighbor_id")
+      .agg(sum(col("dot_q")).as("score_q"), sum(col("cn_q")).as("recon_q"))
+      .join(broadcast(qn), Seq("query_id"))
+      .withColumn("adc_cosine",
+        (col("score_q") / lit(1e6)) /
+          (sqrt(col("q_nrm")) * sqrt(col("recon_q") / lit(1e6))))
+  }
+
+  /** Asymmetric-distance (ADC) top-k over the PQ codes: the query stays
+    * full-precision, every database vector is its 4 codebook ids, and the
+    * score is the sum of 4 lookup-table entries —
+    * `Σ_s dot(q_s, centroid[code_s(x)])`, the PQ approximation of the
+    * full dot product.
+    *
+    * Shape: the lookup tables are Q×m×k rows (20×4×16 here) built by a
+    * tiny crossJoin and BROADCAST; the database side touches only its
+    * 2-byte codes — the scan the 128× compression buys. Per-subspace
+    * contributions are floor(·1e6)-quantized BIGINTs so the 4-way sum is
+    * order-free exact (the BM25 discipline); ranking ties break on
+    * neighbor id. */
   def annPqAdc(spark: SparkSession, dir: String, k: Int = 5,
       codebooks: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // train-once / serve-many: codebooks AND codes come from the
     // materialized index cache (one Lloyd training + one encode pass per
     // corpus fingerprint), not per-query passes — same lifecycle as
@@ -1511,34 +1418,12 @@ object Similarity {
         .join(broadcast(book.select(col("centroid_id"),
           floor(col("c_nrm") * 1e6).cast("bigint").as("cn_q"))),
           Seq("centroid_id"))
-      val qtab = pqBase(spark, dir, s).filter(annQueryFilter)
-        .select(col("vec_id").as("query_id"), col("vec").as("a_vec"))
-        .crossJoin(broadcast(
-          book.select(col("centroid_id"), col("c_vec").as("b_vec"))))
-        .select(col("query_id"), col("centroid_id"),
-          floor(expr(dotExpr) * 1e6).cast("bigint").as("dot_q"))
-      codes.join(broadcast(qtab), Seq("centroid_id"))
+      codes.join(broadcast(pqQueryTable(spark, dir, book, s)), Seq("centroid_id"))
         .filter(col("query_id") =!= col("vec_id"))
         .select(col("query_id"), col("vec_id").as("neighbor_id"),
           col("dot_q"), col("cn_q"))
     }
-    // full-precision query norms: ADC approximates COSINE (the family's
-    // ranking objective — raw dot would rank by vector length), so the
-    // numerator is the table-sum dot and the denominator uses the
-    // reconstructed (code-word) database norm
-    val qn = withNorm(spark, dir).filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    perSub.reduce(_ unionByName _)
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("dot_q")).as("score_q"), sum(col("cn_q")).as("recon_q"))
-      .join(broadcast(qn), Seq("query_id"))
-      .withColumn("adc_cosine",
-        (col("score_q") / lit(1e6)) /
-          (sqrt(col("q_nrm")) * sqrt(col("recon_q") / lit(1e6))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(adcCosine(spark, dir, perSub.reduce(_ unionByName _)), "adc_cosine", k)
       .select("query_id", "neighbor_id", "rank", "adc_cosine")
   }
 
@@ -1548,10 +1433,33 @@ object Similarity {
     * a sliced float array), then codes, lookup tables, and the quantized
     * 4-way sum. */
   def annPqAdcOracle(k: Int = 5): String = {
-    def sub(s: Int): String = {
-      val lo = s * PqSubDim + 1
-      val hi = (s + 1) * PqSubDim
-      s"""sub_p$s AS (
+    s"""WITH $pqCtesDuck,
+    scored AS (
+      SELECT query_id, neighbor_id, sum(dot_q) AS score_q,
+        sum(cn_q) AS recon_q
+      FROM ($pqContribsDuck)
+      GROUP BY 1, 2),
+    cos AS (
+      SELECT s.query_id, s.neighbor_id,
+        (s.score_q / 1e6) / (sqrt(q.q_nrm) * sqrt(s.recon_q / 1e6))
+          AS adc_cosine
+      FROM scored s JOIN qn q USING (query_id)),
+    ranked AS (
+      SELECT *, row_number() OVER (PARTITION BY query_id
+        ORDER BY adc_cosine DESC, neighbor_id) AS rank
+      FROM cos)
+    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adc_cosine
+    FROM ranked WHERE rank <= $k"""
+  }
+
+  /** PQ subspace `s` in DuckDB SQL: the sliced subvectors, the same
+    * train/init/iterate CTEs as the IVF oracle (slicing a widened double
+    * array equals widening a sliced float array), the codes, the query
+    * lookup table and the per-pair quantized contributions. */
+  private def pqSubCtesDuck(s: Int): String = {
+    val lo = s * PqSubDim + 1
+    val hi = (s + 1) * PqSubDim
+    s"""sub_p$s AS (
       SELECT vec_id, fullvec[$lo:$hi] AS vec FROM pqbase),
     normed_p$s AS (
       SELECT vec_id, vec, $normSqlDuck AS nrm FROM sub_p$s),
@@ -1563,7 +1471,8 @@ object Similarity {
       SELECT vec_id AS centroid_id, vec AS c_vec, nrm AS c_nrm FROM (
         SELECT *, row_number() OVER (ORDER BY vec_id) AS rn FROM train_p$s)
       WHERE rn <= $PqK),
-    ${(1 to IvfIters).map(i => pqIterCte(s, i)).mkString(",\n    ")},
+    ${(1 to IvfIters).map(kmeansIterCteDuck(s"_p$s", s"${PqSubDim + 1}"))
+      .mkString(",\n    ")},
     ${assignCteDuck(s"codes_p$s", s"cents${IvfIters}_p$s", s"normed_p$s")},
     qtab_p$s AS (
       SELECT q.vec_id AS query_id, c.centroid_id,
@@ -1579,8 +1488,12 @@ object Similarity {
       JOIN cents${IvfIters}_p$s c ON c.centroid_id = d.centroid_id
       JOIN qtab_p$s t ON d.centroid_id = t.centroid_id
       WHERE t.query_id != d.vec_id)"""
-    }
-    s"""WITH pqbase AS (
+  }
+
+  /** The PQ prelude both PQ oracles open with: the full vectors, the
+    * corpus count, full-precision query norms, and every subspace. */
+  private def pqCtesDuck: String =
+    s"""pqbase AS (
       SELECT vec_id, embedding::DOUBLE[] AS fullvec FROM embeddings),
     pqnn AS (SELECT count(*) AS nn FROM embeddings),
     qn AS (
@@ -1588,61 +1501,13 @@ object Similarity {
         list_reduce(list_transform(range(1, len(fullvec) + 1),
           i -> fullvec[i] * fullvec[i]), (x, y) -> x + y) AS q_nrm
       FROM pqbase WHERE vec_id IN ($annQueryIdsSql)),
-    ${(0 until PqSubspaces).map(sub).mkString(",\n    ")},
-    scored AS (
-      SELECT query_id, neighbor_id, sum(dot_q) AS score_q,
-        sum(cn_q) AS recon_q
-      FROM (${(0 until PqSubspaces).map(s => s"SELECT * FROM contrib_p$s")
-        .mkString(" UNION ALL ")})
-      GROUP BY 1, 2),
-    cos AS (
-      SELECT s.query_id, s.neighbor_id,
-        (s.score_q / 1e6) / (sqrt(q.q_nrm) * sqrt(s.recon_q / 1e6))
-          AS adc_cosine
-      FROM scored s JOIN qn q USING (query_id)),
-    ranked AS (
-      SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY adc_cosine DESC, neighbor_id) AS rank
-      FROM cos)
-    SELECT query_id, neighbor_id, CAST(rank AS INTEGER) AS rank, adc_cosine
-    FROM ranked WHERE rank <= $k"""
-  }
+    ${(0 until PqSubspaces).map(pqSubCtesDuck).mkString(",\n    ")}"""
 
-  /** One Lloyd iteration for subspace `s` — [[kmeansIterCteDuck]] with
-    * suffixed CTE names and the subspace dimensionality. */
-  private def pqIterCte(s: Int, i: Int): String =
-    s"""${assignCteDuck(s"a${i}_p$s", s"cents${i - 1}_p$s", s"train_p$s")},
-    sums${i}_p$s AS (
-      SELECT a.centroid_id, t.i AS pos,
-        sum(CAST(round(n.vec[t.i] * 1000000.0) AS BIGINT)) AS s,
-        count(*) AS n
-      FROM a${i}_p$s a JOIN train_p$s n USING (vec_id)
-      CROSS JOIN range(1, ${PqSubDim + 1}) t(i)
-      GROUP BY 1, 2),
-    cvec${i}_p$s AS (
-      SELECT centroid_id,
-        list((CAST(s AS DOUBLE) / 1000000.0) / n ORDER BY pos) AS c_vec
-      FROM sums${i}_p$s GROUP BY 1),
-    cents${i}_p$s AS (
-      SELECT centroid_id, c_vec,
-        list_reduce(list_transform(range(1, len(c_vec) + 1),
-          i -> c_vec[i] * c_vec[i]), (x, y) -> x + y) AS c_nrm
-      FROM cvec${i}_p$s)"""
+  /** Union of the per-subspace contributions, summed into ADC scores. */
+  private def pqContribsDuck: String =
+    (0 until PqSubspaces).map(s => s"SELECT * FROM contrib_p$s")
+      .mkString(" UNION ALL ")
 
-  /** Reciprocal-rank fusion (Cormack/Clarke/Büttcher, SIGIR 2009) of two
-    * rankers over the same pinned query set: the exact float ranker
-    * ([[annTopK]]) and the compressed int8 ranker ([[annInt8TopK]]).
-    * `rrf = Σ_rankers 1/(60 + rank)`, absent → no contribution; rerank by
-    * fused score, ties on neighbor id. THE standard hybrid-retrieval
-    * combiner (lexical+vector in production; two vector rankers here —
-    * [[Search.bm25TopK]]'s term queries live in a different query-id
-    * space, so fusing it would be a type error, not a design win).
-    *
-    * Determinism: ranks are integers, each contribution is one
-    * correctly-rounded division, and the sum is two fixed-order adds —
-    * no quantization needed. Scale: a full-outer equi-join of two
-    * (Q·k)-row lists + one rank window — negligible next to the rankers
-    * themselves. */
   /** Positives per query / hard-negative depth / random negatives for
     * [[annNegatives]]. */
   val NegPosK = 5
@@ -1662,11 +1527,8 @@ object Similarity {
     * one anti-join against the Q·[[NegHardK]]-row top table, and a
     * per-query bottom-k window. */
   def annNegatives(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val top = annTopK(spark, dir, NegHardK)
       .select("query_id", "neighbor_id", "rank")
-    val pos = top.filter(col("rank") <= NegPosK).withColumn("kind", lit("pos"))
-    val hard = top.filter(col("rank") > NegPosK).withColumn("kind", lit("hard"))
     val ids = embeddings(spark, dir).select("vec_id")
     val cand = ids.filter(annQueryFilter)
       .select(col("vec_id").as("query_id"))
@@ -1676,6 +1538,18 @@ object Similarity {
         Seq("query_id", "neighbor_id"), "left_anti")
       .withColumn("h", md5(concat(col("query_id").cast("string"), lit(":"),
         col("neighbor_id").cast("string"))))
+    negativesFrom(top, cand)
+  }
+
+  /** The (anchor, kind, rank, neighbor) table both negatives rows emit:
+    * `top` is a `(query_id, neighbor_id, rank)` list to [[NegHardK]]
+    * (ranks ≤ [[NegPosK]] are positives, the rest hard negatives); `cand`
+    * is the random-negative pool already anti-joined against `top`, with
+    * an ordering hash `h` — its first [[NegRandK]] rows per anchor by
+    * (h, neighbor_id) are the random negatives. */
+  private def negativesFrom(top: DataFrame, cand: DataFrame): DataFrame = {
+    val pos = top.filter(col("rank") <= NegPosK).withColumn("kind", lit("pos"))
+    val hard = top.filter(col("rank") > NegPosK).withColumn("kind", lit("hard"))
     val w = Window.partitionBy("query_id").orderBy("h", "neighbor_id")
     val rand = cand.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= NegRandK)
@@ -1754,11 +1628,8 @@ object Similarity {
     * identical to [[annNegatives]] (the exact twin kept as the baseline
     * this row's recall economics are measured against). */
   def annNegativesIndexed(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val top = annIvfAdcRerank(spark, dir, k = NegHardK)
       .select("query_id", "neighbor_id", "rank")
-    val pos = top.filter(col("rank") <= NegPosK).withColumn("kind", lit("pos"))
-    val hard = top.filter(col("rank") > NegPosK).withColumn("kind", lit("hard"))
     val queries = embeddings(spark, dir).filter(annQueryFilter)
       .select(col("vec_id").as("query_id"))
     val cand = queries
@@ -1769,13 +1640,7 @@ object Similarity {
         .cast("long"))
       .join(broadcast(top.select("query_id", "neighbor_id")),
         Seq("query_id", "neighbor_id"), "left_anti")
-    val w = Window.partitionBy("query_id").orderBy("h", "neighbor_id")
-    val rand = cand.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= NegRandK)
-      .withColumn("kind", lit("rand"))
-      .select("query_id", "neighbor_id", "rank", "kind")
-    pos.unionByName(hard).unionByName(rand)
-      .select("query_id", "kind", "rank", "neighbor_id")
+    negativesFrom(top, cand)
   }
 
   /** Oracle: the [[annIvfAdcRerankOracle]] composition (nested WITH
@@ -1813,6 +1678,16 @@ object Similarity {
     UNION ALL
     SELECT query_id, kind, rank, neighbor_id FROM rnd"""
 
+  /** The training-free approximate rankers [[annRecallReport]] and
+    * [[annMrr]] audit against the exact baseline — the ones whose
+    * oracles replay without a Lloyd loop. */
+  private def auditVariants(spark: SparkSession,
+      dir: String): Seq[(String, DataFrame)] = Seq(
+    "int8" -> annInt8TopK(spark, dir),
+    "lsh" -> annLshTopK(spark, dir),
+    "lsh_multiprobe" -> annLshMultiProbeTopK(spark, dir),
+    "rp" -> annRpTopK(spark, dir))
+
   /** Index-quality audit: overlap@k of each TRAINING-FREE approximate
     * ranker against the exact baseline, as an oracle-checked table —
     * the recall report a retrieval deployment watches after every index
@@ -1827,12 +1702,7 @@ object Similarity {
     val keys = Seq("query_id", "neighbor_id")
     val exact = annTopK(spark, dir).select(keys.map(col): _*)
     val exactPairs = exact.agg(count(lit(1)).as("exact_pairs"))
-    val variants = Seq(
-      "int8" -> annInt8TopK(spark, dir),
-      "lsh" -> annLshTopK(spark, dir),
-      "lsh_multiprobe" -> annLshMultiProbeTopK(spark, dir),
-      "rp" -> annRpTopK(spark, dir))
-    variants.map { case (name, df) =>
+    auditVariants(spark, dir).map { case (name, df) =>
       df.select(keys.map(col): _*).join(exact, keys)
         .agg(count(lit(1)).as("hits"))
         .select(lit(name).as("variant"), col("hits"))
@@ -1886,12 +1756,7 @@ object Similarity {
     val truth = annTopK(spark, dir).filter(col("rank") === 1)
       .select(col("query_id"), col("neighbor_id"))
     val nQ = truth.agg(count(lit(1)).as("n_queries"))
-    val variants = Seq(
-      "int8" -> annInt8TopK(spark, dir),
-      "lsh" -> annLshTopK(spark, dir),
-      "lsh_multiprobe" -> annLshMultiProbeTopK(spark, dir),
-      "rp" -> annRpTopK(spark, dir))
-    variants.map { case (name, df) =>
+    auditVariants(spark, dir).map { case (name, df) =>
       df.select(col("query_id"), col("neighbor_id"), col("rank"))
         .join(truth, Seq("query_id", "neighbor_id"))
         .agg(count(lit(1)).as("found"),
@@ -1927,21 +1792,31 @@ object Similarity {
       v.rr_q * 1.0 / ($MrrQuant * nq.n_queries) AS mrr
     FROM v, nq"""
 
+  /** Reciprocal-rank fusion (Cormack/Clarke/Büttcher, SIGIR 2009) of two
+    * rankers over the same pinned query set: the exact float ranker
+    * ([[annTopK]]) and the compressed int8 ranker ([[annInt8TopK]]).
+    * `rrf = Σ_rankers 1/(60 + rank)`, absent → no contribution; rerank by
+    * fused score, ties on neighbor id. THE standard hybrid-retrieval
+    * combiner (lexical+vector in production; two vector rankers here —
+    * [[Search.bm25TopK]]'s term queries live in a different query-id
+    * space, so fusing it would be a type error, not a design win).
+    *
+    * Determinism: ranks are integers, each contribution is one
+    * correctly-rounded division, and the sum is two fixed-order adds —
+    * no quantization needed. Scale: a full-outer equi-join of two
+    * (Q·k)-row lists + one rank window — negligible next to the rankers
+    * themselves. */
   def annRrfFusion(spark: SparkSession, dir: String,
       inputK: Int = 10, k: Int = 5, rrfK: Int = 60): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val a = annTopK(spark, dir, inputK)
       .select(col("query_id"), col("neighbor_id"), col("rank").as("rank_exact"))
     val b = annInt8TopK(spark, dir, inputK)
       .select(col("query_id"), col("neighbor_id"), col("rank").as("rank_int8"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("rrf").desc, col("neighbor_id"))
-    a.join(b, Seq("query_id", "neighbor_id"), "full_outer")
+    val fused = a.join(b, Seq("query_id", "neighbor_id"), "full_outer")
       .withColumn("rrf",
         coalesce(lit(1.0) / (lit(rrfK) + col("rank_exact")), lit(0.0)) +
         coalesce(lit(1.0) / (lit(rrfK) + col("rank_int8")), lit(0.0)))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    topK(fused, "rrf", k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("rrf"))
   }
 
@@ -2046,44 +1921,20 @@ object Similarity {
     * cosine is the cross-engine bit-exact fold — so the C-cut and the
     * final ranking are stable across engines. */
   def annIvfAdcRerank(spark: SparkSession, dir: String, k: Int = 5,
-      nprobe: Int = IvfRerankNProbe, c: Int = RerankC,
-      centroids: Option[DataFrame] = None,
-      codebooks: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      nprobe: Int = IvfRerankNProbe, c: Int = RerankC): DataFrame = {
     val base = withNorm(spark, dir)
-    val cents = centroids.getOrElse(IvfIndex.centroids(spark, dir))
-    val books = codebooks.getOrElse(IvfIndex.pqCodebooks(spark, dir))
-    // codes WITH their IVF list id: the cached table carries ivf_centroid
-    // AT REST (co-materialized and partitioned by the index build —
-    // IvfIndex.pqCodes), so the default path never joins two corpus-sized
-    // tables at query time. The explicit-frames path (tests) re-derives
-    // the same shape inline.
-    val codesWithIvf = (centroids, codebooks) match {
-      case (None, None) => IvfIndex.pqCodes(spark, dir)
-      case _ =>
-        val lists = centroids match {
-          case Some(cs) => buildIvfLists(spark, dir, cs)
-          case None => IvfIndex.lists(spark, dir)
-        }
-        pqAssignCodes(spark, dir, books)
-          .join(lists.select(col("vec_id"),
-            col("centroid_id").as("ivf_centroid")), Seq("vec_id"))
-    }
+    val cents = IvfIndex.centroids(spark, dir)
+    val books = IvfIndex.pqCodebooks(spark, dir)
     // probe selection: Q queries × k broadcast centroids, keep nprobe
-    val pw = Window.partitionBy("vec_id")
-      .orderBy(col("dist"), col("centroid_id"))
-    val probes = base.filter(annQueryFilter)
-      .crossJoin(broadcast(cents))
-      .withColumn("dist",
-        col("nrm") - lit(2) * expr("vec_dot(vec, c_vec)") + col("c_nrm"))
-      .withColumn("probe", row_number().over(pw))
-      .filter(col("probe") <= nprobe)
+    val probes = nearestLists(base.filter(annQueryFilter), cents, nprobe)
       .select(col("vec_id").as("query_id"),
         col("centroid_id").as("ivf_centroid"))
-    // candidate generation: ONE scan of the partitioned code table,
-    // restricted FIRST — the broadcast probe join dynamic-partition-prunes
-    // the scan to the nprobe probed list directories
-    val cand = codesWithIvf.join(broadcast(probes), Seq("ivf_centroid"))
+    // candidate generation: ONE scan of the code table, which carries
+    // ivf_centroid AT REST (co-materialized and partitioned by the index
+    // build), so no two corpus-sized tables join at query time; the
+    // broadcast probe join dynamic-partition-prunes the scan to the
+    // nprobe probed list directories
+    val cand = IvfIndex.pqCodes(spark, dir).join(broadcast(probes), Seq("ivf_centroid"))
       .filter(col("query_id") =!= col("vec_id"))
     // ADC scoring over the pruned candidates is a chain of broadcast
     // lookups: per-subspace codebook norms (m×k rows) and the Q×m×k query
@@ -2092,47 +1943,19 @@ object Similarity {
     val bookNorms = books.select(col("subspace"), col("centroid_id"),
       floor(col("c_nrm") * 1e6).cast("bigint").as("cn_q"))
     val qtab = (0 until PqSubspaces).map { s =>
-      val book = books.filter(col("subspace") === s).drop("subspace")
-      pqBase(spark, dir, s).filter(annQueryFilter)
-        .select(col("vec_id").as("query_id"), col("vec").as("a_vec"))
-        .crossJoin(broadcast(
-          book.select(col("centroid_id"), col("c_vec").as("b_vec"))))
-        .select(col("query_id"), lit(s).as("subspace"), col("centroid_id"),
-          floor(expr(dotExpr) * 1e6).cast("bigint").as("dot_q"))
+      pqQueryTable(spark, dir,
+        books.filter(col("subspace") === s).drop("subspace"), s)
     }.reduce(_ unionByName _)
     val contrib = cand
       .join(broadcast(bookNorms), Seq("subspace", "centroid_id"))
       .join(broadcast(qtab), Seq("query_id", "subspace", "centroid_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("dot_q"), col("cn_q"))
-    val qn = base.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("nrm").as("q_nrm"))
-    val cw = Window.partitionBy("query_id")
-      .orderBy(col("adc_cosine").desc, col("neighbor_id"))
-    val topc = contrib
-      .groupBy("query_id", "neighbor_id")
-      .agg(sum(col("dot_q")).as("score_q"), sum(col("cn_q")).as("recon_q"))
-      .join(broadcast(qn), Seq("query_id"))
-      .withColumn("adc_cosine",
-        (col("score_q") / lit(1e6)) /
-          (sqrt(col("q_nrm")) * sqrt(col("recon_q") / lit(1e6))))
-      .withColumn("crank", row_number().over(cw))
-      .filter(col("crank") <= c)
+    val topc = topK(adcCosine(spark, dir, contrib), "adc_cosine", c, "crank")
       .select("query_id", "neighbor_id")
     // exact rerank: Q×C surviving ids broadcast against the float table
-    val qf = base.filter(annQueryFilter)
-      .select(col("vec_id").as("query_id"), col("vec").as("a_vec"),
-        col("nrm").as("na"))
-    val nf = base.select(col("vec_id").as("neighbor_id"),
-      col("vec").as("b_vec"), col("nrm").as("nb"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    nf.join(broadcast(topc), Seq("neighbor_id"))
-      .join(broadcast(qf), Seq("query_id"))
-      .withColumn("cosine", expr(dotExpr) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "cosine")
+    rankByCosine(candidateSide(base).join(broadcast(topc), Seq("neighbor_id"))
+      .join(broadcast(querySide(base.filter(annQueryFilter))), Seq("query_id")), k)
   }
 
   /** The composed oracle: IVF training/assignment CTEs (probe set at
@@ -2142,47 +1965,9 @@ object Similarity {
     * oracles it is composed from. */
   def annIvfAdcRerankOracle(k: Int = 5, nprobe: Int = IvfRerankNProbe,
       c: Int = RerankC): String = {
-    def sub(s: Int): String = {
-      val lo = s * PqSubDim + 1
-      val hi = (s + 1) * PqSubDim
-      s"""sub_p$s AS (
-      SELECT vec_id, fullvec[$lo:$hi] AS vec FROM pqbase),
-    normed_p$s AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM sub_p$s),
-    train_p$s AS (
-      SELECT n.* FROM normed_p$s n, pqnn t
-      WHERE ${u16SqlDuck("n.vec_id")} * t.nn
-              < 65536 * ($IvfTrainPerCentroid * $PqK)),
-    cents0_p$s AS (
-      SELECT vec_id AS centroid_id, vec AS c_vec, nrm AS c_nrm FROM (
-        SELECT *, row_number() OVER (ORDER BY vec_id) AS rn FROM train_p$s)
-      WHERE rn <= $PqK),
-    ${(1 to IvfIters).map(i => pqIterCte(s, i)).mkString(",\n    ")},
-    ${assignCteDuck(s"codes_p$s", s"cents${IvfIters}_p$s", s"normed_p$s")},
-    qtab_p$s AS (
-      SELECT q.vec_id AS query_id, c.centroid_id,
-        CAST(floor(list_reduce(list_transform(range(1, len(q.vec) + 1),
-          i -> q.vec[i] * c.c_vec[i]), (x, y) -> x + y) * 1e6) AS BIGINT)
-          AS dot_q
-      FROM normed_p$s q CROSS JOIN cents${IvfIters}_p$s c
-      WHERE q.vec_id IN ($annQueryIdsSql)),
-    contrib_p$s AS (
-      SELECT t.query_id, d.vec_id AS neighbor_id, t.dot_q,
-        CAST(floor(c.c_nrm * 1e6) AS BIGINT) AS cn_q
-      FROM codes_p$s d
-      JOIN cents${IvfIters}_p$s c ON c.centroid_id = d.centroid_id
-      JOIN qtab_p$s t ON d.centroid_id = t.centroid_id
-      WHERE t.query_id != d.vec_id)"""
-    }
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
+    $ivfAssignedCtesDuck,
     probes AS (
       SELECT vec_id AS query_id, centroid_id FROM (
         SELECT n.vec_id, c.centroid_id,
@@ -2196,20 +1981,11 @@ object Similarity {
       SELECT p.query_id, a.vec_id AS neighbor_id
       FROM assigned a JOIN probes p USING (centroid_id)
       WHERE p.query_id != a.vec_id),
-    pqbase AS (
-      SELECT vec_id, embedding::DOUBLE[] AS fullvec FROM embeddings),
-    pqnn AS (SELECT count(*) AS nn FROM embeddings),
-    qn AS (
-      SELECT vec_id AS query_id,
-        list_reduce(list_transform(range(1, len(fullvec) + 1),
-          i -> fullvec[i] * fullvec[i]), (x, y) -> x + y) AS q_nrm
-      FROM pqbase WHERE vec_id IN ($annQueryIdsSql)),
-    ${(0 until PqSubspaces).map(sub).mkString(",\n    ")},
+    $pqCtesDuck,
     scored AS (
       SELECT u.query_id, u.neighbor_id, sum(u.dot_q) AS score_q,
         sum(u.cn_q) AS recon_q
-      FROM (${(0 until PqSubspaces).map(s => s"SELECT * FROM contrib_p$s")
-        .mkString(" UNION ALL ")}) u
+      FROM ($pqContribsDuck) u
       JOIN cand USING (query_id, neighbor_id)
       GROUP BY 1, 2),
     topc AS (
@@ -2255,7 +2031,6 @@ object Similarity {
     * ordering tie-broken by vec_id; tiny clusters (size < 4) prune
     * nothing by construction. */
   def prototypePrune(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val lists = IvfIndex.lists(spark, dir)
     val cents = IvfIndex.centroids(spark, dir)
     val w = Window.partitionBy("centroid_id")
@@ -2278,13 +2053,7 @@ object Similarity {
   def prototypePruneOracle(): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
+    $ivfAssignedCtesDuck,
     scored AS (
       SELECT n.vec_id, a.centroid_id,
         list_reduce(list_transform(range(1, len(n.vec) + 1),
@@ -2322,7 +2091,6 @@ object Similarity {
     * quantizer ([[IvfIndex.lists]]); the cap is one row_number window
     * per cluster — cluster-parallel, nothing pairwise, no global sort. */
   def clusterCap(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("centroid_id")
     IvfIndex.lists(spark, dir)
       .withColumn("cap_key",
@@ -2339,13 +2107,7 @@ object Similarity {
   def clusterCapOracle(): String =
     s"""WITH base AS (
       SELECT vec_id, embedding::DOUBLE[] AS vec FROM embeddings),
-    normed AS (
-      SELECT vec_id, vec, $normSqlDuck AS nrm FROM base),
-    params AS (
-      SELECT ${ivfKSqlDuck("count(*)")} AS k FROM embeddings),
-    $trainCtesDuck,
-    ${(1 to IvfIters).map(kmeansIterCteDuck).mkString(",\n    ")},
-    ${assignCteDuck("assigned", s"cents$IvfIters")},
+    $ivfAssignedCtesDuck,
     ranked AS (
       SELECT vec_id, centroid_id,
         row_number() OVER (PARTITION BY centroid_id

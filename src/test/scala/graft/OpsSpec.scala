@@ -40,6 +40,38 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("ann ranking contract: every pinned-query serving path ranks 1..m " +
+      "(m <= k) without self pairs, by score descending then neighbor id") {
+    val k = 5
+    val paths = Seq(
+      ("exact", Similarity.annTopK(spark, Sf0001, k), "cosine"),
+      ("rp", Similarity.annRpTopK(spark, Sf0001, k), "cosine"),
+      ("lsh", Similarity.annLshTopK(spark, Sf0001, k), "cosine"),
+      ("lsh_multiprobe", Similarity.annLshMultiProbeTopK(spark, Sf0001, k), "cosine"),
+      ("ivf", Similarity.annIvfTopK(spark, Sf0001, k), "cosine"),
+      ("ivf_multiprobe", Similarity.annIvfMultiProbeTopK(spark, Sf0001, k), "cosine"),
+      ("filtered", Similarity.annIvfTopKFiltered(spark, Sf0001, k), "cosine"),
+      ("int8", Similarity.annInt8TopK(spark, Sf0001, k), "cosine"),
+      ("pq_adc", Similarity.annPqAdc(spark, Sf0001, k), "adc_cosine"),
+      ("rerank", Similarity.annIvfAdcRerank(spark, Sf0001, k), "cosine"))
+    for ((name, df, score) <- paths) {
+      val rows = df.select(col("query_id"), col("neighbor_id"), col("rank"),
+        col(score)).as[(Long, Long, Int, Double)].collect()
+      assert(rows.nonEmpty, s"$name: no rows")
+      rows.groupBy(_._1).foreach { case (q, rs) =>
+        val ranked = rs.sortBy(_._3).toSeq
+        assert(ranked.map(_._3) == (1 to ranked.size) && ranked.size <= k,
+          s"$name q=$q: ranks ${ranked.map(_._3)} are not 1..m with m <= $k")
+        assert(!ranked.exists(_._2 == q), s"$name q=$q: self pair")
+        ranked.zip(ranked.drop(1)).foreach { case (a, b) =>
+          assert(a._4 > b._4 || (a._4 == b._4 && a._2 < b._2),
+            s"$name q=$q: rank ${a._3} (${a._2}, ${a._4}) must precede " +
+              s"rank ${b._3} (${b._2}, ${b._4})")
+        }
+      }
+    }
+  }
+
   test("vec_dot matches the interpreted HOF fold bit-for-bit") {
     // the contract (and the DuckDB oracle's DOUBLE[] cast) widens each
     // element BEFORE multiplying — a float×float product would round to

@@ -617,9 +617,18 @@ class PlanSpec extends SparkSpec {
     // O(n log n) window sort. At 100 TB this is the difference between
     // the ANN ranking being a heap scan and being a giant sort; pin it so
     // a rewrite of the rank/filter shape cannot silently lose it.
-    for (df <- Seq(graft.ops.Similarity.annTopK(spark, Sf0001),
-        graft.ops.Similarity.annLshTopK(spark, Sf0001),
-        graft.ops.Similarity.annIvfTopK(spark, Sf0001)))
+    import graft.ops.Similarity
+    for (df <- Seq(Similarity.annTopK(spark, Sf0001),
+        Similarity.annRpTopK(spark, Sf0001),
+        Similarity.annLshTopK(spark, Sf0001),
+        Similarity.annLshMultiProbeTopK(spark, Sf0001),
+        Similarity.annIvfTopK(spark, Sf0001),
+        Similarity.annIvfMultiProbeTopK(spark, Sf0001),
+        Similarity.annIvfTopKFiltered(spark, Sf0001),
+        Similarity.annInt8TopK(spark, Sf0001),
+        Similarity.annPqAdc(spark, Sf0001),
+        Similarity.annIvfAdcRerank(spark, Sf0001),
+        Similarity.annRrfFusion(spark, Sf0001)))
       assert(plan(df).contains("WindowGroupLimit"), plan(df).take(400))
   }
 
