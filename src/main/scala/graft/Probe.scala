@@ -83,8 +83,7 @@ object Probe {
       try graft.ops.IncrementalDedup.steadyStore(spark, sfDir)
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"probe steady-store prebuild failed: $e") }
-    if (names.exists(_.startsWith("dq_")) &&
-        graft.quality.SilverStage.enabled(spark))
+    if (names.exists(_.startsWith("dq_")))
       try { graft.quality.SilverStage.tables(spark, sfDir); () }
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"probe dq prebuild failed: $e") }

@@ -55,11 +55,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * owns the previous generation, which is released as soon as the next
   * one is pinned.
   *
-  * Parquet-staged pins own no executor storage. Their files are
-  * job-scoped: they must outlive every read of the returned frame (the
-  * whole action), so nothing here deletes them mid-run — a deployment
-  * points [[DirKey]] at a per-run scratch location and recycles the
-  * directory between runs ([[clear]] is the explicit form).
+  * Parquet-staged pins (made only under [[DirKey]]) own no executor
+  * storage. Their files are job-scoped: they must outlive every read of
+  * the returned frame (the whole action), so nothing here deletes them
+  * mid-run — a deployment points [[DirKey]] at a per-run scratch
+  * location and recycles the directory between runs ([[clear]] is the
+  * explicit form).
   */
 object Stage {
 
@@ -68,14 +69,6 @@ object Stage {
   val DirKey = "spark.graft.stage.dir"
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Local-fallback stage directories created by [[pinColumnar]] this
-    * JVM — tracked so [[clear]] (and the JVM-exit hook) can delete them;
-    * without the per-run clear, a long-lived session repeatedly
-    * evaluating dq summaries accumulates tmp-disk for the process
-    * lifetime. */
-  private val localStages =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** The creating thread's open [[scoped]] blocks, innermost first: the
     * `localCheckpoint` pins each one owns, by RDD id. */
@@ -112,42 +105,6 @@ object Stage {
       case Some(dir) => staged(df, stagePath(df.sparkSession, dir))
       case None => own(df.localCheckpoint())
     }
-
-  /** Like [[pin]], but ALWAYS stages through parquet — for WIDE frames
-    * with MANY NARROW consumers, where a columnar stage preserves the
-    * column pruning a row-oriented `localCheckpoint` block cannot: each
-    * dq check branch reads 1–3 columns of the pinned silver tables, and
-    * at 100× deserializing full rows per branch measured 2× WORSE than
-    * re-deriving the chains (dq_summary 71→155 s), while the columnar
-    * stage beats both. Uses the configured scratch dir when set; on a
-    * single-JVM (`local[n]`) session it falls back to a shared
-    * shutdown-hook-cleaned tmpdir, and on a multi-executor session with
-    * NO scratch dir it degrades to `localCheckpoint` — a driver-local
-    * tmpdir is unreadable from remote executors, and a correct
-    * row-oriented stage beats a columnar one that loses rows. For frames
-    * whose consumers read every column (RangeRank's range stage),
-    * [[pin]]'s default backend stays the cheaper choice. */
-  def pinColumnar(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    scratchDir(spark) match {
-      case Some(dir) => staged(df, stagePath(spark, dir))
-      case None if spark.sparkContext.isLocal =>
-        // single-JVM fallback: a shutdown-hook-cleaned tmpdir — every
-        // executor IS the driver, so a driver-local path is readable
-        val path = s"$localScratch/stage-${counter.incrementAndGet()}"
-        val out = staged(df, path)
-        localStages.add(path)
-        out
-      case None =>
-        // multi-executor with no configured scratch dir: a driver-local
-        // tmpdir is NOT readable from the executors (file:// resolves to
-        // each machine's own disk) — fall back to the row-oriented but
-        // universally-correct localCheckpoint rather than produce a
-        // stage that loses rows; configure DirKey to get the columnar
-        // form on a cluster
-        own(df.localCheckpoint())
-    }
-  }
 
   private def staged(df: DataFrame, path: String): DataFrame = {
     df.write.parquet(path)
@@ -228,56 +185,14 @@ object Stage {
       case _ => None
     }
 
-  /** The DataFrame's parquet stage location when (and only when) the
-    * frame is one [[pinColumnar]]/[[pin]] just returned — recovered from
-    * the plan's file index so callers that can exploit the staged files'
-    * FOOTERS (e.g. answering `not_null` checks from null-count
-    * statistics without a row scan) need no side-channel. None for the
-    * `localCheckpoint` backends (no files to read footers from), and
-    * None for ANY transformed frame: the match demands the plan BE the
-    * bare scan (modulo aliasing) — a Filter/Project/Join on top means
-    * the files no longer describe the frame's rows, and a path returned
-    * for them would let a caller read footers that contradict the
-    * frame. */
-  def parquetPathOf(df: DataFrame): Option[String] =
-    // analyzed, not logical: Spark 4 reads are lazy (UnresolvedDataSource
-    // until analysis); analysis is planning-only, never a job
-    stripAlias(df.queryExecution.analyzed) match {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation
-              if h.location.rootPaths.size == 1 =>
-            Some(h.location.rootPaths.head.toString)
-          case _ => None
-        }
-      case _ => None
-    }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
-  /** One JVM-wide tmpdir for [[pinColumnar]]'s local fallback, deleted
-    * recursively at JVM exit — without the hook, every dq summary's three
-    * silver-table stages would outlive the process. */
-  private lazy val localScratch: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-stage")
-    sys.addShutdownHook { rmTree(p.toFile) }
-    p.toString
-  }
-
-  /** Delete THIS application's stages — for a caller recycling a per-run
-    * scratch location BETWEEN runs of the application (never mid-run, and
-    * APPLICATION-wide: every session sharing the JVM/SparkContext shares
-    * the app subtree AND the local-fallback queue, so clear only when no
+  /** Delete THIS application's stages under [[DirKey]] — for a caller
+    * recycling a per-run scratch location BETWEEN runs of the application
+    * (never mid-run, and APPLICATION-wide: every session sharing the
+    * JVM/SparkContext shares the app subtree, so clear only when no
     * session still holds a live pinned frame). Scoped to the app's own
     * [[appSubtree]]: on a shared scratch dir, another application's live
-    * stage files are its to delete, not ours. Also drops the
-    * local-fallback stage dirs [[pinColumnar]] accumulated this JVM, so a
-    * long-lived session can reclaim tmp-disk without waiting for the exit
-    * hook. */
-  def clear(spark: SparkSession): Unit = {
+    * stage files are its to delete, not ours. */
+  def clear(spark: SparkSession): Unit =
     scratchDir(spark).foreach { dir =>
       val p = new org.apache.hadoop.fs.Path(
         appSubtree(dir, spark.sparkContext.applicationId))
@@ -285,10 +200,4 @@ object Stage {
       if (fs.exists(p)) fs.delete(p, true)
       ()
     }
-    var path = localStages.poll()
-    while (path != null) {
-      rmTree(new java.io.File(path))
-      path = localStages.poll()
-    }
-  }
 }

@@ -24,8 +24,8 @@ object SetOps {
     * at the collision-free 100× replica: 17 s (the round-12 probe that
     * first flagged this row at 120 s turned out to be measuring a
     * replica-tooling defect — colliding order keys fanning the join out
-    * 7× — fixed in tools/make_10x.py; a pinColumnar variant was also
-    * measured and LOST at both scales, 20 s at 100× and +1.4 s at 1×,
+    * 7× — fixed in tools/make_10x.py; a variant staging the chains
+    * through a columnar parquet pin was also measured and LOST at both scales, 20 s at 100× and +1.4 s at 1×,
     * so the chains stay lazy). */
   def customerSetAudit(spark: SparkSession, dir: String): DataFrame = {
     val sc = graft.silver.Silver.customersFrom(

@@ -144,14 +144,13 @@ object DataQuality {
     * chain, making the dq rows check-count × chain-linear — the measured
     * 100× bench tail. This is exactly dbt's own semantics (`dbt test`
     * runs against MATERIALIZED relations, one build + N cheap test
-    * scans), expressed in-query. The materialization is served by the
-    * build-once fingerprint-keyed [[SilverStage]] (one trio build per
-    * corpus, shared by all three dq rows and across processes);
-    * `spark.graft.dq.silverstage=false` falls back to per-call
-    * [[graft.model.Stage.pinColumnar]] pins. Raw/bronze "tables" stay
-    * unpinned — they are direct pruned parquet scans with map-only
-    * renames, cheaper to re-scan than to copy. Either way the oracle
-    * sees identical rows (the stage freezes values, not semantics). */
+    * scans). There is one path: the silver tables are the build-once
+    * fingerprint-keyed [[SilverStage]] trio (one build per corpus,
+    * shared by all three dq rows and across processes), every check the
+    * parquet footers prove exactly is answered from them
+    * ([[FooterStats]]), and the rest scan. Raw/bronze "tables" stay
+    * unstaged — they are direct pruned parquet scans with map-only
+    * renames, cheaper to re-scan than to copy. */
   def summary(spark: SparkSession, dir: String): DataFrame =
     summaryWithFooterAnswers(spark, dir)._1
 
@@ -163,33 +162,9 @@ object DataQuality {
       dir: String): (DataFrame, Map[String, Long]) = {
     import Checks._
     val dfs: Map[String, DataFrame] = {
-      // COLUMNAR pin: ~a dozen narrow branches read each pinned silver
-      // table, and a row-oriented localCheckpoint block deserializes
-      // full-width rows per branch — measured 2× worse than no pin at
-      // all at 100× (dq_summary 71→155 s); the parquet stage keeps the
-      // one-evaluation semantics AND per-branch column pruning
-      val pin = graft.model.Stage.pinColumnar _
-      // the silver trio is the dominant dq cost, and three dq rows per
-      // suite each used to re-derive + re-pin it: serve it from the
-      // build-once fingerprint-keyed stage instead ([[SilverStage]] —
-      // same bottom-up one-evaluation structure, built once per corpus);
-      // spark.graft.dq.silverstage=false restores the per-call pins
-      val (sc, so, sp) =
-        if (SilverStage.enabled(spark)) {
-          val staged = SilverStage.tables(spark, dir)
-          (staged("silver_customers"), staged("silver_orders"),
-            staged("silver_payments"))
-        } else {
-          // per-call pins, bottom-up THROUGH the From-composition: each
-          // layer's one evaluation reads the pinned layer below
-          val sc0 = pin(graft.silver.Silver.customersFrom(
-            graft.bronze.Bronze.customers(spark, dir)))
-          val so0 = pin(graft.silver.Silver.ordersFrom(
-            graft.bronze.Bronze.orders(spark, dir), sc0))
-          val sp0 = pin(graft.silver.Silver.paymentsFrom(
-            graft.bronze.Bronze.payments(spark, dir), so0))
-          (sc0, so0, sp0)
-        }
+      val staged = SilverStage.tables(spark, dir)
+      val (sc, so, sp) = (staged("silver_customers"), staged("silver_orders"),
+        staged("silver_payments"))
       Map(
         "raw_customers" -> RawSources.rawCustomers(spark, dir),
         "raw_orders" -> RawSources.rawOrders(spark, dir),
@@ -200,7 +175,7 @@ object DataQuality {
         "silver_customers" -> sc,
         "silver_orders" -> so,
         "silver_payments" -> sp,
-        // gold: LAZY over the pinned/staged silvers — each gold table is
+        // gold: LAZY over the staged silvers — each gold table is
         // read by only 1–2 branches, and staging gold too measured a
         // serve-path tie at 100x against a ~135 s cold build (round 14)
         "gold_customer_summary" ->
@@ -210,7 +185,7 @@ object DataQuality {
     }
 
     // ---- footer fast-path: answer eligible checks from the parquet
-    // footers the pins/sources already wrote ([[FooterStats]]) — a
+    // footers the staged trio/sources already wrote ([[FooterStats]]) — a
     // not_null count IS the summed null-count statistic, a range-style
     // custom check is provably zero when every row group's min/max sits
     // inside the bounds, a row-floor check reads only row counts. One
@@ -219,21 +194,13 @@ object DataQuality {
     // the bounds, non-parquet frame) stays on the scan path below, whose
     // semantics remain the oracle's. Answers are EXACT, so the emitted
     // rows hash identically either way. ----
-    // kill switch (spark.graft.dq.footer=false): forces every check onto
-    // the scan path — the operational escape hatch for a store whose
-    // footer statistics are distrusted, and the spec's A/B lever proving
-    // both paths emit identical rows
-    val footerEnabled =
-      spark.conf.getOption("spark.graft.dq.footer").forall(_ != "false")
     val customKinds: Seq[(String, String, FooterKind)] =
-      if (!footerEnabled) Seq.empty
-      else customTestSql.flatMap { case (name, sql) =>
+      customTestSql.flatMap { case (name, sql) =>
         loaded.customTests.find(_.checkName == name).flatMap(ct =>
           footerKindOf(sql).map(k => (name, ct.table, k)))
       }
     val wantedCols: Map[String, Set[String]] =
-      ((if (footerEnabled) inventory else Seq.empty)
-        .map(tc => tc.table -> tc.notNulls.toSet) ++
+      (inventory.map(tc => tc.table -> tc.notNulls.toSet) ++
         customKinds.map {
           case (_, t, RangeKind(c, _, _)) => t -> Set(c)
           case (_, t, NotEmptyKind(c)) => t -> Set(c)
@@ -309,7 +276,7 @@ object DataQuality {
 
     // custom generic tests: arbitrary rendered SELECTs of violating rows,
     // so each is its own counted branch (it cannot fold into a table's
-    // single-pass conditional agg) — but its refs resolve to the PINNED
+    // single-pass conditional agg) — but its refs resolve to the STAGED
     // tables above, so the branch is a scan, not a chain re-derivation
     def customRows(name: String, sql: String): DataFrame =
       SingularTests.violations(spark, dir, name, sql, provided = dfs)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Column mapping: a check column is footer-resolvable when the frame's
   * analyzed plan is a chain of pure rename-projections
   * (`Alias(AttributeReference)` / bare attributes) over ONE unpartitioned
-  * parquet relation — a staged [[graft.model.Stage.pinColumnar]] table
+  * parquet relation — a table of the staged [[SilverStage]] trio
   * (identity map) or a bronze/raw rename of the source files. A Filter,
   * Join, Aggregate, or computed expression anywhere in the chain breaks
   * eligibility: the footer no longer describes the frame's rows.
@@ -227,15 +227,6 @@ object FooterStats {
     * directories a level is listed in-process. */
   private[quality] val DirsPerDriverList = 8
 
-  /** Conf key: `force` pushes both the listing and the footer reads onto
-    * the distributed path regardless of size — the spec's bit-equality
-    * lever (both paths share [[statsOfFile]]/[[merge]], so forcing one
-    * proves the other). */
-  private[quality] val DistributedKey = "spark.graft.dq.footer.distributed"
-
-  private def forced(spark: org.apache.spark.sql.SparkSession): Boolean =
-    spark.conf.getOption(DistributedKey).contains("force")
-
   /** One directory level: (data files, subdirectories) — object-level so
     * the executor-task closure serializes as a module reference. */
   private def listOne(dirStr: String,
@@ -268,7 +259,7 @@ object FooterStats {
       org.apache.spark.util.SerializableConfiguration] = null
     while (frontier.nonEmpty) {
       val listed: Seq[(Seq[String], Seq[String])] =
-        if (frontier.size <= DirsPerDriverList && !forced(spark))
+        if (frontier.size <= DirsPerDriverList)
           frontier.map(listOne(_, conf))
         else {
           if (bc == null) bc = spark.sparkContext.broadcast(
@@ -297,7 +288,7 @@ object FooterStats {
     val paths = listFiles(spark, rootPath, conf)
     val cols = footerCols // capture only serializable values in the tasks
     val perFile: Seq[(Long, Map[String, Partial])] =
-      if (paths.size <= FilesPerTask && !forced(spark))
+      if (paths.size <= FilesPerTask)
         paths.map(statsOfFile(_, cols, conf))
       else {
         // ship the SESSION hadoop conf (fs credentials, spark.hadoop.*

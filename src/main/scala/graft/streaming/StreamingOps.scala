@@ -70,10 +70,6 @@ object StreamingOps {
     reader.parquet(s"$dir").withColumn("ts", ts)
   }
 
-  /** Conf key pinning the stateful-shuffle partition count for the
-    * bounded parity drains (0 or unset = derive from input bytes). */
-  val StatePartitionsKey = "spark.graft.streaming.shuffle.partitions"
-
   /** Bytes of input per stateful partition the derivation targets. */
   val StatePartitionBytes: Long = 32L << 20
 
@@ -92,29 +88,27 @@ object StreamingOps {
     * [[StatePartitionBytes]]), clamped to [1, session partitions] — so
     * a 100 TB/day feed still fans out to the session's full width while
     * a bounded parity drain stops paying two orders of magnitude more
-    * state-store overhead than its data needs. [[StatePartitionsKey]]
-    * pins the count explicitly for a fleet (state partition count is a
-    * checkpoint-stable choice an operator sizes deliberately); these
-    * drains run on fresh checkpoints every call, so no restart
-    * compatibility concern applies here. The session conf is restored
-    * after the drain — batch queries planned later are unaffected. */
+    * state-store overhead than its data needs. These drains run on
+    * fresh checkpoints every call, so no restart-compatibility concern
+    * applies to the count.
+    *
+    * The override is a set/restore of the SESSION-GLOBAL conf, so it
+    * assumes no other query is planned on this session during the
+    * drain: a concurrent query would plan with the drain's count. The
+    * conf is restored after the drain, so batch queries planned later
+    * are unaffected. */
   private def withStatePartitions[A](spark: SparkSession, dir: String,
       glob: String)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    val pinned = graft.model.Conf.long(spark, StatePartitionsKey, 0L)
-    val n =
-      if (pinned > 0) pinned
-      else {
-        val bytes =
-          try {
-            val p = new org.apache.hadoop.fs.Path(s"$dir/$glob")
-            val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-            if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
-          } catch { case scala.util.control.NonFatal(_) => 0L }
-        math.max(1L, math.min(prev.toLong,
-          (bytes + StatePartitionBytes - 1) / StatePartitionBytes))
-      }
+    val bytes =
+      try {
+        val p = new org.apache.hadoop.fs.Path(s"$dir/$glob")
+        val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+        if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
+      } catch { case scala.util.control.NonFatal(_) => 0L }
+    val n = math.max(1L, math.min(prev.toLong,
+      (bytes + StatePartitionBytes - 1) / StatePartitionBytes))
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }

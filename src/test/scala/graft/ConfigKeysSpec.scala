@@ -18,7 +18,9 @@ class ConfigKeysSpec extends SparkSpec {
     finally walk.close()
   }
 
-  private val KeyLiteral = """"(spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_])""".r
+  // a whole key literal, closing quote included: a key=value example
+  // string such as "spark.graft.x=false" names no key the engine reads
+  private val KeyLiteral = """"(spark\.graft\.[A-Za-z0-9_.]*[A-Za-z0-9_])"""".r
 
   test("every spark.graft.* key in src/main is in the README " +
       "Configuration table, and every table key is read") {

@@ -4,23 +4,51 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Footer-statistics dq resolution ([[FooterStats]], the fast path wired
-  * into [[DataQuality.summary]]): answers must be BIT-IDENTICAL to the
-  * scan path's, eligibility must collapse on anything the footers don't
-  * exactly describe (filters, derived columns, out-of-range data, edited
-  * test macros), and the proofs must hold on raw parquet statistics. */
+  * into [[DataQuality.summary]]): answers must be BIT-IDENTICAL to a
+  * scan of the same frame, eligibility must collapse on anything the
+  * footers don't exactly describe (filters, derived columns, out-of-range
+  * data, edited test macros), and the proofs must hold on raw parquet
+  * statistics. */
 class FooterStatsSpec extends SparkSpec {
 
-  private def docs = spark.read.parquet(s"$Sf0001/documents.parquet")
+  /** Jobs `body` starts, counted by a listener; the bus is drained before
+    * reading (private[spark] compiles to a public method, so reflection
+    * reaches `waitUntilEmpty`). */
+  private def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    def drain(): Unit = { bus.getClass.getMethod("waitUntilEmpty").invoke(bus); () }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drain()
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      drain()
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** Data files under `dir`, at any depth. */
+  private def dataFiles(dir: String): Seq[java.io.File] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).toSeq
+        .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
+        .flatMap(c => if (c.isDirectory) walk(c) else Seq(c))
+    walk(new java.io.File(dir))
+  }
 
   test("summary: footer path and forced-scan path emit identical rows, " +
       "and the footer really answered the silver not_nulls") {
-    def rowsAndAnswered() = {
-      val (df, answered) = DataQuality.summaryWithFooterAnswers(spark, Sf0001)
-      (df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap, answered)
-    }
-    val (withFooter, answered) = rowsAndAnswered()
+    val (df, answered) = DataQuality.summaryWithFooterAnswers(spark, Sf0001)
+    val rows = df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(answered.nonEmpty, "footer resolution must fire on sf0.001")
-    // the pinned silver stages are parquet → their not_nulls are
+    // the staged silver trio is parquet → its not_nulls are
     // metadata-answerable; so are the bronze keys (bare renames of the
     // raw scan) and the row-floor / not-empty custom tests
     Seq("silver_customers.email.not_null",
@@ -34,14 +62,28 @@ class FooterStatsSpec extends SparkSpec {
     // fan-out keeps negative payment amounts, so min < 0 breaks the
     // containment proof and the count needs the scan
     assert(!answered.contains("silver_payments.payment_amount.within_range"))
-    assert(withFooter.contains("silver_payments.payment_amount.within_range"))
-    spark.conf.set("spark.graft.dq.footer", "false")
-    try {
-      val (scanOnly, answeredOff) = rowsAndAnswered()
-      assert(answeredOff.isEmpty)
-      assert(withFooter == scanOnly,
-        "footer answers must be value-identical to the scan path")
-    } finally spark.conf.unset("spark.graft.dq.footer")
+    assert(rows.contains("silver_payments.payment_amount.within_range"))
+    // every footer answer is value-identical to a scan of the same frame
+    val frames = SilverStage.tables(spark, Sf0001) ++ Map(
+      "raw_customers" -> graft.adapter.RawSources.rawCustomers(spark, Sf0001),
+      "raw_orders" -> graft.adapter.RawSources.rawOrders(spark, Sf0001),
+      "raw_payments" -> graft.adapter.RawSources.rawPayments(spark, Sf0001),
+      "bronze_customers" -> graft.bronze.Bronze.customers(spark, Sf0001),
+      "bronze_orders" -> graft.bronze.Bronze.orders(spark, Sf0001),
+      "bronze_payments" -> graft.bronze.Bronze.payments(spark, Sf0001))
+    val custom = DataQuality.customTestSql.toMap
+    answered.foreach { case (name, n) =>
+      val scanned = custom.get(name) match {
+        case Some(sql) =>
+          SingularTests.violations(spark, Sf0001, name, sql,
+            provided = frames).count()
+        case None =>
+          val Array(table, c, "not_null") = name.split('.')
+          frames(table).filter(col(c).isNull).count()
+      }
+      assert(scanned == n, s"$name: footer answered $n, the scan counts $scanned")
+      assert(rows.get(name).contains(n), s"$name: summary row ${rows.get(name)}")
+    }
   }
 
   test("origin: maps rename chains to footer columns, rejects filters " +
@@ -116,25 +158,31 @@ class FooterStatsSpec extends SparkSpec {
 
   test("read: distributed footer tasks fold to the exact driver-path " +
       "result (many-file tables read footers on executors)") {
-    import spark.implicits._
     val dir = graft.model.Scratch.dir("graft_footer_dist")
-    // enough files that the distributed path forms several tasks
-    Seq[(java.lang.Long, java.lang.Double, String)](
-      (1L, 5.0, "abc"), (2L, null, "zz"), (null, 7.5, "m"), (4L, 0.5, "abc"),
-      (5L, -1.5, "q"), (null, null, "abc"))
-      .toDF("k", "x", "s").repartition(6).write.mode("overwrite")
-      .parquet(s"$dir/t")
-    val driverSide = FooterStats.read(spark, s"$dir/t", Set("k", "x", "s"))
-    spark.conf.set(FooterStats.DistributedKey, "force")
-    try {
-      val distributed = FooterStats.read(spark, s"$dir/t", Set("k", "x", "s"))
-      assert(distributed == driverSide,
-        "both footer-read paths must fold identical statistics")
-    } finally spark.conf.unset(FooterStats.DistributedKey)
-    assert(driverSide.rowCount == 6L)
-    assert(driverSide.cols("k").nullCount.contains(2L))
+    // one input partition, so repartition(72) deals every file rows
+    val rows = spark.range(0L, 720L, 1L, 1).select(
+      when(col("id") % 5 =!= 0, col("id")).as("k"),
+      when(col("id") % 3 =!= 0, col("id") / 8.0 - 30.0).as("x"),
+      concat(lit("s"), (col("id") % 17).cast("string")).as("s"))
+    rows.coalesce(1).write.parquet(s"$dir/one")
+    rows.repartition(72).write.parquet(s"$dir/many")
+    assert(dataFiles(s"$dir/one").size == 1)
+    assert(dataFiles(s"$dir/many").size > FooterStats.FilesPerTask,
+      "the many-file copy must cross the driver-side file gate")
+    val cols = Set("k", "x", "s")
+    val (driverSide, driverJobs) =
+      jobsDuring(FooterStats.read(spark, s"$dir/one", cols))
+    val (distributed, fanOutJobs) =
+      jobsDuring(FooterStats.read(spark, s"$dir/many", cols))
+    assert(driverJobs == 0, "a single file is read on the driver")
+    assert(fanOutJobs >= 1, "many files are read by executor tasks")
+    assert(distributed == driverSide,
+      "both footer-read paths must fold identical statistics")
+    assert(driverSide.rowCount == 720L)
+    assert(driverSide.cols("k").nullCount.contains(144L))
+    assert(driverSide.cols("x").nullCount.contains(240L))
     val (lo, hi) = driverSide.cols("x").numRange.get
-    assert(lo == BigDecimal(-1.5) && hi == BigDecimal(7.5))
+    assert(lo == BigDecimal(1 / 8.0 - 30.0) && hi == BigDecimal(719 / 8.0 - 30.0))
   }
 
   test("read: distributed LISTING over a nested partitioned layout folds " +
@@ -142,17 +190,27 @@ class FooterStatsSpec extends SparkSpec {
       "listStatus round-trips on the driver)") {
     import spark.implicits._
     val dir = graft.model.Scratch.dir("graft_footer_list")
-    // two partition levels → a real directory tree for the BFS frontier
-    (1 to 200).map(i => (i.toLong, i % 5, i % 4, if (i % 7 == 0) null else s"v$i"))
+    val rows = (1 to 200)
+      .map(i => (i.toLong, i % 10, i % 3, if (i % 7 == 0) null else s"v$i"))
       .toDF("k", "pa", "pb", "s")
-      .write.partitionBy("pa", "pb").mode("overwrite").parquet(s"$dir/t")
-    val driverSide = FooterStats.read(spark, s"$dir/t", Set("k", "s"))
-    spark.conf.set(FooterStats.DistributedKey, "force")
-    try {
-      val distributed = FooterStats.read(spark, s"$dir/t", Set("k", "s"))
-      assert(distributed == driverSide,
-        "distributed listing + reads must fold the driver walk's result")
-    } finally spark.conf.unset(FooterStats.DistributedKey)
+    rows.coalesce(1).write.parquet(s"$dir/flat")
+    // two partition levels: 10 `pa` directories (above the driver-side
+    // listing gate), 30 leaves of one file each (below the file gate, so
+    // the jobs counted below are the listing's)
+    rows.coalesce(1).write.partitionBy("pa", "pb").parquet(s"$dir/nested")
+    assert(dataFiles(s"$dir/flat").size == 1)
+    val nested = dataFiles(s"$dir/nested")
+    assert(nested.map(_.getParentFile.getParentFile).distinct.size >
+      FooterStats.DirsPerDriverList)
+    assert(nested.size <= FooterStats.FilesPerTask)
+    val (driverSide, driverJobs) =
+      jobsDuring(FooterStats.read(spark, s"$dir/flat", Set("k", "s")))
+    val (distributed, listingJobs) =
+      jobsDuring(FooterStats.read(spark, s"$dir/nested", Set("k", "s")))
+    assert(driverJobs == 0, "a flat single-file table is walked on the driver")
+    assert(listingJobs >= 1, "a wide directory level is listed by executor tasks")
+    assert(distributed == driverSide,
+      "distributed listing + reads must fold the driver walk's result")
     assert(driverSide.rowCount == 200L)
     assert(driverSide.cols("s").nullCount.contains(200L / 7))
   }

@@ -180,58 +180,6 @@ class RangeRankSpec extends SparkSpec
     } finally spark.conf.unset(graft.model.Stage.DirKey)
   }
 
-  test("pinColumnar: parquet-staged either way — scratch dir when " +
-      "configured, local tmpdir otherwise; values frozen, columns pruned") {
-    val base = docs.select(col("doc_id"), col("lang"), col("text"))
-    // default (no scratch dir): still a parquet stage, so a narrow
-    // consumer's scan prunes to its columns — the property the dq fuse
-    // needs (a localCheckpoint block would deserialize whole rows)
-    val pinned = graft.model.Stage.pinColumnar(base)
-    val narrow = pinned.select("lang").distinct()
-    val scan = narrow.queryExecution.executedPlan.toString
-    assert(scan.contains("ReadSchema") && !scan.contains("text"),
-      s"narrow consumer must prune the pinned stage's columns:\n$scan")
-    assert(pinned.count() == base.count())
-    // configured scratch dir: the stage lands under IT (the durable,
-    // executor-loss-tolerant location), not java.io.tmpdir
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft_stage_col").toString
-    spark.conf.set(graft.model.Stage.DirKey, scratch)
-    try {
-      graft.model.Stage.pinColumnar(base).count()
-      val staged = new java.io.File(scratch,
-          s"app-${spark.sparkContext.applicationId}").listFiles()
-        .filter(_.getName.startsWith("stage-"))
-      assert(staged.length == 1, "columnar pin must stage under the scratch dir")
-      assert(new java.io.File(staged.head, "_SUCCESS").exists())
-    } finally spark.conf.unset(graft.model.Stage.DirKey)
-  }
-
-  test("clear drops the local-fallback stage dirs pinColumnar accumulated " +
-      "— a long-lived session reclaims tmp-disk without the JVM-exit hook") {
-    val base = docs.select(col("doc_id"), col("lang"))
-    val pinned = graft.model.Stage.pinColumnar(base) // no DirKey → tmpdir
-    val path = graft.model.Stage.parquetPathOf(pinned)
-    assert(path.isDefined, "local pinColumnar must be parquet-backed " +
-      "(parquetPathOf recovers the stage location from the plan)")
-    val dir = new java.io.File(
-      new org.apache.hadoop.fs.Path(path.get).toUri.getPath)
-    assert(dir.isDirectory)
-    assert(pinned.count() == base.count())
-    graft.model.Stage.clear(spark) // between-runs contract: frame is dead
-    assert(!dir.exists(), "clear must delete the tracked local stage")
-    // and a localCheckpoint-backed frame has no parquet location
-    assert(graft.model.Stage.parquetPathOf(base.localCheckpoint()).isEmpty)
-    // a TRANSFORMED pinned frame has none either: its rows no longer
-    // match the staged files, so footers must not be offered for it
-    val pinned2 = graft.model.Stage.pinColumnar(base)
-    assert(graft.model.Stage.parquetPathOf(
-      pinned2.filter(col("doc_id") > 10)).isEmpty)
-    assert(graft.model.Stage.parquetPathOf(
-      pinned2.select(col("doc_id"))).isEmpty)
-    graft.model.Stage.clear(spark)
-  }
-
   test("a malformed window-bytes conf fails naming the conf key, not as " +
       "a bare NumberFormatException from inside query construction") {
     spark.conf.set(RangeRank.WindowBytesKey, "32mb")
