@@ -67,6 +67,10 @@ object Run {
       } finally s.stop()
       return
     }
+    // the run ends with the declared dq inventory: a missing models YAML
+    // (a run outside the project root) must fail here, not after every
+    // model has materialized
+    quality.SchemaYaml.loadDir(quality.DataQuality.modelsRoot)
     val catalogMode = args.contains("--catalog")
     val fullRefresh = args.contains("--full-refresh")
     val select = args.collectFirst { case a if a.startsWith("--select=") =>

@@ -373,7 +373,7 @@ object Dedup {
     * centroids and Bloom positions). 0 disables the gate (PlanSpec-style
     * shape pinning; DedupSpec uses it to exercise the loop). */
   val DriverEdgesKey = "spark.graft.cc.driver.edges"
-  val DriverEdgesDefault = 1000000L
+  val DriverEdgesDefault: Long = graft.model.Bounded.DriverRows.toLong
 
   /** One propagate step: every node takes the min label among itself and
     * its neighbors. Exactly one shuffle pair — the edge⋈label equi-join
@@ -446,23 +446,26 @@ object Dedup {
     // the driver holds ≤ gate edges — the same bounded-collect class as
     // the k-means centroid localization. Above the gate (any genuinely
     // large graph) the pointer-doubling loop runs unchanged; 0 disables
-    // the gate.
+    // the gate. The size test and the collect are one bounded action
+    // ([[graft.model.Bounded]]): no count runs, above the gate or below.
+    import spark.implicits._
     val gate = graft.model.Conf.long(spark, DriverEdgesKey, DriverEdgesDefault)
-    val nEdges = if (gate > 0) ab.count() else Long.MaxValue
-    if (nEdges <= gate &&
-        ab.schema.fields.forall(f => f.dataType ==
-            org.apache.spark.sql.types.LongType || f.dataType ==
-            org.apache.spark.sql.types.IntegerType))
-      ccUnionFind(spark, ab)
-    else ccLoop(ab, maxRounds)
+    val integral = ab.schema.fields.forall(f =>
+      f.dataType == org.apache.spark.sql.types.LongType ||
+        f.dataType == org.apache.spark.sql.types.IntegerType)
+    val collected = if (!integral) None else graft.model.Bounded.collect(
+      ab.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
+        .as[(Long, Long)], gate)
+    collected match {
+      case Some(es) => ccUnionFind(spark, es, ab.schema.fields.head.dataType)
+      case None => ccLoop(ab, maxRounds)
+    }
   }
 
   /** The gate's driver-side union-find over the collected edge list. */
-  private def ccUnionFind(spark: SparkSession, ab: DataFrame): DataFrame = {
+  private def ccUnionFind(spark: SparkSession, es: Array[(Long, Long)],
+      nodeType: org.apache.spark.sql.types.DataType): DataFrame = {
     import spark.implicits._
-    val nodeType = ab.schema.fields.head.dataType
-    val es = ab.select(col("doc_a").cast("long"), col("doc_b").cast("long"))
-      .as[(Long, Long)].collect()
     lastCcRounds.set(0)
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {

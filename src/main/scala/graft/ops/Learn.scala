@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField,
+  StructType}
 
 /** In-engine model training: the corpus-quality classifiers a
   * training-data pipeline fits ON the corpus it is curating (fastText-style
@@ -29,14 +31,21 @@ import org.apache.spark.sql.functions._
   *     unrolls the identical descent as chained CTEs (the
   *     [[Similarity]] k-means oracle's pattern).
   *
-  * Scale shape: each iteration is ONE map-side-combined aggregate over
-  * the corpus producing d+1 gradient sums; the weight vector (d+1
-  * doubles) lives on the driver between iterations — the documented
+  * Scale shape: the gradient of a row depends only on its `(x1, x2, y)`
+  * triple, so the corpus reduces ONCE to the sufficient table
+  * `(x1, x2, y, c)` — one map-side-combined aggregate, a few hundred rows
+  * for thousands of documents. Below [[DriverStatsRows]] that table is
+  * collected and all [[LogRegIters]] iterations plus the accuracy count
+  * run on the driver: no per-iteration job at all (the ICDE 2025
+  * pure-SQL inference paper's operator fusion, applied to training).
+  * Above it, the table is pinned and each iteration is one aggregate
+  * over it. Both paths are BIT-IDENTICAL to the per-row descent: every
+  * summed term is a multiple of 2^-24 of magnitude ≤ 1 (see [[quant]]),
+  * so the weighted term `c·q` and every partial sum are exact below 2^53
+  * and no summation order can change a bit. The weight vector (d+1
+  * doubles) lives on the driver between iterations either way — the
   * bounded-driver-state pattern of `deterministicKmeans` (MLlib's
-  * LBFGS/OWLQN hold their coefficient vector the same way). Nothing
-  * shuffles the corpus; iterations scan it [[LogRegIters]] times, so the
-  * features are localCheckpoint'ed once and each pass reads the
-  * materialized projection, not the raw table.
+  * LBFGS/OWLQN hold their coefficient vector the same way).
   */
 object Learn {
 
@@ -73,6 +82,11 @@ object Learn {
   private def sigmoidHat(z: Column): Column =
     lit(0.5) + z / (lit(2.0) * (lit(1.0) + abs(z)))
 
+  /** [[sigmoidHat]] in driver arithmetic: the same IEEE operations in
+    * the same order, so the same bits. */
+  private def sigmoidHat(z: Double): Double =
+    0.5 + z / (2.0 * (1.0 + math.abs(z)))
+
   /** Per-row gradient contributions are quantized to multiples of 2^-24
     * (floor — no tie semantics) before summing: every term is then
     * exactly representable, the partial sums stay integer-exact (terms
@@ -84,10 +98,17 @@ object Learn {
     * chained iterations at lr=2.0 made the oracle compare
     * config-sensitive. The 2^-24 truncation perturbs each term by
     * ≤ 6e-8 — irrelevant to the descent, and the oracle replays the
-    * identical quantization. */
+    * identical quantization. The same invariance lets a term be
+    * weighted by its row multiplicity `c` with no rounding either. */
   private val GradQuant = 16777216.0 // 2^24
   private def quant(c: Column): Column =
     floor(c * lit(GradQuant)) / lit(GradQuant)
+  private def quant(v: Double): Double =
+    math.floor(v * GradQuant) / GradQuant
+
+  /** Row bound on the collected sufficient table: at most this many
+    * distinct `(x1, x2, y)` triples run the descent on the driver. */
+  val DriverStatsRows: Int = graft.model.Bounded.DriverRows
 
   /** Fit and report: one wide row with the final weights, the corpus
     * size, and the training accuracy. Accuracy is INTEGER-exact despite
@@ -95,34 +116,91 @@ object Learn {
     * `p > 1/2 ⇔ z > 0` — the decision boundary needs no sigmoid at
     * all. */
   def logregQuality(spark: SparkSession, dir: String,
-      iters: Int = LogRegIters, lr: Double = LogRegLr): DataFrame = {
-    val feats = graft.model.Stage.pin(featurized(spark, dir))
+      iters: Int = LogRegIters, lr: Double = LogRegLr): DataFrame =
+    logregQualityGated(spark, dir, iters, lr, DriverStatsRows)
+
+  /** [[logregQuality]] with an explicit sufficient-table gate; `gate = 0`
+    * forces the distributed loop. */
+  private[graft] def logregQualityGated(spark: SparkSession, dir: String,
+      iters: Int, lr: Double, gate: Long): DataFrame =
+    graft.model.Stage.scoped {
+      val stats = featurized(spark, dir)
+        .groupBy("x1", "x2", "y").agg(count(lit(1)).as("c"))
+      val (w, nDocs, nCorrect) =
+        graft.model.Bounded.collect(stats, gate) match {
+          case Some(rows) => descendOnDriver(rows.map(r => (r.getDouble(0),
+            r.getDouble(1), r.getDouble(2), r.getLong(3))), iters, lr)
+          case None =>
+            descendDistributed(graft.model.Stage.pin(stats), iters, lr)
+        }
+      spark.createDataFrame(
+        java.util.Collections.singletonList(
+          Row(nDocs, nCorrect, w(0), w(1), w(2))),
+        ResultSchema)
+    }
+
+  /** The result row's schema, nullability included: what an aggregate
+    * of `count`, `sum` and `first` would report, so the written parquet
+    * is the same whichever path produced the row. */
+  private val ResultSchema = StructType(Seq(
+    StructField("n_docs", LongType, nullable = false),
+    StructField("n_correct", LongType),
+    StructField("w_bias", DoubleType),
+    StructField("w_len", DoubleType),
+    StructField("w_stop", DoubleType)))
+
+  /** One descent step from the gradient sums `g` over `n` documents. */
+  private def step(w: Array[Double], g: Array[Double], n: Double,
+      lr: Double): Array[Double] =
+    Array(w(0) - lr * g(0) / n, w(1) - lr * g(1) / n, w(2) - lr * g(2) / n)
+
+  /** The descent over the collected `(x1, x2, y, c)` table, written as
+    * the Column expressions of [[descendDistributed]] in driver
+    * arithmetic: `z = (w0 + w1·x1) + w2·x2`, `err = σ̂(z) − y`, and the
+    * gradient sums `Σ c·quant(term)`. Every summand is an exact multiple
+    * of 2^-24, so these sums equal Spark's per-row sums bit for bit. */
+  private def descendOnDriver(table: Array[(Double, Double, Double, Long)],
+      iters: Int, lr: Double): (Array[Double], Long, Long) = {
+    val nDocs = table.iterator.map(_._4).sum
+    val n = nDocs.toDouble
     var w = Array(0.0, 0.0, 0.0) // bias, x1, x2
     (1 to iters).foreach { _ =>
-      val z = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
-      val err = sigmoidHat(z) - col("y")
-      // one aggregate row per iteration: d+1 gradient sums + n; each
-      // term quantized ([[quant]]) so the sums are partitioning-invariant
-      val g = feats.agg(
-        sum(quant(err)).as("g0"),
-        sum(quant(err * col("x1"))).as("g1"),
-        sum(quant(err * col("x2"))).as("g2"),
-        count(lit(1)).cast("double").as("n")).head()
-      val n = g.getDouble(3)
-      w = Array(
-        w(0) - lr * g.getDouble(0) / n,
-        w(1) - lr * g.getDouble(1) / n,
-        w(2) - lr * g.getDouble(2) / n)
+      val g = Array(0.0, 0.0, 0.0)
+      table.foreach { case (x1, x2, y, c) =>
+        val err = sigmoidHat(w(0) + w(1) * x1 + w(2) * x2) - y
+        g(0) += c * quant(err)
+        g(1) += c * quant(err * x1)
+        g(2) += c * quant(err * x2)
+      }
+      w = step(w, g, n, lr)
     }
-    val z = lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
-    feats.agg(
-      count(lit(1)).as("n_docs"),
-      sum(((z > 0).cast("int") === col("y").cast("int")).cast("long"))
-        .as("n_correct"),
-      first(lit(w(0))).as("w_bias"),
-      first(lit(w(1))).as("w_len"),
-      first(lit(w(2))).as("w_stop"))
-      .select("n_docs", "n_correct", "w_bias", "w_len", "w_stop")
+    val nCorrect = table.iterator.collect {
+      case (x1, x2, y, c) if (w(0) + w(1) * x1 + w(2) * x2 > 0) == (y.toInt == 1) => c
+    }.sum
+    (w, nDocs, nCorrect)
+  }
+
+  /** The descent above the gate: one aggregate over the pinned
+    * sufficient table per iteration (the weighted sums are exact for the
+    * same reason as the driver's), then one for the accuracy count. */
+  private def descendDistributed(stats: DataFrame, iters: Int,
+      lr: Double): (Array[Double], Long, Long) = {
+    def z(w: Array[Double]) =
+      lit(w(0)) + lit(w(1)) * col("x1") + lit(w(2)) * col("x2")
+    val c = col("c")
+    var w = Array(0.0, 0.0, 0.0)
+    (1 to iters).foreach { _ =>
+      val err = sigmoidHat(z(w)) - col("y")
+      val g = stats.agg(
+        sum(c * quant(err)), sum(c * quant(err * col("x1"))),
+        sum(c * quant(err * col("x2"))), sum(c).cast("double")).head()
+      w = step(w, Array(g.getDouble(0), g.getDouble(1), g.getDouble(2)),
+        g.getDouble(3), lr)
+    }
+    val acc = stats.agg(sum(c),
+      sum(when((z(w) > 0).cast("int") === col("y").cast("int"), c)
+        .otherwise(0L))).head()
+    (w, acc.getLong(0), acc.getLong(1))
   }
 
   /** Oracle twin: the identical descent unrolled — iteration i's weights

@@ -29,13 +29,6 @@ object TextOps {
   def documents(spark: SparkSession, dir: String): DataFrame =
     graft.sources.ParquetStats.read(spark, s"$dir/documents.parquet")
 
-  /** Fan a NARROW scan out to the session's parallelism before a
-    * CPU-bound per-row map (gram hashing, signature computation): a small
-    * parquet file is one row group = one task, serializing work the rest
-    * of the cluster could share. No-op — no shuffle — when the input
-    * already has at least as many partitions as cores, which is always
-    * the case at warehouse scale; the repartition only ever fires on
-    * boutique inputs where the shuffled bytes are trivial. */
   /** Explode an EXPENSIVELY-COMPUTED array column without evaluating the
     * computation twice — or worse, once per RAW row below an upstream
     * dedup aggregate.
@@ -63,6 +56,13 @@ object TextOps {
       arr: org.apache.spark.sql.Column, out: String): DataFrame =
     df.withColumn(out, explode_outer(arr)).filter(col(out).isNotNull)
 
+  /** Fan a NARROW scan out to the session's parallelism before a
+    * CPU-bound per-row map (gram hashing, signature computation): a small
+    * parquet file is one row group = one task, serializing work the rest
+    * of the cluster could share. No-op — no shuffle — when the input
+    * already has more partitions than cores, which is always
+    * the case at warehouse scale; the repartition only ever fires on
+    * boutique inputs where the shuffled bytes are trivial. */
   private[ops] def spread(df: DataFrame): DataFrame = {
     val par = df.sparkSession.sparkContext.defaultParallelism
     // <= par, not < par: getNumPartitions is the PRE-AQE number — a plan
@@ -1022,20 +1022,6 @@ object TextOps {
   /** Next-token candidates kept per context word. */
   val BigramTopK = 3
 
-  /** Bigram language-model table: adjacent-token pair counts with the
-    * MLE conditional `count(w1 w2) / count(w1 ·)`, top-[[BigramTopK]]
-    * continuations per context — the classic count-based next-token
-    * baseline (and the smoke test a tokenizer/corpus pipeline runs to
-    * see distributional drift between corpus versions). Probabilities
-    * are exact integer rationals through one correctly-rounded division,
-    * so both engines agree bit-for-bit — no smoothing constant to
-    * desync.
-    *
-    * Shape: the pair explode is map-side off the scan; one (w1, w2)
-    * shuffle with map-side partials; the per-context total and top-k
-    * ride ONE window partitioning on w1 (vocabulary-keyed, not
-    * corpus-keyed — the hot stopword contexts are bounded by distinct
-    * continuations, and AQE splits any residual skew). */
   /** Greedy-decode length for [[lmGreedyDecode]]. */
   val LmDecodeSteps = 10
 
@@ -1050,26 +1036,43 @@ object TextOps {
     * decoder, not a defect (temperature sampling would need the
     * engine-banned transcendentals).
     *
-    * Shape: the argmax-successor table is vocabulary-sized and each
-    * step is one broadcast lookup against it — inherently sequential,
-    * [[LmDecodeSteps]] tiny jobs (the BPE loop's documented pattern);
-    * production decoders serve the same table from a key-value store. */
+    * Shape: greedy decoding is inherently sequential, but its only input
+    * is the argmax-successor table — vocabulary-sized, one row per
+    * context word. Below [[LmDriverTableRows]] that table is collected
+    * once and the chain is walked through a driver `Map`: the decode
+    * steps run no job, and the job count does not depend on `steps`.
+    * Above it, the table is pinned and each step is one 1-row lookup
+    * against it (the BPE loop's pattern; production decoders serve the
+    * same table from a key-value store). The two paths are exact twins:
+    * a lookup either finds the word's unique `next_rank = 1` row or
+    * finds none, and a word with no successor ends the chain either way.
+    */
   def lmGreedyDecode(spark: SparkSession, dir: String,
-      steps: Int = LmDecodeSteps): DataFrame = graft.model.Stage.scoped {
+      steps: Int = LmDecodeSteps): DataFrame =
+    lmGreedyDecodeGated(spark, dir, steps, LmDriverTableRows)
+
+  /** Row bound on the collected argmax-successor table. */
+  val LmDriverTableRows: Int = graft.model.Bounded.DriverRows
+
+  /** [[lmGreedyDecode]] with an explicit successor-table gate; `gate = 0`
+    * forces the per-step lookup loop. */
+  private[graft] def lmGreedyDecodeGated(spark: SparkSession, dir: String,
+      steps: Int, gate: Long): DataFrame = graft.model.Stage.scoped {
     import spark.implicits._
-    val nxt = graft.model.Stage.pin(
-      bigramLm(spark, dir).filter(col("next_rank") === 1)
-        .select(col("w1"), col("w2")))
-    // Greedy decoding is inherently sequential, and every step moves
-    // exactly ONE row (the argmax successor) — so the chain is driven
-    // from the driver as `steps` 1-row lookups against the pinned
-    // successor table (the BPE-argmax collect precedent), instead of the
-    // former union-of-chained-joins plan whose O(steps²) join tree cost
-    // ~2.3 s of pure driver plan optimization per run at 10 steps (wall
-    // 2.97 s vs 0.66 s of actual job time, r16 probe). Output rows,
-    // types, and the stop-on-missing-successor semantics are identical:
-    // a word with no successor row ended the old chain with empty joins
-    // from that step on.
+    val argmax = bigramLm(spark, dir).filter(col("next_rank") === 1)
+      .select(col("w1"), col("w2")).as[(String, String)]
+    // the successor of a word: a Map probe when the table fits under the
+    // gate (one bounded collect, no job per step), else a 1-row lookup
+    // job against the pinned table — the same unique row or none either
+    // way, so both paths emit the same chain
+    val next: String => Option[String] =
+      graft.model.Bounded.collect(argmax, gate) match {
+        case Some(table) => table.toMap.get
+        case None =>
+          val nxt = graft.model.Stage.pin(argmax.toDF())
+          w => nxt.filter(col("w1") === w).select(col("w2"))
+            .as[String].collect().headOption
+      }
     val seed = documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
@@ -1077,15 +1080,10 @@ object TextOps {
       .orderBy(col("c").desc, col("w")).limit(1)
       .select(col("w")).as[String].head()
     val path = scala.collection.mutable.ArrayBuffer((0, seed))
-    var cur = seed
-    var i = 1
     var halted = false
-    while (i <= steps && !halted) {
-      val nx = nxt.filter(col("w1") === cur).select(col("w2"))
-        .as[String].collect()
-      if (nx.isEmpty) halted = true
-      else { cur = nx.head; path += ((i, cur)) }
-      i += 1
+    while (path.length <= steps && !halted) next(path.last._2) match {
+      case Some(w) => path += ((path.length, w))
+      case None => halted = true
     }
     spark.createDataset(path.toSeq).toDF("step", "word")
   }
@@ -1199,6 +1197,20 @@ object TextOps {
         ORDER BY lift DESC, w1, w2) AS rank
       FROM scored) WHERE rank <= $topK"""
 
+  /** Bigram language-model table: adjacent-token pair counts with the
+    * MLE conditional `count(w1 w2) / count(w1 ·)`, top-[[BigramTopK]]
+    * continuations per context — the classic count-based next-token
+    * baseline (and the smoke test a tokenizer/corpus pipeline runs to
+    * see distributional drift between corpus versions). Probabilities
+    * are exact integer rationals through one correctly-rounded division,
+    * so both engines agree bit-for-bit — no smoothing constant to
+    * desync.
+    *
+    * Shape: the pair explode is map-side off the scan; one (w1, w2)
+    * shuffle with map-side partials; the per-context total and top-k
+    * ride ONE window partitioning on w1 (vocabulary-keyed, not
+    * corpus-keyed — the hot stopword contexts are bounded by distinct
+    * continuations, and AQE splits any residual skew). */
   def bigramLm(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val pairs = documents(spark, dir)

@@ -37,9 +37,12 @@ object DataQuality {
     * thresholds all follow — no hand-ported Scala list to drift
     * (SchemaYamlSpec pins the loaded inventory against the reference
     * project's own YAML files, loaded as-is). */
-  private lazy val loaded: SchemaYaml.Loaded =
-    SchemaYaml.loadDir(new java.io.File(
-      sys.props.getOrElse("graft.models.root", "models")))
+  private lazy val loaded: SchemaYaml.Loaded = SchemaYaml.loadDir(modelsRoot)
+
+  /** The dbt project's `models/` directory: `-Dgraft.models.root`, else
+    * `models` under the working directory. */
+  def modelsRoot: java.io.File =
+    new java.io.File(sys.props.getOrElse("graft.models.root", "models"))
 
   lazy val inventory: Seq[TableChecks] = loaded.inventory
 
@@ -88,9 +91,7 @@ object DataQuality {
     * working directory with no layer YAML (the engine jar running outside
     * a project checkout) has nothing to validate and skips. */
   def validateTestNames(): Unit = {
-    val root = new java.io.File(
-      sys.props.getOrElse("graft.models.root", "models"))
-    val hasYaml = Option(root.listFiles()).getOrElse(Array.empty).exists(d =>
+    val hasYaml = Option(modelsRoot.listFiles()).getOrElse(Array.empty).exists(d =>
       d.isDirectory && Option(d.listFiles()).getOrElse(Array.empty)
         .exists(f => f.getName.endsWith(".yml") || f.getName.endsWith(".yaml")))
     if (hasYaml) customTestSql.foreach(_ => ())

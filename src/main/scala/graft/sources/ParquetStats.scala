@@ -20,9 +20,6 @@ object ParquetStats {
   private val schemaCache = scala.collection.concurrent.TrieMap
     .empty[(String, Long, Long, Boolean), org.apache.spark.sql.types.StructType]
 
-  /** Test hook / executor-context reset. */
-  def clearSchemaCache(): Unit = schemaCache.clear()
-
   /** `spark.read.parquet(path)` with the SCHEMA-INFERENCE JOB memoized:
     * a bare parquet read runs a footer-reading Spark job per call to
     * infer the schema, and the suite's source tables are re-opened by

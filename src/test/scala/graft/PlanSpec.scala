@@ -483,10 +483,10 @@ class PlanSpec extends SparkSpec {
     // model-level at_least_n_rows) each add one counted branch over the
     // silver_payments chain — justified: a custom test is arbitrary SQL
     // and cannot fold into the table's single-pass agg (dbt runs each
-    // test as its own query too). 36 → 35 in round 11: the columnar
-    // silver pin (Stage.pinColumnar) stages the chains through parquet,
-    // and every branch after it is a pruned SCAN — one silver-chain
-    // exchange no longer appears in the dq plan at all. 35 → 33 in
+    // test as its own query too). 36 → 35 in round 11: staging the
+    // silver chains through parquet (a columnar pin then, the
+    // SilverStage trio now) makes every branch after it a pruned SCAN —
+    // one silver-chain exchange no longer appears in the dq plan at all. 35 → 33 in
     // round 12: footer-statistics resolution (FooterStats) answers the
     // not_empty_string and at_least_n_rows custom tests from the pinned
     // stage's parquet metadata, so their two counted branches leave the
