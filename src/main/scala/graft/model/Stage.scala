@@ -23,7 +23,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     evaluation — Spark fails the stage because the blocks are simply
   *     gone). Acceptable for a single-JVM `local[n]` run; not for a
   *     multi-hour 1000-executor rank.
-  *   - **`spark.conf.set("spark.graft.stage.dir", <scratch path>)`
+  *   - **`spark.graft.stage.dir` set to a scratch path
   *     (cluster):** each pin writes the frame ONCE as parquet under a
   *     fresh subdirectory of the scratch path (HDFS/object-store in
   *     production) and returns a reader over it. Executor loss during any

@@ -1,12 +1,13 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType}
+import graft.model.BuildCache.{emptyOf, md5, planHash, recipe}
 
 /** Code-identity hashing for the persistent ANN index caches — the
-  * [[graft.model.PlanIdentity]] discipline applied to the engine's
+  * [[graft.model.BuildCache.recipe]] discipline applied to the engine's
   * largest cache family ([[IvfIndex]] centroids/lists/codes,
   * [[LshIndex]] signatures). These tables persist across JVMs, so a
   * recipe change without a key change serves stale trained models as a
@@ -47,11 +48,6 @@ object AnnIdentity {
   private val SentinelN = 1024L
   private[ops] val SentinelPlanes = 8
 
-  private def emptyOf(spark: SparkSession, schemaDdl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-
   /** Driver-side evaluation of the native vector expressions on pinned
     * sentinel inputs (no job — Literal children, direct `eval`). The
     * dot-product sentinels are chosen so FOLD ORDER changes the result
@@ -80,12 +76,7 @@ object AnnIdentity {
       .map(Similarity.ivfK).mkString("k", ",", "")
 
   private def tokenOf(parts: String*): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(parts.mkString("‖").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-
-  private def planHash(frames: Seq[DataFrame]): String =
-    graft.model.PlanIdentity.planHash(frames)
+    md5(parts.mkString("‖")).take(12)
 
   /** The raw-embeddings stand-in and the two shaped frames every hash
     * composes over. `vec` is ARRAY<FLOAT> like the real scan (the
@@ -101,17 +92,11 @@ object AnnIdentity {
     (raw, base, cents)
   }
 
-  private val memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def memoized(key: String)(f: => String): String =
-    memo.computeIfAbsent(key, _ => f)
-
   /** Key component for the IVF quantizer + inverted lists: the norm
     * pass, the training-sample predicate, the init rule, one Lloyd
     * mean-update step, and the list build — plus the ivfK rule and the
     * native-expression internals. */
-  def ivfRecipeHash(spark: SparkSession): String = memoized("ivf") {
+  def ivfRecipeHash(spark: SparkSession): String = recipe("ann_ivf") {
     val (raw, base, cents) = shapes(spark)
     tokenOf(
       planHash(Seq(
@@ -127,7 +112,7 @@ object AnnIdentity {
   /** Key component for the PQ codebooks + codes: the subspace slice
     * geometry, the (PqK-sized) init, the shared Lloyd step, and the
     * encode assignment. */
-  def pqRecipeHash(spark: SparkSession): String = memoized("pq") {
+  def pqRecipeHash(spark: SparkSession): String = recipe("ann_pq") {
     val (_, base, cents) = shapes(spark)
     val raw = emptyOf(spark, "vec_id BIGINT, vec ARRAY<FLOAT>")
     tokenOf(
@@ -143,7 +128,7 @@ object AnnIdentity {
 
   /** Key component for the int8 code table: the quantize-on-write
     * derivation plus VecDotInt's internals. */
-  def int8RecipeHash(spark: SparkSession): String = memoized("int8") {
+  def int8RecipeHash(spark: SparkSession): String = recipe("ann_int8") {
     val (raw, _, _) = shapes(spark)
     tokenOf(planHash(Seq(Similarity.int8CodesFrom(raw))), exprFingerprint)
   }
@@ -153,7 +138,7 @@ object AnnIdentity {
     * not hashed here — it is in the key explicitly (`p<planes>`), and
     * the table's contents depend on the derivation and the count, not
     * on the formula that picked the count. */
-  def lshRecipeHash(spark: SparkSession): String = memoized("lsh") {
+  def lshRecipeHash(spark: SparkSession): String = recipe("ann_lsh") {
     val (_, base, _) = shapes(spark)
     val sig = Similarity.lshSignatureFrom(base, SentinelPlanes)
       .withColumn("bucket_prefix",

@@ -56,9 +56,9 @@ object Bpe {
     * jobs keeps them from re-training per query. Keyed by the SESSION
     * OBJECT (a recycled session never serves another session's
     * localCheckpoint'd dictionary, with no identity-hash collisions) and
-    * the documents table's CONTENT FINGERPRINT (same discipline as
-    * [[IvfIndex.fingerprint]]) — if the corpus at `dir` changes
-    * mid-session, the stale dictionary is never served. */
+    * the documents table's CONTENT FINGERPRINT
+    * ([[graft.model.BuildCache.fingerprint]]) — if the corpus at `dir`
+    * changes mid-session, the stale dictionary is never served. */
   private val trainCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int), (Seq[(Int, String, String, String, Long)], DataFrame)]
 
@@ -85,7 +85,8 @@ object Bpe {
   private def trainLoop(spark: SparkSession, dir: String,
       numMerges: Int): (Seq[(Int, String, String, String, Long)], DataFrame) =
     trainCache.getOrElseUpdate(
-      (spark, IvfIndex.fingerprint(spark, dir, "documents.parquet"),
+      (spark,
+        graft.model.BuildCache.fingerprint(spark, dir, "documents.parquet"),
         numMerges),
       // the memoized dictionary is a driver-local LocalRelation built
       // from the loop's collected vocabulary — no pinned blocks to own

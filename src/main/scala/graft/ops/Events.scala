@@ -18,18 +18,21 @@ object Events {
 
   val SessionGapMinutes = 30
 
+  /** Fails, naming the key, unless the session reads TIMESTAMP(NANOS) as
+    * long. The events parquet carries that type, which Spark's reader
+    * rejects otherwise; read as long, it is truncated to micros exactly
+    * like DuckDB's div 1000. [[graft.Session.builder]], `Bench` and
+    * `Verify` set the key; a read never sets it on the caller's session. */
+  private[graft] def requireNanosAsLong(spark: SparkSession): Unit = {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val v = spark.conf.getOption(key)
+    require(v.exists(_.trim.equalsIgnoreCase("true")),
+      s"$key must be true to read the events table (graft.Session.builder " +
+        s"sets it), got ${v.getOrElse("unset")}")
+  }
+
   def events(spark: SparkSession, dir: String): DataFrame = {
-    // The events parquet carries TIMESTAMP(NANOS) which Spark's vectorized
-    // reader rejects; `spark.sql.legacy.parquet.nanosAsLong=true` reads
-    // nanos as long, truncated to micros exactly like DuckDB (div 1000).
-    // The library's own session builders (Run/Bench/Verify/tests) set the
-    // conf up front; for sessions built elsewhere it is enabled here ONLY
-    // if unset — an idempotent enable of an otherwise-unreadable type. A
-    // session that explicitly set it false is left alone (the read then
-    // fails with Spark's own unsupported-type error, which is what that
-    // configuration asks for).
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").isEmpty)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    requireNanosAsLong(spark)
     val raw = graft.sources.ParquetStats.read(spark, s"$dir/events.parquet")
     // Adapt to the physical type: under nanosAsLong a TIMESTAMP(NANOS)
     // column arrives as BIGINT nanoseconds (→ truncate to micros exactly

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.model.BuildCache
 
 /** Incremental near-dup detection against a persisted fingerprint store —
   * the production crawl pattern: each arriving shard is fingerprinted ONCE
@@ -23,7 +24,7 @@ import org.apache.spark.sql.functions._
   *                                   r<t> = tombstone-only rewrite tick
   *   <root>/tombstones/t=<n>/        (doc_id) pending deletions, applied
   *                                   by readers until the next fold
-  *   <root>/.staging/<uuid>/         in-flight writes (crash garbage)
+  *   <root>/<BuildCache.Staging>/<uuid>/  in-flight writes (crash garbage)
   * }}}
   * The member table carries EVERY (text_hash, doc_id) pair — not just a
   * per-batch min — precisely so a doc-level [[delete]] is exact: when a
@@ -88,14 +89,10 @@ object IncrementalDedup {
   private def batchesRoot(root: String) = s"$root/batches"
   private def compactRoot(root: String) = s"$root/compact"
 
-  private def hadoopFs(spark: SparkSession, root: String) =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
   /** Ids of committed batch directories (any generation). */
   private def batchIds(spark: SparkSession, root: String): Seq[Int] = {
     val p = new org.apache.hadoop.fs.Path(batchesRoot(root))
-    val fs = hadoopFs(spark, root)
+    val fs = BuildCache.fs(spark, root)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("batch=")).map(_.stripPrefix("batch=").toInt)
@@ -109,7 +106,7 @@ object IncrementalDedup {
     * place. */
   private def generations(spark: SparkSession, root: String): Seq[(Int, Int)] = {
     val p = new org.apache.hadoop.fs.Path(compactRoot(root))
-    val fs = hadoopFs(spark, root)
+    val fs = BuildCache.fs(spark, root)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("w=")).map { n =>
@@ -133,11 +130,6 @@ object IncrementalDedup {
   private def watermark(spark: SparkSession, root: String): Int =
     newestGen(spark, root).map(_._1).getOrElse(-1)
 
-  private def emptyOf(spark: SparkSession, schemaDdl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType.fromDDL(schemaDdl))
-
   /** The store's logical view of `sub` (reps or fps): the newest
     * generation plus every batch past its watermark — O([[CompactEvery]])
     * directories regardless of how many crawls ever ran.
@@ -158,7 +150,7 @@ object IncrementalDedup {
     val batches = batchIds(spark, root).filter(_ > w).sorted
       .map(i => spark.read.parquet(s"${batchesRoot(root)}/batch=$i/$sub"))
     (gen ++ batches).reduceOption(_ unionByName _)
-      .getOrElse(emptyOf(spark, schemaDdl))
+      .getOrElse(BuildCache.emptyOf(spark, schemaDdl))
   }
 
   /** RAW physical membership — every committed (text_hash, doc_id) pair,
@@ -188,7 +180,7 @@ object IncrementalDedup {
 
   private def tombDirIds(spark: SparkSession, root: String): Seq[Int] = {
     val p = new org.apache.hadoop.fs.Path(tombRoot(root))
-    val fs = hadoopFs(spark, root)
+    val fs = BuildCache.fs(spark, root)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("t=")).map(_.stripPrefix("t=").toInt)
@@ -202,20 +194,6 @@ object IncrementalDedup {
     if (ids.isEmpty) None
     else Some(ids.map(n => spark.read.parquet(s"${tombRoot(root)}/t=$n"))
       .reduce(_ unionByName _).select("doc_id").distinct())
-  }
-
-  /** Stage `write` under `<root>/.staging/<uuid>` and commit it with one
-    * atomic rename to `dst` — [[IvfIndex.renameIfAbsent]] semantics (an
-    * existing `dst` wins; the staging directory is dropped). */
-  private def commitStaged(spark: SparkSession, root: String,
-      dst: String)(write: String => Unit): Boolean = {
-    val fs = hadoopFs(spark, root)
-    val staging =
-      s"$root/.staging/${java.util.UUID.randomUUID.toString.take(12)}"
-    write(staging)
-    val dstPath = new org.apache.hadoop.fs.Path(dst)
-    fs.mkdirs(dstPath.getParent)
-    IvfIndex.renameIfAbsent(fs, new org.apache.hadoop.fs.Path(staging), dstPath)
   }
 
   /** Ingest one shard of `(doc_id, text)` rows into the store at `root`
@@ -282,7 +260,7 @@ object IncrementalDedup {
       val unseen = graft.model.Stage.pin(
         ingestUnseen(newTexts,
           gateMembers(members(spark, root), tombstones(spark, root))))
-      val committed = commitStaged(spark, root,
+      val committed = BuildCache.build(spark, root,
         s"${batchesRoot(root)}/batch=$batchId") { staging =>
         // the one text-processing pass of the ingest: winnow ONLY unseen.
         // (An AQE REBALANCE on these writes was measured in r16 and
@@ -316,7 +294,7 @@ object IncrementalDedup {
     * store stays bounded without ingests. */
   def delete(spark: SparkSession, root: String, docIds: DataFrame): Unit = {
     val n = (tombDirIds(spark, root) :+ -1).max + 1
-    val committed = commitStaged(spark, root, s"${tombRoot(root)}/t=$n") {
+    val committed = BuildCache.build(spark, root, s"${tombRoot(root)}/t=$n") {
       staging =>
         docIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
           .write.parquet(staging)
@@ -345,7 +323,7 @@ object IncrementalDedup {
     val pending = batchIds(spark, root).filter(_ > w)
     val tombs = tombDirIds(spark, root)
     if (pending.isEmpty && tombs.isEmpty) return
-    val fs = hadoopFs(spark, root)
+    val fs = BuildCache.fs(spark, root)
     if (pending.isEmpty && cur.isEmpty) {
       // tombstones against an empty store: nothing to fold them into
       tombs.foreach(n => fs.delete(
@@ -357,7 +335,7 @@ object IncrementalDedup {
     val foldedReps = reps(spark, root).distinct()
     val foldedFps = fps(spark, root).join(
       foldedReps.select("text_hash").distinct(), Seq("text_hash"), "left_semi")
-    val committed = commitStaged(spark, root,
+    val committed = BuildCache.build(spark, root,
       s"${compactRoot(root)}/${genName(newK, newT)}") { staging =>
       foldedReps.write.parquet(s"$staging/reps")
       foldedFps.write.parquet(s"$staging/fps")
@@ -554,31 +532,17 @@ object IncrementalDedup {
   // fresh store per invocation — that row prices the full lifecycle.
   // Production, however, repeats a much smaller operation: append a
   // tombstone to a store that ALREADY EXISTS and read back a receipt.
-  // The store here is built once per corpus fingerprint (the
-  // [[IvfIndex.fingerprint]]/renameIfAbsent discipline the ANN caches
-  // use) and every later takedown against it costs one takedown-sized
+  // The store here is a [[BuildCache]] entry, built once per corpus
+  // fingerprint, and every later takedown against it costs one takedown-sized
   // tombstone write plus pruned one-column scans of the member index —
   // never a re-ingest, never a detection replay.
 
-  /** Cache root for build-once steady-state stores. The default is a
-    * JVM-PRIVATE scratch dir (exit-hook-cleaned): unlike the immutable
-    * ANN caches, this store is MUTATED by every takedown (tombstone
-    * append, occasionally an auto-fold that deletes folded directories),
-    * and two processes sharing one root would race a reader in one
-    * against a compaction in the other. Build-once still holds where it
+  /** Conf key of the steady-store cache root
+    * ([[BuildCache.DedupSteady]]: JVM-private by default, because every
+    * takedown mutates its store). Build-once still holds where it
     * matters — within the process that repeats takedowns (and Bench's
-    * build/serve split is same-process). A deployment pointing this at
-    * the real crawl store must serialize takedowns through one operator
-    * — which a production takedown queue does anyway. */
-  val SteadyRootKey = "spark.graft.dedup.steady.root"
-
-  private lazy val jvmSteadyRoot: String =
-    graft.model.Scratch.dir("graft_dedup_steady")
-
-  private def steadyRootDir(spark: SparkSession): String =
-    spark.conf.getOption(SteadyRootKey).map(_.trim).filter(_.nonEmpty)
-      .orElse(sys.props.get("graft.dedup.steady.root"))
-      .getOrElse(jvmSteadyRoot)
+    * build/serve split is same-process). */
+  val SteadyRootKey: String = BuildCache.DedupSteady.key
 
   /** Version component of the steady-store cache key: the cache persists
     * across JVMs, so a change to the ingest recipe must invalidate
@@ -591,12 +555,12 @@ object IncrementalDedup {
     * compaction fold rules). */
   private val SteadyVersion = s"s2m$ReplayMod"
 
-  /** Code-identity component of the steady-store key — [[graft.model
-    * .PlanIdentity]] over the SAME extracted transforms [[ingest]]
+  /** Code-identity component of the steady-store key — a
+    * [[BuildCache.planHash]] over the SAME extracted transforms [[ingest]]
     * executes ([[ingestReps]]/[[ingestNewTexts]]/[[ingestFps]]/
     * [[gateMembers]]∘[[ingestUnseen]]) plus the replay-shard predicate,
     * composed over empty shaped stand-ins. Analysis-only; computed once
-    * per JVM (the canonical string is session-independent). A recipe
+    * per JVM (the plan string is session-independent). A recipe
     * edit without a [[SteadyVersion]] bump now misses the cache instead
     * of serving a store ingested by old code.
     *
@@ -607,74 +571,65 @@ object IncrementalDedup {
     * ingest call sites around them, or changes what [[storeView]] reads
     * (directory layout, generation rules), is plan-invisible here and
     * still requires a [[SteadyVersion]] bump. */
-  private lazy val steadyRecipeHashMemo =
-    new java.util.concurrent.atomic.AtomicReference[String]()
-
-  private def steadyRecipeHash(spark: SparkSession): String = {
-    val got = steadyRecipeHashMemo.get()
-    if (got != null) return got
-    val dummy = emptyOf(spark, "doc_id BIGINT, text STRING")
-    val unseenShaped = emptyOf(spark, "text_hash STRING, doc_id BIGINT, text STRING")
-    val membersShaped = emptyOf(spark, "text_hash STRING, doc_id BIGINT")
-    val tombShaped = emptyOf(spark, "doc_id BIGINT")
-    val shard = dummy.filter(pmod(col("doc_id"), lit(ReplayMod.toLong)) === 0L)
-    // the gate is hashed THROUGH gateMembers with a tombstone stand-in
-    // present, so the raw-vs-filtered view choice itself is covered: if
-    // gateMembers ever applies the anti-join, the hashed plan gains it
-    val h = graft.model.PlanIdentity.planHash(Seq(
-      ingestReps(dummy), ingestNewTexts(dummy),
-      ingestUnseen(ingestNewTexts(dummy),
-        gateMembers(membersShaped, Some(tombShaped))),
-      ingestFps(unseenShaped), shard))
-    steadyRecipeHashMemo.compareAndSet(null, h)
-    h
-  }
+  private[graft] def steadyRecipeHash(spark: SparkSession): String =
+    BuildCache.recipe("dedup_steady") {
+      def shaped(ddl: String) = BuildCache.emptyOf(spark, ddl)
+      val dummy = shaped("doc_id BIGINT, text STRING")
+      val shard =
+        dummy.filter(pmod(col("doc_id"), lit(ReplayMod.toLong)) === 0L)
+      // the gate is hashed THROUGH gateMembers with a tombstone stand-in
+      // present, so the raw-vs-filtered view choice itself is covered: if
+      // gateMembers ever applies the anti-join, the hashed plan gains it
+      BuildCache.planHash(Seq(
+        ingestReps(dummy), ingestNewTexts(dummy),
+        ingestUnseen(ingestNewTexts(dummy),
+          gateMembers(shaped("text_hash STRING, doc_id BIGINT"),
+            Some(shaped("doc_id BIGINT")))),
+        ingestFps(shaped("text_hash STRING, doc_id BIGINT, text STRING")),
+        shard))
+    }
 
   /** Cold steady-store builds JVM-wide (test-visible proof that repeated
     * takedowns reuse the cached store instead of re-ingesting). */
   val steadyBuilds = new AtomicLong(0L)
 
   /** The EXISTING store for `dir`'s corpus: built on first use (the
-    * corpus ingested as [[ReplayMod]] crawl shards under a staging name,
-    * committed with one atomic rename — concurrent cold builds
-    * last-writer-lose like every other fingerprint-keyed cache), reused
-    * by content fingerprint afterwards. Returns the store root.
+    * corpus ingested as [[ReplayMod]] crawl shards into a
+    * [[BuildCache]] staging directory, committed with one atomic rename
+    * — concurrent cold builds last-writer-lose, and a failed commit
+    * throws rather than leaving a missing store to read as an empty
+    * one), reused by content fingerprint afterwards. Returns the store
+    * root.
     *
     * The cache key folds in the CUSTOMER table's fingerprint alongside
     * the documents': unlike the immutable ANN caches, this store is
     * MUTATED by takedown tombstones whose ids derive from the customer
     * dimension (`doc_id mod |customers| mod ErasureMod`) — with a
-    * persistent [[steadyCacheRoot]], two corpora sharing identical
+    * persistent [[BuildCache.DedupSteady]] root, two corpora sharing identical
     * documents but different customer tables (or one corpus whose
     * customer dimension changed) must NOT share a store, or the second
     * reader inherits the first's erasure tombstones and its survivor
     * metrics silently drift from the oracle. A corpus with no customer
     * table keys on the documents alone. */
   def steadyStore(spark: SparkSession, dir: String): String = {
-    val fp = IvfIndex.fingerprint(spark, dir, "documents.parquet")
+    val fp = BuildCache.fingerprint(spark, dir, "documents.parquet")
     val cfp =
-      try IvfIndex.fingerprint(spark, dir, "customer.parquet").take(12)
+      try BuildCache.fingerprint(spark, dir, "customer.parquet").take(12)
       catch { case _: java.io.FileNotFoundException => "nocust" }
-    val cacheRoot = steadyRootDir(spark)
+    val cacheRoot = BuildCache.DedupSteady(spark)
     val root =
       s"$cacheRoot/store_${SteadyVersion}r${steadyRecipeHash(spark)}_${fp}_c$cfp"
-    val fs = hadoopFs(spark, root)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    if (fs.exists(rootPath)) return root
-    val staging = s"$cacheRoot/.build_" +
-      java.util.UUID.randomUUID.toString.take(12)
-    val docs = TextOps.documents(spark, dir)
-    (0 until ReplayMod).foreach { b =>
-      ingest(spark, staging, b, docs.filter(pmod(col("doc_id"),
-        lit(ReplayMod.toLong)) === b))
-    }
-    fs.mkdirs(rootPath.getParent)
     // count only the build that WON the commit race: the counter is
     // documented (and spec-asserted) as cold store builds, and a lost
     // race's discarded staging build must not spuriously fail the
     // build-once assertion under concurrent cold starts
-    if (IvfIndex.renameIfAbsent(fs,
-        new org.apache.hadoop.fs.Path(staging), rootPath))
+    if (BuildCache.build(spark, cacheRoot, root) { staging =>
+        val docs = TextOps.documents(spark, dir)
+        (0 until ReplayMod).foreach { b =>
+          ingest(spark, staging, b, docs.filter(pmod(col("doc_id"),
+            lit(ReplayMod.toLong)) === b))
+        }
+      })
       steadyBuilds.incrementAndGet()
     root
   }
@@ -704,18 +659,10 @@ object IncrementalDedup {
         lit("surviving_texts"), col("texts"))).as(Seq("metric", "value")))
   }
 
-  /** Runtime conf key selecting the warehouse root for the DAG-scheduled
-    * store — same session-scoped pattern as [[IvfIndex.cacheRoot]]:
-    * session conf, then the `graft.dedup.store.root` system property,
-    * then a JVM-tmpdir default that keeps the (spark, dir) query
-    * contract self-contained; a deployment points it at the real crawl
-    * store. */
-  val StoreRootKey = "spark.graft.dedup.store.root"
-
-  def storeRoot(spark: SparkSession): String =
-    spark.conf.getOption(StoreRootKey).map(_.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("graft.dedup.store.root",
-        s"${sys.props("java.io.tmpdir")}/graft_dedup_store"))
+  /** Conf key of the DAG-scheduled store's root
+    * ([[BuildCache.DedupStore]]); a deployment points it at the real
+    * crawl store. */
+  val StoreRootKey: String = BuildCache.DedupStore.key
 
   private def nextBatchId(spark: SparkSession, root: String): Int =
     (batchIds(spark, root) :+ watermark(spark, root)).max + 1
@@ -728,8 +675,9 @@ object IncrementalDedup {
     graft.pipeline.Registry.Model("dedup_store_ingest", "dedup",
       graft.pipeline.Registry.Table, Seq.empty,
       (s, dir, _) => {
-        val next = nextBatchId(s, storeRoot(s))
-        val n = ingest(s, storeRoot(s), next, TextOps.documents(s, dir))
+        val root = BuildCache.DedupStore(s)
+        val next = nextBatchId(s, root)
+        val n = ingest(s, root, next, TextOps.documents(s, dir))
         s.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(next, n)),
           org.apache.spark.sql.types.StructType.fromDDL(
@@ -742,7 +690,7 @@ object IncrementalDedup {
   val pairsRegistryModel: graft.pipeline.Registry.Model =
     graft.pipeline.Registry.Model("dedup_store_pairs", "dedup",
       graft.pipeline.Registry.Table, Seq("dedup_store_ingest"),
-      (s, _, _) => nearDupPairs(s, storeRoot(s)))
+      (s, _, _) => nearDupPairs(s, BuildCache.DedupStore(s)))
 
   /** The fold as a schedulable DAG node (downstream of the tick, so a
     * `Registry.run` lands ingest → fold in order): compacts batches AND
@@ -753,13 +701,14 @@ object IncrementalDedup {
     graft.pipeline.Registry.Model("dedup_store_compact", "dedup",
       graft.pipeline.Registry.Table, Seq("dedup_store_ingest"),
       (s, _, _) => {
-        compact(s, storeRoot(s))
-        val gen = newestGen(s, storeRoot(s))
+        val root = BuildCache.DedupStore(s)
+        compact(s, root)
+        val gen = newestGen(s, root)
           .map { case (k, t) => genName(k, t) }.getOrElse("")
         s.createDataFrame(
           java.util.Arrays.asList(org.apache.spark.sql.Row(gen,
-            batchIds(s, storeRoot(s)).count(_ > watermark(s, storeRoot(s))),
-            tombDirIds(s, storeRoot(s)).size)),
+            batchIds(s, root).count(_ > watermark(s, root)),
+            tombDirIds(s, root).size)),
           org.apache.spark.sql.types.StructType.fromDDL(
             "generation STRING, pending_batches INT, pending_tombstones INT"))
       })

@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
-import graft.pipeline.{ParquetSink, Registry, TableLayout}
+import graft.model.BuildCache
+import graft.pipeline.{Registry, TableLayout}
 
 /** Train-once / serve-many lifecycle for the IVF coarse quantizer.
   *
@@ -12,9 +13,9 @@ import graft.pipeline.{ParquetSink, Registry, TableLayout}
   * every `annIvf*` call (the round-3 shape) multiplied each query's cost
   * by the training scans. This object owns the index's storage lifecycle:
   *
-  *  - the centroid table is a first-class materialized model written
-  *    through the same [[graft.pipeline.TableSink]] machinery as every
-  *    other table (staged-rename atomic overwrite, read-back barrier);
+  *  - each index table is a build-once [[BuildCache]] entry: staged,
+  *    then committed by one rename, shared by every later query and
+  *    process;
   *  - the cache key is a content fingerprint of the embeddings parquet
   *    (file names + lengths + mtimes), so a data refresh retrains and an
   *    unchanged table never does;
@@ -35,24 +36,16 @@ object IvfIndex {
     * warm-index query path executes ZERO Lloyd iterations. */
   val trainings = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Runtime conf key selecting the warehouse root for cached index
-    * tables — a SESSION-scoped seam, not a mutable JVM global (two
-    * concurrent sessions can point at different warehouses without
-    * racing a `@volatile var`). Resolution: session conf, then the
-    * `graft.ann.index.root` system property (launcher-level override),
-    * then a shared JVM-tmpdir default that keeps the driver's
-    * (spark, dir) query contract self-contained; a deployment points it
-    * at the real warehouse. */
-  val RootKey = "spark.graft.ann.index.root"
-
-  def cacheRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootKey).map(_.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("graft.ann.index.root",
-        s"${sys.props("java.io.tmpdir")}/graft_ann_index"))
+  /** Conf key of the index warehouse root ([[BuildCache.AnnIndex]]). */
+  val RootKey: String = BuildCache.AnnIndex.key
 
   private val layer = "ann"
 
-  /** Algorithm-version component of every cache key: the cacheRoot
+  /** Where the index tables live: `<root>/ann`. */
+  private[ops] def tablesDir(spark: SparkSession): String =
+    s"${BuildCache.AnnIndex(spark)}/$layer"
+
+  /** Algorithm-version component of every cache key: the cache root
     * persists across JVM runs, so a code change to the training recipe
     * must invalidate cached indexes built by the old code (otherwise a
     * stale index serves results that diverge from the oracle's SQL
@@ -72,81 +65,25 @@ object IvfIndex {
       s"k${Similarity.IvfKMin}_${Similarity.IvfKMax}" +
       s"r${AnnIdentity.ivfRecipeHash(spark)}"
 
-  /** Content fingerprint of a source table (the embeddings by default —
-    * other content-keyed caches pass their own table, e.g. [[Bpe]]'s
-    * dictionary memo over the documents): md5 over the absolute
-    * path plus every data file's (root-relative path, length, mtime),
-    * directories walked recursively — the relative path (not the bare
-    * name) so files swapped between partition subdirectories change the
-    * fingerprint. Metadata-only — the same cost class as planning the
-    * scan, never a job. */
-  def fingerprint(spark: SparkSession, dir: String,
-      table: String = "embeddings.parquet"): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val rootUri = p.toUri.getPath
-    def rel(st: org.apache.hadoop.fs.FileStatus): String =
-      st.getPath.toUri.getPath.stripPrefix(rootUri)
-    def walk(st: org.apache.hadoop.fs.FileStatus): Seq[String] =
-      if (st.isDirectory)
-        fs.listStatus(st.getPath).toSeq.sortBy(_.getPath.getName).flatMap(walk)
-      else Seq(s"${rel(st)}:${st.getLen}:${st.getModificationTime}")
-    val desc = (p.toString +: walk(fs.getFileStatus(p))).mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(desc.getBytes("UTF-8")).map("%02x".format(_)).mkString
-  }
+  /** Content fingerprint of `dir`'s embeddings — the cache key's data
+    * component ([[BuildCache.fingerprint]]). */
+  private[ops] def corpusFingerprint(spark: SparkSession, dir: String): String =
+    BuildCache.fingerprint(spark, dir, "embeddings.parquet")
 
-  /** Build-if-absent through a process-unique staging name: ParquetSink's
-    * own staging path is deterministic, so two JVMs sharing the
-    * persistent cacheRoot (a Verify and a Bench run) could interleave
-    * writes and rename a corrupt directory into place. Building under a
-    * UUID name and renaming into the final name only if still absent
-    * makes concurrent cold builds last-writer-loses instead of
-    * corrupting; the losing build's staging table is dropped. */
-  private[ops] def buildIfAbsent(spark: SparkSession, sink: ParquetSink,
-      name: String, layout: TableLayout = TableLayout.none)
-      (build: => DataFrame): Unit = {
-    if (sink.exists(spark, layer, name)) return
-    val tmp = s"${name}_b${java.util.UUID.randomUUID.toString.take(8)}"
-    sink.overwrite(spark, layer, tmp, build, layout)
-    val fs = new org.apache.hadoop.fs.Path(cacheRoot(spark))
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val src = new org.apache.hadoop.fs.Path(s"${cacheRoot(spark)}/$layer/$tmp")
-    val dst = new org.apache.hadoop.fs.Path(s"${cacheRoot(spark)}/$layer/$name")
-    renameIfAbsent(fs, src, dst)
-    ()
-  }
-
-  /** Move `src` into place at `dst` unless `dst` already exists, in which
-    * case another process won the cold-build race and `src` is dropped
-    * (its index is equally valid). Returns true iff `src` became `dst`.
-    *
-    * A bare `fs.rename(src, dst)` is NOT a safe last-writer-loses
-    * primitive here: on RawLocalFileSystem a failed `File.renameTo`
-    * (e.g. dst is a non-empty directory) falls through to
-    * `FileUtil.copy`, whose checkDest NESTS src *inside* the existing
-    * dst directory and reports success — the losing JVM's staging table
-    * would land inside the winner's cached table and corrupt every later
-    * read of the index. So: treat an existing dst as a lost race before
-    * renaming, and afterwards verify the copy-fallback signature (our
-    * staging directory nested under dst) did not appear in the window
-    * between the check and the rename, repairing if it did. */
-  private[graft] def renameIfAbsent(fs: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean = {
-    if (fs.exists(dst)) { fs.delete(src, true); return false }
-    val renamed =
-      try fs.rename(src, dst)
-      catch { case _: java.io.IOException => false }
-    if (!renamed) { if (fs.exists(src)) fs.delete(src, true); return false }
-    val nested = new org.apache.hadoop.fs.Path(dst, src.getName)
-    if (fs.exists(nested)) {
-      // dst appeared between the exists check and the rename and the
-      // rename degraded to a nesting copy: undo it, keep the winner's dst
-      fs.delete(nested, true)
-      if (fs.exists(src)) fs.delete(src, true)
-      false
-    } else true
+  /** The index table `name`, built from `build` first if no committed
+    * build exists ([[BuildCache.build]]: two JVMs sharing the
+    * persistent root resolve a cold-build race last-writer-loses). The
+    * build writes straight into its staging directory, partitioned by
+    * `partitionBy`. */
+  private[ops] def cached(spark: SparkSession, name: String,
+      partitionBy: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
+    val dst = s"${tablesDir(spark)}/$name"
+    BuildCache.build(spark, tablesDir(spark), dst) { staging =>
+      val w = build.write
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(staging)
+    }
+    spark.read.parquet(dst)
   }
 
   // ---- Deletion lifecycle (takedown/opt-out) ----
@@ -172,19 +109,15 @@ object IvfIndex {
 
   /** The deletion ledger root for `dir`'s corpus. */
   def defaultLedger(spark: SparkSession, dir: String): String =
-    s"${cacheRoot(spark)}/$layer/del_${fingerprint(spark, dir)}"
+    s"${tablesDir(spark)}/del_${corpusFingerprint(spark, dir)}"
 
   private def resolveLedger(spark: SparkSession, dir: String,
       ledger: Option[String]): String =
     ledger.getOrElse(defaultLedger(spark, dir))
 
-  private def fsOf(spark: SparkSession, path: String) =
-    new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
   private def tombDirIds(spark: SparkSession, led: String): Seq[Int] = {
     val p = new org.apache.hadoop.fs.Path(led)
-    val fs = fsOf(spark, led)
+    val fs = BuildCache.fs(spark, led)
     if (!fs.exists(p)) Seq.empty
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("t=")).map(_.stripPrefix("t=").toInt)
@@ -194,7 +127,7 @@ object IvfIndex {
     * generation (marker dirs `folded_<m>`), or -1. */
   private def foldedMark(spark: SparkSession, led: String): Int = {
     val p = new org.apache.hadoop.fs.Path(led)
-    val fs = fsOf(spark, led)
+    val fs = BuildCache.fs(spark, led)
     if (!fs.exists(p)) -1
     else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(_.startsWith("folded_")).map(_.stripPrefix("folded_").toInt)
@@ -219,15 +152,11 @@ object IvfIndex {
     * next [[compactIndex]]. */
   def deleteVectors(spark: SparkSession, led: String,
       vecIds: DataFrame): Unit = {
-    val fs = fsOf(spark, led)
     val n = (tombDirIds(spark, led) :+ foldedMark(spark, led) :+ -1).max + 1
-    val staging = s"$led/.staging/${java.util.UUID.randomUUID.toString.take(12)}"
-    vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
-      .write.parquet(staging)
-    val dst = new org.apache.hadoop.fs.Path(s"$led/t=$n")
-    fs.mkdirs(dst.getParent)
-    require(renameIfAbsent(fs, new org.apache.hadoop.fs.Path(staging), dst),
-      s"tombstone $n already committed")
+    require(BuildCache.build(spark, led, s"$led/t=$n") { staging =>
+      vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
+        .write.parquet(staging)
+    }, s"tombstone $n already committed")
   }
 
   /** The physical corpus a generation's tables are built from: the raw
@@ -267,17 +196,16 @@ object IvfIndex {
     if (pending.isEmpty) return
     val newM = pending.max
     val prevEff = effectiveDir(spark, dir, ledger)
-    val prevFp = fingerprint(spark, prevEff)
-    val fs = fsOf(spark, led)
-    // 1. survivor snapshot: generation-m corpus minus the whole ledger
+    val prevFp = corpusFingerprint(spark, prevEff)
+    val fs = BuildCache.fs(spark, led)
+    // 1. survivor snapshot: generation-m corpus minus the whole ledger (a
+    //    lost commit race leaves the winner's identical snapshot in place)
     val del = deletedIds(spark, led).get
-    val staging = s"$led/.staging/${java.util.UUID.randomUUID.toString.take(12)}"
-    spark.read.parquet(s"$prevEff/embeddings.parquet")
-      .join(broadcast(del), Seq("vec_id"), "left_anti")
-      .write.parquet(s"$staging/embeddings.parquet")
-    val snapDst = new org.apache.hadoop.fs.Path(s"$led/corpus_d$newM")
-    renameIfAbsent(fs, new org.apache.hadoop.fs.Path(staging), snapDst)
-    require(fs.exists(snapDst), "survivor snapshot failed to commit")
+    BuildCache.build(spark, led, s"$led/corpus_d$newM") { staging =>
+      spark.read.parquet(s"$prevEff/embeddings.parquet")
+        .join(broadcast(del), Seq("vec_id"), "left_anti")
+        .write.parquet(s"$staging/embeddings.parquet")
+    }
     // 2. flip readers to the new generation
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$led/folded_$newM"))
     // 3. warm the generation eagerly — the fold IS the rebuild, so
@@ -290,7 +218,7 @@ object IvfIndex {
     // 4. sweep the previous generation: every cached table keyed by the
     //    old corpus fingerprint (they still carry deleted rows at rest),
     //    plus the old survivor snapshot
-    val tables = new org.apache.hadoop.fs.Path(s"${cacheRoot(spark)}/$layer")
+    val tables = new org.apache.hadoop.fs.Path(tablesDir(spark))
     if (fs.exists(tables)) fs.listStatus(tables).toSeq.foreach { st =>
       val n = st.getPath.getName
       if (n.endsWith(s"_$prevFp") && !n.startsWith("del_") &&
@@ -304,17 +232,15 @@ object IvfIndex {
   /** The trained centroid table for `dir`'s embeddings: read from the
     * index warehouse when present, trained-and-materialized once when not.
     * Serialized JVM-wide so concurrent queries share one build;
-    * cross-process races resolve via [[buildIfAbsent]]. Trained on the
+    * cross-process races resolve via [[cached]]. Trained on the
     * deletion ledger's current GENERATION (stale toward pending deletes
     * until [[compactIndex]] folds them — approximation parameters, not
     * data rows). */
   def centroids(spark: SparkSession, dir: String,
       ledger: Option[String] = None): DataFrame = synchronized {
     val eff = effectiveDir(spark, dir, ledger)
-    val sink = new ParquetSink(cacheRoot(spark))
-    val name = s"ivf_${algoVersion(spark)}_${fingerprint(spark, eff)}"
-    buildIfAbsent(spark, sink, name)(Similarity.ivfCentroids(spark, eff))
-    sink.read(spark, layer, name)
+    cached(spark, s"ivf_${algoVersion(spark)}_${corpusFingerprint(spark, eff)}")(
+      Similarity.ivfCentroids(spark, eff))
   }
 
   /** The inverted lists for `dir`'s embeddings, materialized PARTITIONED
@@ -342,17 +268,14 @@ object IvfIndex {
   private def listsRaw(spark: SparkSession, dir: String,
       ledger: Option[String]): DataFrame = synchronized {
     val eff = effectiveDir(spark, dir, ledger)
-    val sink = new ParquetSink(cacheRoot(spark))
-    val name = s"ivf_lists_${algoVersion(spark)}_${fingerprint(spark, eff)}"
+    val name = s"ivf_lists_${algoVersion(spark)}_${corpusFingerprint(spark, eff)}"
     // repartition on the partition key so each list directory gets one
     // file instead of one-per-writing-task — without it a k-way
     // partitionBy from t tasks can write t×k small files (measured: the
     // 10× cold build was dominated by exactly that)
-    buildIfAbsent(spark, sink, name,
-      TableLayout(partitionBy = Seq("centroid_id")))(
+    cached(spark, name, Seq("centroid_id"))(
       Similarity.buildIvfLists(spark, eff, centroids(spark, dir, ledger))
         .repartition(col("centroid_id")))
-    sink.read(spark, layer, name)
       .select(col("vec_id"), col("centroid_id").cast("long").as("centroid_id"),
         col("vec"), col("nrm"))
   }
@@ -378,10 +301,8 @@ object IvfIndex {
   def pqCodebooks(spark: SparkSession, dir: String,
       ledger: Option[String] = None): DataFrame = synchronized {
     val eff = effectiveDir(spark, dir, ledger)
-    val sink = new ParquetSink(cacheRoot(spark))
-    val name = s"pq_${pqAlgoVersion(spark)}_${fingerprint(spark, eff)}"
-    buildIfAbsent(spark, sink, name)(Similarity.pqCodebooks(spark, eff))
-    sink.read(spark, layer, name)
+    cached(spark, s"pq_${pqAlgoVersion(spark)}_${corpusFingerprint(spark, eff)}")(
+      Similarity.pqCodebooks(spark, eff))
   }
 
   /** Compressed-code encode passes this JVM has run (int8 + PQ) — the
@@ -427,10 +348,9 @@ object IvfIndex {
       ledger: Option[String] = None): DataFrame = synchronized {
     val led = resolveLedger(spark, dir, ledger)
     val eff = effectiveDir(spark, dir, ledger)
-    val sink = new ParquetSink(cacheRoot(spark))
-    val name = s"int8_codes_${int8Version(spark)}_${fingerprint(spark, eff)}"
-    buildIfAbsent(spark, sink, name,
-      TableLayout(partitionBy = Seq("ivf_centroid"))) {
+    val name =
+      s"int8_codes_${int8Version(spark)}_${corpusFingerprint(spark, eff)}"
+    val codes = cached(spark, name, Seq("ivf_centroid")) {
       codeBuilds.incrementAndGet()
       Similarity.int8Codes(spark, eff)
         .join(ivfAssignment(spark, dir, ledger), Seq("vec_id"))
@@ -438,7 +358,7 @@ object IvfIndex {
     }
     // partition column comes back from directory names typed int and
     // ordered last — normalize so serving matches the build shape
-    minusDeleted(spark, sink.read(spark, layer, name)
+    minusDeleted(spark, codes
       .select(col("vec_id"), col("scale"), col("q"), col("qq"),
         col("ivf_centroid").cast("long").as("ivf_centroid")), led)
   }
@@ -455,26 +375,25 @@ object IvfIndex {
       ledger: Option[String] = None): DataFrame = synchronized {
     val led = resolveLedger(spark, dir, ledger)
     val eff = effectiveDir(spark, dir, ledger)
-    val sink = new ParquetSink(cacheRoot(spark))
-    val name =
-      s"pq_codes_${PqCodesVersion}_${pqAlgoVersion(spark)}_${fingerprint(spark, eff)}"
-    buildIfAbsent(spark, sink, name,
-      TableLayout(partitionBy = Seq("ivf_centroid"))) {
+    val name = s"pq_codes_${PqCodesVersion}_${pqAlgoVersion(spark)}_" +
+      corpusFingerprint(spark, eff)
+    val codes = cached(spark, name, Seq("ivf_centroid")) {
       codeBuilds.incrementAndGet()
       Similarity.pqAssignCodes(spark, eff, pqCodebooks(spark, dir, ledger))
         .join(ivfAssignment(spark, dir, ledger), Seq("vec_id"))
         .repartition(col("ivf_centroid"))
     }
-    minusDeleted(spark, sink.read(spark, layer, name)
+    minusDeleted(spark, codes
       .select(col("vec_id"), col("subspace"), col("centroid_id"),
         col("ivf_centroid").cast("long").as("ivf_centroid")), led)
   }
 
-  /** Drop every cached index under [[cacheRoot]] (tests; data migrations
-    * would instead let fingerprints age out naturally). */
+  /** Drop every cached index under the [[BuildCache.AnnIndex]] root
+    * (tests; data migrations would instead let fingerprints age out
+    * naturally). */
   def clearCache(spark: SparkSession): Unit = synchronized {
-    val p = new org.apache.hadoop.fs.Path(cacheRoot(spark))
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val p = new org.apache.hadoop.fs.Path(BuildCache.AnnIndex(spark))
+    val fs = BuildCache.fs(spark, p.toString)
     if (fs.exists(p)) fs.delete(p, true)
   }
 

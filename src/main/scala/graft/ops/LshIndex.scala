@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.{ParquetSink, TableLayout}
 
 /** Train-once / serve-many lifecycle for the hyperplane-LSH signatures —
   * the [[IvfIndex]] pattern applied to the second ANN family. The
@@ -27,11 +26,17 @@ object LshIndex {
 
   def prefixLen(planes: Int): Int = math.min(planes, MaxPrefixBits)
 
-  private val layer = "ann"
-
   private[ops] def prefixCol(bucket: org.apache.spark.sql.Column,
       planes: Int): org.apache.spark.sql.Column =
     concat(lit("p"), substring(bucket, 1, prefixLen(planes)))
+
+  /** Version of the signature table: the DERIVATION (the signature
+    * expression, the prefix column, SignBits' md5 coefficient scheme and
+    * fold order) is covered by [[AnnIdentity.lshRecipeHash]] — a recipe
+    * edit moves the key without a hand bump; the literal tracks what the
+    * hash cannot see (directory layout, commit protocol). */
+  private def sigVersion(spark: SparkSession): String =
+    s"s1r${AnnIdentity.lshRecipeHash(spark)}"
 
   /** The signature table for `dir`'s embeddings (with `planes` sign bits)
     * served from the index warehouse, built once per data fingerprint.
@@ -45,29 +50,18 @@ object LshIndex {
     * from the pre-deletion row count by the callers — a recall
     * parameter, not a correctness input, and takedown volumes never move
     * log₂N. */
-  /** Version of the signature table: the DERIVATION (the signature
-    * expression, the prefix column, SignBits' md5 coefficient scheme and
-    * fold order) is covered by [[AnnIdentity.lshRecipeHash]] — a recipe
-    * edit moves the key without a hand bump; the literal tracks what the
-    * hash cannot see (directory layout, commit protocol). */
-  private def sigVersion(spark: SparkSession): String =
-    s"s1r${AnnIdentity.lshRecipeHash(spark)}"
-
   def signatures(spark: SparkSession, dir: String, planes: Int,
       build: String => DataFrame): DataFrame = synchronized {
     val led = IvfIndex.defaultLedger(spark, dir)
     val eff = IvfIndex.effectiveDir(spark, dir)
-    val sink = new ParquetSink(IvfIndex.cacheRoot(spark))
-    val name =
-      s"lsh_sigs_${sigVersion(spark)}p${planes}_${IvfIndex.fingerprint(spark, eff)}"
+    val name = s"lsh_sigs_${sigVersion(spark)}p${planes}_" +
+      IvfIndex.corpusFingerprint(spark, eff)
     // one file per prefix directory (see IvfIndex.lists: a p-way
-    // partitionBy from t tasks otherwise writes t×p small files);
-    // build-if-absent races resolve via the UUID-staged rename
-    IvfIndex.buildIfAbsent(spark, sink, name,
-      TableLayout(partitionBy = Seq("bucket_prefix")))(
+    // partitionBy from t tasks otherwise writes t×p small files)
+    val sigs = IvfIndex.cached(spark, name, Seq("bucket_prefix"))(
       build(eff).withColumn("bucket_prefix", prefixCol(col("bucket"), planes))
         .repartition(col("bucket_prefix")))
-    IvfIndex.minusDeleted(spark, sink.read(spark, layer, name)
+    IvfIndex.minusDeleted(spark, sigs
       .select(col("vec_id"), col("vec"), col("nrm"), col("bucket"),
         col("bucket_prefix")), led)
   }

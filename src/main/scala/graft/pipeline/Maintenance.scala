@@ -246,42 +246,22 @@ object Maintenance {
     } yield st.getPath.toString
   }
 
-  /** GC the persistent ANN index cache ([[graft.ops.IvfIndex.cacheRoot]]):
-    * every data refresh changes the embeddings fingerprint, so the cache
-    * accumulates one centroid + lists (+ LSH signature) table per
-    * superseded data version, plus UUID-staged leftovers from builds that
-    * lost a race or crashed. Keeps tables whose name ends in a live
-    * fingerprint; deletes everything else older than `retentionMs`
-    * (retention, not immediate: a query started against the old data
-    * version may still be serving from its index). Returns deleted
-    * table names. */
-  def vacuumAnnIndexCache(spark: SparkSession, cacheRoot: String,
-      liveFingerprints: Set[String], retentionMs: Long,
-      nowMs: Long): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(s"$cacheRoot/ann")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Seq.empty
-    for {
-      st <- fs.listStatus(root).toSeq
-      n = st.getPath.getName
-      if !liveFingerprints.exists(fp => n.endsWith(s"_$fp")) &&
-        st.getModificationTime < nowMs - retentionMs &&
-        fs.delete(st.getPath, true)
-    } yield n
-  }
-
-  /** GC a fingerprint-keyed cache ROOT — the dq silver trios
-    * ([[graft.quality.SilverStage.cacheRoot]], entries
-    * `trio_<ver>_<fp>`) and the steady dedup stores
-    * (`graft.dedup.steady.root`, entries `store_<ver>_<fp>_c<fp>`)
-    * accumulate one entry per superseded data version plus `.build_*`
-    * staging leftovers from builds that lost a commit race or crashed,
-    * exactly like the ANN cache. Keeps entries whose name CONTAINS a
-    * live fingerprint (callers pass the same — possibly truncated —
-    * fingerprint form the cache key embeds); deletes everything else
-    * older than `retentionMs` (retention, not immediate: a query
-    * started against the old data version may still be serving from its
-    * entry). Returns deleted entry names.
+  /** GC one fingerprint-keyed cache directory ([[graft.model.BuildCache]]
+    * entries): the dq trios (`trio_<ver>_<fp>` under the
+    * [[graft.model.BuildCache.DqSilver]] root), the steady dedup stores
+    * (`store_<ver>_<fp>_c<fp>` under
+    * [[graft.model.BuildCache.DedupSteady]]) and the ANN index tables
+    * (`<name>_<fp>` under `<`[[graft.model.BuildCache.AnnIndex]]`>/ann`).
+    * Each accumulates one entry per superseded data version, plus staging
+    * leftovers from builds that crashed or lost a commit race. Keeps
+    * entries whose name CONTAINS a live fingerprint (callers pass the
+    * same — possibly truncated — form the cache key embeds) and deletes
+    * every other entry older than `retentionMs` (retention, not
+    * immediate: a query started against the old data version may still
+    * be serving from its entry). Staging leftovers go on age alone: a
+    * staging directory is never an entry, whatever its build was keyed
+    * by. Returns deleted entry names (a staging leftover as
+    * `<`[[graft.model.BuildCache.Staging]]`>/<name>`).
     *
     * Catalog registrations of BUCKETED trios
     * (`graft_dq_trio_<lochash>_*` EXTERNAL tables) whose location no
@@ -295,19 +275,25 @@ object Maintenance {
     * location still exists — any live or retained trio — is left
     * untouched regardless of fingerprint, because the lochash name
     * does not reveal which corpus it serves. */
-  def vacuumFingerprintCache(spark: SparkSession, cacheRoot: String,
+  def vacuumCache(spark: SparkSession, cacheDir: String,
       liveFingerprints: Set[String], retentionMs: Long,
       nowMs: Long): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(cacheRoot)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val fs = graft.model.BuildCache.fs(spark, cacheDir)
+    val root = new org.apache.hadoop.fs.Path(cacheDir)
     if (!fs.exists(root)) return Seq.empty
-    val deleted = for {
-      st <- fs.listStatus(root).toSeq
-      n = st.getPath.getName
-      if !liveFingerprints.exists(fp => fp.nonEmpty && n.contains(fp)) &&
-        st.getModificationTime < nowMs - retentionMs &&
-        fs.delete(st.getPath, true)
-    } yield n
+    def aged(st: org.apache.hadoop.fs.FileStatus) =
+      st.getModificationTime < nowMs - retentionMs
+    def drop(st: org.apache.hadoop.fs.FileStatus, name: String) =
+      if (aged(st) && fs.delete(st.getPath, true)) Seq(name) else Nil
+    val deleted = fs.listStatus(root).toSeq.flatMap { st =>
+      val n = st.getPath.getName
+      if (n == graft.model.BuildCache.Staging)
+        fs.listStatus(st.getPath).toSeq
+          .flatMap(s => drop(s, s"$n/${s.getPath.getName}"))
+      else if (liveFingerprints.exists(fp => fp.nonEmpty && n.contains(fp)))
+        Nil
+      else drop(st, n)
+    }
     dropOrphanedTrioTables(spark)
     deleted
   }

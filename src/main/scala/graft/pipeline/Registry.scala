@@ -295,10 +295,6 @@ object Registry {
     resolved.toSeq.map(byName)
   }
 
-  /** dbt node-selection graph operators (`dbt run --select`): `m` selects
-    * the model alone, `m+` adds its transitive descendants, `+m` its
-    * transitive ancestors, `+m+` both; multiple space- or comma-separated
-    * selectors union. */
   /** Logical fingerprint per model: md5 of the canonicalized analyzed
     * plan of the model's build over `sourceDir`, with the whole DAG
     * chained lazily (planning only — no job runs). The exprId-normalized
@@ -361,6 +357,10 @@ object Registry {
       case (n, fp) if !state.get(n).contains(fp) => n
     }.toSet
 
+  /** dbt node-selection graph operators (`dbt run --select`): `m` selects
+    * the model alone, `m+` adds its transitive descendants, `+m` its
+    * transitive ancestors, `+m+` both; multiple space- or comma-separated
+    * selectors union. */
   def selectClosure(selector: String, all: Seq[Model] = models,
       stateModified: Option[Set[String]] = None,
       stateNew: Option[Set[String]] = None): Set[String] = {

@@ -111,8 +111,6 @@ object Checks {
 
   // ---- single-pass count forms (for the aggregated summary query) ----
 
-  /** Surplus-row count for `unique`: count(col) - count(distinct col).
-    * Zero iff the dbt test passes. */
   /** dbt `--store-failures` analog for `accepted_values`: the stored
     * failure table is (value_field, n_records) per off-inventory value —
     * the rows a user debugs with, not just the count. NULLs are the
@@ -131,6 +129,8 @@ object Checks {
       .agg(count(lit(1)).as("n_records"))
       .filter(col("n_records") > 1)
 
+  /** Surplus-row count for `unique`: count(col) - count(distinct col).
+    * Zero iff the dbt test passes. */
   def uniqueViolations(c: String): Column =
     (count(col(c)) - countDistinct(col(c))).as(s"$c.unique")
 

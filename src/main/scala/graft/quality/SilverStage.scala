@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ops.IvfIndex
+import graft.model.BuildCache
 
 /** Build-once, fingerprint-keyed columnar stage for the silver trio the
   * dq rows share.
@@ -15,13 +15,13 @@ import graft.ops.IvfIndex
   * cost (the silver chains: two joins plus the full-width projections)
   * paid three times per suite. The trio is deterministic given the raw
   * inputs (injectable [[graft.model.Clock]], md5 surrogate keys — no
-  * wall-clock, no sampling), so it qualifies for the ANN-cache
-  * discipline ([[IvfIndex]]): build ONCE per content fingerprint of the
-  * raw tables it derives from (`customer.parquet` + `orders.parquet` —
-  * every raw_customers/orders/payments column is a function of those
-  * two), commit with an atomic staged rename (concurrent cold builds
-  * last-writer-lose), and serve every later dq evaluation a pruned scan
-  * of the staged files. Unlike the steady-state dedup store the
+  * wall-clock, no sampling), so it is a [[BuildCache]] entry: built ONCE
+  * per content fingerprint of the raw tables it derives from
+  * (`customer.parquet` + `orders.parquet` — every
+  * raw_customers/orders/payments column is a function of those two),
+  * committed by one staged rename (concurrent cold builds
+  * last-writer-lose), and served to every later dq evaluation as a
+  * pruned scan of the staged files. Unlike the steady-state dedup store the
   * staged trio is IMMUTABLE after commit, so cross-process sharing is
   * safe — a Verify and a Bench run against the same corpus share one
   * build.
@@ -42,19 +42,8 @@ import graft.ops.IvfIndex
   */
 object SilverStage {
 
-  /** Runtime conf key selecting the warehouse root for staged trios —
-    * session-scoped like every other graft seam, not a mutable JVM
-    * global. Resolution: session conf, then the `graft.dq.silver.root`
-    * system property (launcher-level override), then a JVM-tmpdir
-    * default that keeps the (spark, dir) query contract self-contained;
-    * a deployment points it at the real warehouse scratch. Safe to share
-    * across processes: a committed trio is immutable. */
-  val RootKey = "spark.graft.dq.silver.root"
-
-  def cacheRoot(spark: SparkSession): String =
-    spark.conf.getOption(RootKey).map(_.trim).filter(_.nonEmpty)
-      .getOrElse(sys.props.getOrElse("graft.dq.silver.root",
-        s"${sys.props("java.io.tmpdir")}/graft_dq_silver"))
+  /** Conf key of the trio cache root ([[BuildCache.DqSilver]]). */
+  val RootKey: String = BuildCache.DqSilver.key
 
   /** Hand-bumped version component of the cache key — kept for recipe
     * changes the plan hash below cannot see (the staged WRITE layout,
@@ -62,33 +51,21 @@ object SilverStage {
     * automatically by [[recipeHash]]. */
   private val Version = "v2"
 
-  /** Code-identity component of the cache key: md5 of the trio's
-    * ANALYZED canonical plans (schema + expression tree), composed
-    * lazily over the raw inputs — analysis only, never a job. The trio
-    * cache persists across JVMs, so a change to Silver/Bronze/RawSources
-    * semantics (or the Clock pins) must invalidate trios built by old
-    * code; with a hand-bumped constant alone, a recipe edit that forgot
-    * the bump would serve stale rows as a baffling oracle mismatch on
-    * untouched dq code. Any expression or schema change reaches the
-    * canonical plan string and therefore the key; a spurious difference
-    * (Spark upgrade changing canonicalization) only costs one rebuild,
-    * never staleness. */
-  private def recipeHash(spark: SparkSession, dir: String): String =
-    recipeHashes.computeIfAbsent(dir, _ => {
+  /** Code-identity component of the cache key: the
+    * [[BuildCache.planHash]] of the trio's plans, composed lazily over
+    * the raw inputs — analysis only, never a job. A change to
+    * Silver/Bronze/RawSources semantics (or the Clock pins) moves the
+    * key, so a trio built by old code is never served. */
+  private[graft] def recipeHash(spark: SparkSession, dir: String): String =
+    BuildCache.recipe(s"dq_trio|$dir") {
       val sc = graft.silver.Silver.customersFrom(
         graft.bronze.Bronze.customers(spark, dir))
       val so = graft.silver.Silver.ordersFrom(
         graft.bronze.Bronze.orders(spark, dir), sc)
       val sp = graft.silver.Silver.paymentsFrom(
         graft.bronze.Bronze.payments(spark, dir), so)
-      planHash(Seq(sc, so, sp))
-    })
-
-  private val recipeHashes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def planHash(frames: Seq[DataFrame]): String =
-    graft.model.PlanIdentity.planHash(frames)
+      BuildCache.planHash(Seq(sc, so, sp))
+    }
 
   /** Cold trio builds that WON the commit race, JVM-wide — test-visible
     * proof that repeated dq evaluations reuse the staged trio. */
@@ -175,15 +152,13 @@ object SilverStage {
     * would silently trust a per-bucket grouping the files don't have. */
   private def layoutToken(spark: SparkSession, dir: String): String = {
     val keys = TableNames.map(BucketKeys).mkString(",")
-    val kh = java.security.MessageDigest.getInstance("MD5")
-      .digest(keys.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(6)
-    s"b${buckets(spark, dir)}k$kh"
+    s"b${buckets(spark, dir)}k${BuildCache.md5(keys).take(6)}"
   }
 
   private[quality] def trioRoot(spark: SparkSession, dir: String): String = {
-    val fp = IvfIndex.fingerprint(spark, dir, "customer.parquet").take(16) +
-      IvfIndex.fingerprint(spark, dir, "orders.parquet").take(16)
-    s"${cacheRoot(spark)}/trio_${Version}r${recipeHash(spark, dir)}" +
+    val fp = BuildCache.fingerprint(spark, dir, "customer.parquet").take(16) +
+      BuildCache.fingerprint(spark, dir, "orders.parquet").take(16)
+    s"${BuildCache.DqSilver(spark)}/trio_${Version}r${recipeHash(spark, dir)}" +
       s"${layoutToken(spark, dir)}_$fp"
   }
 
@@ -207,12 +182,10 @@ object SilverStage {
   private def bucketedTable(spark: SparkSession, loc: String,
       name: String, n: Int): DataFrame = {
     val key = BucketKeys(name)
-    val id = java.security.MessageDigest.getInstance("MD5")
-      .digest(loc.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    val tbl = s"graft_dq_trio_${id}_$name"
+    val tbl = s"graft_dq_trio_${BuildCache.md5(loc).take(12)}_$name"
     if (!spark.catalog.tableExists(tbl)) {
       val schema = spark.read.parquet(loc).schema.toDDL
-      // the location is conf-derived (cacheRoot): escape single quotes
+      // the location is conf-derived (the cache root): escape single quotes
       // before interpolating into the DDL string literal, or a quote in
       // the configured root breaks the statement (robustness, not
       // security — the conf is operator-controlled)
@@ -254,17 +227,20 @@ object SilverStage {
   def payments(spark: SparkSession, dir: String): DataFrame =
     tables(spark, dir)("silver_payments")
 
-  /** Build-if-absent; returns the committed trio root. The layers are
-    * written bottom-up with each layer READ BACK from its staged files
-    * before the next derives from it: one evaluation per layer, once
-    * per corpus. */
+  /** Build-if-absent; returns the committed trio root. */
   private def ensure(spark: SparkSession, dir: String): String = {
     val root = trioRoot(spark, dir)
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(rootPath)) return root
-    val staging = s"${cacheRoot(spark)}/.build_" +
-      java.util.UUID.randomUUID.toString.take(12)
+    if (BuildCache.build(spark, BuildCache.DqSilver(spark), root)(
+        writeTrio(spark, dir, _)))
+      builds.incrementAndGet()
+    root
+  }
+
+  /** Write the trio under `staging`, bottom-up, each layer READ BACK from
+    * its staged files before the next derives from it: one evaluation
+    * per layer, once per corpus. */
+  private def writeTrio(spark: SparkSession, dir: String,
+      staging: String): Unit = {
     // one derivation for the whole build: the layout the commit lands
     // must be the layout the key (and the serve path) computed
     val n = buckets(spark, dir)
@@ -279,19 +255,5 @@ object SilverStage {
     val sp = graft.silver.Silver.paymentsFrom(
       graft.bronze.Bronze.payments(spark, dir), soStaged)
     writeStaged(spark, sp, s"$staging/silver_payments", "silver_payments", n)
-    fs.mkdirs(rootPath.getParent)
-    if (IvfIndex.renameIfAbsent(fs,
-        new org.apache.hadoop.fs.Path(staging), rootPath))
-      builds.incrementAndGet()
-    else if (!fs.exists(rootPath))
-      // a false return normally means another process won the commit race
-      // — but if no winner's trio is in place the rename genuinely FAILED
-      // (IO error, permissions) and the staging dir is already dropped;
-      // surface that here instead of letting callers read a nonexistent
-      // path and misdiagnose a confusing path-not-found
-      sys.error(s"SilverStage: commit rename of $staging -> $root failed " +
-        "with no concurrent winner in place — staged trio lost; check " +
-        "filesystem permissions/health under the trio cache root")
-    root
   }
 }

@@ -45,8 +45,7 @@ object StreamingOps {
     // no files yet — the watch-an-empty-feed startup file streams exist
     // for — falls back to the canonical nanos contract instead of
     // failing the inference read.
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").isEmpty)
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.ops.Events.requireNanosAsLong(spark)
     val nanosContract = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.LongType),

@@ -62,7 +62,8 @@ class AnnDeleteSpec extends SparkSpec {
       "on the surviving corpus; old generation swept from disk") {
     withFreshCache {
       assert(Similarity.annIvfTopK(spark, Sf0001).count() > 0) // warm base
-      val baseFp = IvfIndex.fingerprint(spark, Sf0001)
+      val baseFp = graft.model.BuildCache.fingerprint(spark, Sf0001,
+        "embeddings.parquet")
       val led = IvfIndex.defaultLedger(spark, Sf0001)
       IvfIndex.deleteVectors(spark, led, victimIds)
       IvfIndex.compactIndex(spark, Sf0001)
@@ -87,7 +88,7 @@ class AnnDeleteSpec extends SparkSpec {
         Similarity.annPqAdc(spark, freshDir).collect().map(_.toSeq).toSet)
       // physical sweep: no cached table still keyed by the pre-delete
       // corpus (those carried deleted rows at rest)
-      val leftovers = new java.io.File(s"${IvfIndex.cacheRoot(spark)}/ann")
+      val leftovers = new java.io.File(s"${graft.model.BuildCache.AnnIndex(spark)}/ann")
         .listFiles().map(_.getName)
         .filter(n => n.endsWith(s"_$baseFp") && !n.startsWith("del_"))
       assert(leftovers.isEmpty,

@@ -34,7 +34,7 @@ class AnnIdentitySpec extends SparkSpec {
       "(the 'deliberate recipe change with no version bump')") {
     val base = emptyOf("vec_id BIGINT, vec ARRAY<DOUBLE>, nrm DOUBLE")
     val cents = emptyOf("centroid_id BIGINT, c_vec ARRAY<DOUBLE>, c_nrm DOUBLE")
-    def h(df: DataFrame) = graft.model.PlanIdentity.planHash(Seq(df))
+    def h(df: DataFrame) = graft.model.BuildCache.planHash(Seq(df))
     // Lloyd step: e.g. a changed grid constant or tie-break reaches the plan
     assert(h(Similarity.lloydMeanUpdate(base.filter(col("nrm") > -1), cents))
       != h(Similarity.lloydMeanUpdate(base, cents)))

@@ -57,4 +57,49 @@ class ConfigKeysSpec extends SparkSpec {
     assert(hits.isEmpty, "hand-placed pin handling outside Stage (own the " +
       s"pin with Stage.scoped instead): ${hits.mkString("; ")}")
   }
+
+  private def rel(p: Path): String =
+    Paths.get("src/main/scala/graft").relativize(p).toString
+
+  test("cache roots, staging paths and commits live only in the cache " +
+      "module; graft.quality never reaches into graft.ops") {
+    val cacheModule = "model/BuildCache.scala"
+    // the conf -> system property -> default root pattern, a root key
+    // literal, the commit primitive and the staging path conventions
+    val rootPattern = """(?s)conf\.getOption\([^\n]*(?:\n[^\n]*){0,2}?sys\.props""".r
+    val rootKey = """"spark\.graft\.[a-z.]*\.root"""".r
+    val banned = Seq("renameIfAbsent", ".build_", ".staging/", "\".staging\"")
+    val hits = mainSources.flatMap { case (p, src) =>
+      if (rel(p) == cacheModule) Nil
+      else banned.filter(src.contains).map(b => s"${rel(p)}: $b") ++
+        rootPattern.findFirstIn(src).map(_ => s"${rel(p)}: conf/property root") ++
+        rootKey.findFirstIn(src).map(k => s"${rel(p)}: $k")
+    }
+    assert(hits.isEmpty, "cache policy outside graft.model.BuildCache: " +
+      hits.mkString("; "))
+    val inverted = mainSources.collect {
+      case (p, src) if rel(p).startsWith("quality/") &&
+          """(?m)^\s*import graft\.ops\b""".r.findFirstIn(src).isDefined =>
+        rel(p)
+    }
+    assert(inverted.isEmpty, s"graft.quality imports graft.ops: $inverted")
+  }
+
+  test("spark.conf.set appears only in Bench, Probe and the two " +
+      "save-and-restore sites") {
+    val allowed = Set("pipeline/Sinks.scala:overwritePartitions",
+      "streaming/StreamingOps.scala:withStatePartitions")
+    val def_ = """def\s+(\w+)""".r
+    val sites = mainSources.flatMap { case (p, src) =>
+      if (Set("Bench.scala", "Probe.scala")(rel(p))) Nil
+      else """spark\.conf\.set\(""".r.findAllMatchIn(src).map { m =>
+        // the enclosing definition: the last `def` before the call
+        val enclosing = def_.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        s"${rel(p)}:$enclosing"
+      }
+    }.toSet
+    assert(sites == allowed, "session conf written outside the allowed " +
+      s"sites: ${(sites -- allowed).toSeq.sorted}")
+  }
 }

@@ -152,7 +152,7 @@ class IncrementalDedupSpec extends SparkSpec {
         "the DAG-landed pair table equals the from-scratch operator")
       // the fold runs as a DAG node too: a pending delete is applied and
       // the receipt reports a clean store
-      IncrementalDedup.delete(spark, IncrementalDedup.storeRoot(spark),
+      IncrementalDedup.delete(spark, graft.model.BuildCache.DedupStore(spark),
         TextOps.documents(spark, Sf0001).limit(1).select("doc_id"))
       graft.pipeline.Registry.run(spark, Sf0001, sink,
         all = Seq(IncrementalDedup.ingestRegistryModel,

@@ -112,7 +112,7 @@ class IvfIndexSpec extends SparkSpec {
         "warm rerank serves codes at rest — zero encode passes")
       // the on-disk layout IS the candidate index: one directory per IVF
       // list, so a probe set is an nprobe-directory read
-      val annDir = new java.io.File(s"${IvfIndex.cacheRoot(spark)}/ann")
+      val annDir = new java.io.File(s"${graft.model.BuildCache.AnnIndex(spark)}/ann")
       val codesDir = annDir.listFiles()
         .find(_.getName.startsWith("pq_codes_"))
         .getOrElse(fail("code table was not materialized"))
@@ -157,14 +157,15 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("fingerprint is content-addressed: distinct datasets never share an index") {
-    assert(IvfIndex.fingerprint(spark, Sf0001) !=
-      IvfIndex.fingerprint(spark, "/root/testdata/sf0.01"))
+    def fp(dir: String) =
+      graft.model.BuildCache.fingerprint(spark, dir, "embeddings.parquet")
+    assert(fp(Sf0001) != fp("/root/testdata/sf0.01"))
   }
 
   test("inverted lists: one directory per centroid, probes prune via DPP") {
     withFreshCache {
       assert(Similarity.annIvfTopK(spark, Sf0001).count() > 0)
-      val annDir = new java.io.File(s"${IvfIndex.cacheRoot(spark)}/ann")
+      val annDir = new java.io.File(s"${graft.model.BuildCache.AnnIndex(spark)}/ann")
       val listsDir = annDir.listFiles()
         .find(_.getName.startsWith("ivf_lists_"))
         .getOrElse(fail("lists table was not materialized"))
@@ -183,7 +184,7 @@ class IvfIndexSpec extends SparkSpec {
   test("LSH signatures served from the index; prefix directories prune via DPP") {
     withFreshCache {
       assert(Similarity.annLshTopK(spark, Sf0001).count() > 0)
-      val annDir = new java.io.File(s"${IvfIndex.cacheRoot(spark)}/ann")
+      val annDir = new java.io.File(s"${graft.model.BuildCache.AnnIndex(spark)}/ann")
       val sigs = annDir.listFiles().find(_.getName.startsWith("lsh_sigs_"))
         .getOrElse(fail("signature table was not materialized"))
       assert(sigs.listFiles().exists(_.getName.startsWith("bucket_prefix=p")),
@@ -224,36 +225,5 @@ class IvfIndexSpec extends SparkSpec {
     assert(idx.columns.toSeq == Seq("centroid_id", "c_vec", "c_nrm"))
     // sf0.001 has 500 vectors -> k = ivfK(500) = 16 centroids
     assert(idx.count() == Similarity.ivfK(500L))
-  }
-
-  test("a lost cold-build race never nests the loser inside the winning index") {
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_race").toString
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    def mkTable(name: String, file: String): org.apache.hadoop.fs.Path = {
-      val d = new org.apache.hadoop.fs.Path(s"$root/$name")
-      fs.mkdirs(d)
-      val out = fs.create(new org.apache.hadoop.fs.Path(d, file))
-      out.write(Array.fill[Byte](16)(1)); out.close()
-      d
-    }
-    // winner already in place (non-empty directory): on RawLocalFileSystem
-    // a bare fs.rename here degrades to FileUtil.copy, which would nest
-    // the loser INSIDE the winner and report success — exactly the
-    // corruption renameIfAbsent exists to prevent
-    val dst = mkTable("idx", "winner.parquet")
-    val src = mkTable("idx_bdeadbeef", "loser.parquet")
-    assert(!IvfIndex.renameIfAbsent(fs, src, dst), "existing dst = lost race")
-    assert(!fs.exists(src), "the losing staging table is dropped")
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dst, "winner.parquet")),
-      "the winning index is untouched")
-    assert(fs.listStatus(dst).length == 1,
-      "nothing nested inside the winning index directory")
-    // clean-path promotion still renames into place
-    val src2 = mkTable("idx2_b01234567", "data.parquet")
-    val dst2 = new org.apache.hadoop.fs.Path(s"$root/idx2")
-    assert(IvfIndex.renameIfAbsent(fs, src2, dst2))
-    assert(fs.exists(new org.apache.hadoop.fs.Path(dst2, "data.parquet")))
-    assert(!fs.exists(src2))
   }
 }

@@ -100,7 +100,8 @@ class MaintenanceSpec extends SparkSpec {
       "real tables are never touched")
   }
 
-  test("vacuumAnnIndexCache drops superseded fingerprints, keeps live ones") {
+  test("vacuumCache drops superseded ANN tables and aged staging " +
+      "leftovers, keeps live ones") {
     val root = java.nio.file.Files.createTempDirectory("graft_annvac").toString
     val live = "aaaa1111"
     val mk = (n: String) => {
@@ -108,19 +109,21 @@ class MaintenanceSpec extends SparkSpec {
     }
     val keep = mk(s"ivf_a2_$live")
     val stale = mk("ivf_a2_dead0000"); stale.setLastModified(1000L)
-    val lost = mk(s"ivf_a2_${live}_b12ab34cd"); lost.setLastModified(1000L)
+    val lost = mk(s".staging/b12ab34cd_$live"); lost.setLastModified(1000L)
+    val inFlight = mk(".staging/c0ffee12")
     val recent = mk("ivf_a2_new0000")
     val now = recent.lastModified()
-    val deleted = Maintenance.vacuumAnnIndexCache(spark, root, Set(live),
+    val deleted = Maintenance.vacuumCache(spark, s"$root/ann", Set(live),
       retentionMs = 3600_000L, nowMs = now).toSet
-    assert(deleted == Set("ivf_a2_dead0000", s"ivf_a2_${live}_b12ab34cd"),
-      "aged non-live tables and staged leftovers go; note the UUID-staged " +
-        "dir is swept even though its name CONTAINS the live fingerprint")
+    assert(deleted == Set("ivf_a2_dead0000", s".staging/b12ab34cd_$live"),
+      "aged non-live tables and staged leftovers go; note the staged " +
+        "leftover is swept even though its name CONTAINS the live fingerprint")
     assert(keep.exists(), "the live-fingerprint index survives at any age")
     assert(recent.exists(), "a non-live table inside retention survives")
+    assert(inFlight.exists(), "an in-flight build inside retention survives")
   }
 
-  test("vacuumFingerprintCache sweeps superseded trios/stores and staging " +
+  test("vacuumCache sweeps superseded trios/stores and staging " +
       "leftovers, keeps live fingerprints and fresh entries") {
     val root = java.nio.file.Files.createTempDirectory("graft_fpvac").toString
     val live = "bbbb2222cccc3333"
@@ -131,12 +134,12 @@ class MaintenanceSpec extends SparkSpec {
     keep.setLastModified(1000L) // live fingerprint survives at ANY age
     val stale = mk("trio_v1_dead00000000000000000000000000000000")
     stale.setLastModified(1000L)
-    val lostRace = mk(".build_a1b2c3d4e5f6"); lostRace.setLastModified(1000L)
+    val lostRace = mk(".staging/a1b2c3d4e5f6"); lostRace.setLastModified(1000L)
     val recent = mk("trio_v1_new000000000000000000000000000000000")
     val now = recent.lastModified()
-    val deleted = Maintenance.vacuumFingerprintCache(spark, root, Set(live),
+    val deleted = Maintenance.vacuumCache(spark, root, Set(live),
       retentionMs = 3600_000L, nowMs = now).toSet
-    assert(deleted == Set(stale.getName, lostRace.getName))
+    assert(deleted == Set(stale.getName, ".staging/a1b2c3d4e5f6"))
     assert(keep.exists() && recent.exists())
   }
 
@@ -161,7 +164,7 @@ class MaintenanceSpec extends SparkSpec {
         "the bucketed trio must be catalog-registered")
       // vacuum EVERYTHING under this root (no live fingerprints, zero
       // retention) — the registration must not outlive the files
-      Maintenance.vacuumFingerprintCache(spark, root, Set.empty,
+      Maintenance.vacuumCache(spark, root, Set.empty,
         retentionMs = 0L, nowMs = System.currentTimeMillis() + 10_000L)
       assert(orphans().isEmpty,
         "no graft_dq_trio_* registration may dangle after a vacuum")

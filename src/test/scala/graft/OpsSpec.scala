@@ -697,15 +697,16 @@ class OpsSpec extends SparkSpec {
   }
 
   test("bpe train memo: content-fingerprint keyed — corpus change invalidates") {
-    import graft.ops.{Bpe, IvfIndex}
+    import graft.ops.Bpe
     val tmp = java.nio.file.Files.createTempDirectory("bpe_memo").toString
     val dst = java.nio.file.Paths.get(tmp, "documents.parquet")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(Sf0001, "documents.parquet"), dst)
     // the memo key is (session, fingerprint, numMerges): a stable
     // fingerprint over an unchanged corpus IS the cache-hit guarantee
-    val fpA = IvfIndex.fingerprint(spark, tmp, "documents.parquet")
-    assert(IvfIndex.fingerprint(spark, tmp, "documents.parquet") == fpA,
+    def fp() = graft.model.BuildCache.fingerprint(spark, tmp, "documents.parquet")
+    val fpA = fp()
+    assert(fp() == fpA,
       "unchanged corpus must fingerprint stably (memo hit)")
     val first = Bpe.merges(spark, tmp, numMerges = 4)
       .collect().map(_.toSeq).toSeq
@@ -716,7 +717,7 @@ class OpsSpec extends SparkSpec {
       java.nio.file.Paths.get(Sf0001.replace("0.001", "0.01"),
         "documents.parquet"),
       dst, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    assert(IvfIndex.fingerprint(spark, tmp, "documents.parquet") != fpA,
+    assert(fp() != fpA,
       "content change must change the fingerprint (memo miss)")
     val retrained = Bpe.merges(spark, tmp, numMerges = 4)
       .collect().map(_.toSeq).toSeq

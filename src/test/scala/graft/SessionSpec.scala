@@ -30,4 +30,20 @@ class SessionSpec extends SparkSpec {
     }
     assert(spark.sparkContext.master == "local[4]")
   }
+
+  test("events reads require nanosAsLong, naming the key, and never " +
+      "write the caller's session conf") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val shared = spark.conf.getAll
+    val s = spark.newSession()
+    s.conf.set(key, "false")
+    val batch = intercept[IllegalArgumentException](
+      graft.ops.Events.events(s, Sf0001))
+    assert(batch.getMessage.contains(key))
+    val stream = intercept[IllegalArgumentException](
+      graft.streaming.StreamingOps.readEventsStream(s, Sf0001, Some("events*")))
+    assert(stream.getMessage.contains(key))
+    assert(s.conf.get(key) == "false", "the caller's setting is left alone")
+    assert(spark.conf.getAll == shared, "the shared session is untouched")
+  }
 }

@@ -47,17 +47,17 @@ class SilverStageSpec extends SparkSpec {
       graft.bronze.Bronze.orders(spark, Sf0001), sc)
     val sp = graft.silver.Silver.paymentsFrom(
       graft.bronze.Bronze.payments(spark, Sf0001), so)
-    val real = graft.model.PlanIdentity.planHash(Seq(sc, so, sp))
+    val real = graft.model.BuildCache.planHash(Seq(sc, so, sp))
     assert(SilverStage.trioRoot(spark, Sf0001).contains(s"r$real"),
       "the trio root must embed the hash of the ACTUAL composed silver " +
         "plans — that derivation is what makes any recipe edit move the key")
-    assert(graft.model.PlanIdentity.planHash(Seq(sc, so, sp)) == real,
+    assert(graft.model.BuildCache.planHash(Seq(sc, so, sp)) == real,
       "plan identity must be deterministic across computations")
     // the 'deliberate one-line silver change with no version bump': one
     // added expression must move the hash, so the key misses and the
     // trio rebuilds — never serves rows built by the old recipe
     val edited = sp.filter(col("payment_amount") > -1)
-    assert(graft.model.PlanIdentity.planHash(Seq(sc, so, edited)) != real,
+    assert(graft.model.BuildCache.planHash(Seq(sc, so, edited)) != real,
       "a one-expression recipe change must change the cache key")
   }
 
